@@ -602,7 +602,13 @@ def test_lsh_index_topk_directed_probing(spark, tmp_path):
     path = str(tmp_path / "topkdir")
     shutil.rmtree(path, ignore_errors=True)
     SIM.write_lsh_index(emb, path)
-    queries = emb.filter(F.col("vec_id") < 6)
+    dim = len(emb.first()["embedding"])
+    # a NULL vector and a NULL element have no defined cosine: dropped
+    # like zero-norm queries on both probe paths, never a crash
+    no_cosine = spark.createDataFrame(
+        [(9998, [None] + [1.0] * (dim - 1), 0), (9999, None, 0)], emb.schema
+    )
+    queries = emb.filter(F.col("vec_id") < 6).unionByName(no_cosine)
 
     full = {
         (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
@@ -624,6 +630,7 @@ def test_lsh_index_topk_directed_probing(spark, tmp_path):
         if key in full:
             assert v == full[key], key
     assert {q for q, _ in directed} == {q for q, _ in full}
+    assert not {9998, 9999} & {q for q, _ in full}
 
 
 def test_staged_status_exact_join_dpp_prunes_partitioned_store(spark, tmp_path):

@@ -1254,3 +1254,29 @@ def test_dup_occurrences_matches_join_form(spark):
                       .select("doc_id", "s", "span_hash").collect()))
     got = sorted((d, s, h) for (d, s, h) in got)
     assert got == want and len(got) == 5
+
+
+def test_dup_occurrences_null_id_is_one_doc(spark):
+    """A NULL doc id counts as ONE document toward a span's df, as in
+    the distinct-aggregate form: a span repeated inside one NULL-id
+    doc has df=1, and a span shared by a NULL-id doc and another doc
+    has df=2."""
+    from pyspark.sql import functions as F
+
+    rows = [(None, 0, 5), (None, 1, 5), (None, 2, 6), (7, 3, 6), (8, 4, 9)]
+    occ = spark.createDataFrame(rows, "doc_id long, s long, span_hash long")
+    got = sorted(
+        map(tuple, DD._dup_occurrences(occ, "doc_id", 2).collect()),
+        key=lambda r: r[1],
+    )
+    dup_hashes = (
+        occ.select("doc_id", "span_hash").distinct()
+        .groupBy("span_hash").agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") >= 2).select("span_hash")
+    )
+    want = sorted(
+        map(tuple, occ.join(dup_hashes, "span_hash")
+            .select("doc_id", "s", "span_hash").collect()),
+        key=lambda r: r[1],
+    )
+    assert got == want == [(None, 2, 6), (7, 3, 6)]

@@ -8,9 +8,11 @@ the rest of the grid. These tests sweep it:
   docstring): query-side-only replication at radius 2R yields exactly
   the candidate set of both-sides replication at radius R — a pair
   meets iff Hamming(bucket_a, bucket_b) ≤ 2R. Checked engine-vs-
-  engine for n_planes ∈ {8, 16, 24} × R ∈ {1, 2, 3}, plus
-  reported-pairs ⊆ exact-pairs with agreeing cosines (an LSH path
-  may MISS pairs — never invent or mis-score one).
+  engine for n_planes ∈ {8, 16, 24} × R ∈ {1, 2, 3}; on the same
+  grid, independently of the engine's bucketing, the in-session pairs
+  equal the exact pairs whose oracle-computed codes differ in ≤ 2R
+  bits; plus reported-pairs ⊆ exact-pairs with agreeing cosines (an
+  LSH path may MISS pairs — never invent or mis-score one).
 - MinHash band math: for (k, bands) grids, the persisted-store
   candidate set and est_jaccard must equal a pure-Python
   re-derivation of the band scheme from the signatures, and the
@@ -75,6 +77,72 @@ def test_lsh_query_side_2r_equals_both_sides_r(spark, tmp_path, n_planes, radius
         f"radius-parity broken at n_planes={n_planes} R={radius}: "
         f"only-index={sorted(set(got) - set(want))[:5]} "
         f"only-session={sorted(set(want) - set(got))[:5]}"
+    )
+    for key in got:
+        assert abs(got[key] - want[key]) < 1e-4, key
+
+
+@pytest.fixture(scope="module")
+def exact_pairs_and_vectors(spark):
+    emb = load_table(spark, SF, "embeddings")
+    exact = {
+        (r["i"], r["j"]): r["cosine_sim"]
+        for r in SIM.near_dup_pairs(emb, threshold=0.45, blocking="exact").collect()
+    }
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    return emb, exact, vecs
+
+
+def _oracle_codes(vecs, n_planes):
+    """Bucket codes by the DuckDB oracle's recipe: a sequential fold
+    over per-element md5 plane weights, sign bit per plane."""
+    dim = len(next(iter(vecs.values())))
+    w = [
+        [SIM._plane_weight(p, i) for i in range(1, dim + 1)]
+        for p in range(n_planes)
+    ]
+    codes = {}
+    for vid, v in vecs.items():
+        code = 0
+        for p in range(n_planes):
+            acc = 0.0
+            for x, wi in zip(v, w[p]):
+                acc += x * wi
+            if acc > 0:
+                code |= 1 << p
+        codes[vid] = code
+    return codes
+
+
+@pytest.mark.parametrize("n_planes", [8, 16, 24])
+@pytest.mark.parametrize("radius", [1, 2, 3])
+def test_lsh_pairs_equal_exact_within_2r_hamming(
+    spark, exact_pairs_and_vectors, n_planes, radius
+):
+    """Independent of every LSH code path: blocking="lsh" at radius R
+    returns exactly the exact-join pairs whose bucket codes differ in
+    at most 2R bits, with the exact join's cosines."""
+    emb, exact, vecs = exact_pairs_and_vectors
+    codes = _oracle_codes(vecs, n_planes)
+    want = {
+        (i, j): c
+        for (i, j), c in exact.items()
+        if (codes[i] ^ codes[j]).bit_count() <= 2 * radius
+    }
+    got = {
+        (r["i"], r["j"]): r["cosine_sim"]
+        for r in SIM.near_dup_pairs(
+            emb,
+            threshold=0.45,
+            blocking="lsh",
+            n_planes=n_planes,
+            emit_radius=radius,
+        ).collect()
+    }
+    assert set(got) == set(want), (
+        f"n_planes={n_planes} R={radius}: "
+        f"only-lsh={sorted(set(got) - set(want))[:5]} "
+        f"only-exact={sorted(set(want) - set(got))[:5]}"
     )
     for key in got:
         assert abs(got[key] - want[key]) < 1e-4, key

@@ -1231,17 +1231,18 @@ def _dup_occurrences(
     document's first row, and the marker's partition-wide sum is the
     hash's distinct-document count. Equal ids are adjacent after the
     sort, so intra-document repeats contribute one marker (df counts
-    documents) while every occurrence row is kept."""
+    documents) while every occurrence row is kept. The marker is
+    NULL-safe: a NULL id counts as one document, like the distinct
+    it replaces — the partition's first row is always new, and a row
+    is new after it only when its id differs NULL-safely."""
     from pyspark.sql import Window as W
 
     wp = W.partitionBy("span_hash")
     wo = wp.orderBy(id_col)
-    prev = F.lag(id_col).over(wo)
+    first = F.row_number().over(wo) == 1
+    same = F.lag(id_col).over(wo).eqNullSafe(F.col(id_col))
     return (
-        occ.withColumn(
-            "_new",
-            F.when(prev.isNull() | (prev != F.col(id_col)), 1).otherwise(0),
-        )
+        occ.withColumn("_new", F.when(first | ~same, 1).otherwise(0))
         .withColumn("_df", F.sum("_new").over(wp))
         .filter(F.col("_df") >= min_df)
         .drop("_new", "_df")

@@ -16,6 +16,8 @@ All arithmetic in float64 with explicit rounding so the DuckDB oracle
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -139,27 +141,41 @@ def near_dup_pairs(
     - ``"exact"`` — every chunk pair. Exact join semantics (this is
       what the SQL oracle checks), but O(n²) work: the right answer
       up to ~10⁶ vectors, not the 100 TB path.
-    - ``"lsh"`` — the scale path: each vector is emitted into every
-      LSH bucket within Hamming ``emit_radius`` of its own, and only
-      same-bucket chunks meet, so two vectors ever meet iff their
-      bucket codes differ in ≤ 2·emit_radius bits. This is an
-      *approximate* join — reported pairs are always true (cosine is
-      verified exactly), but a pair whose buckets differ in more bits
-      is never seen. Measured on the synthetic fixtures at the query
-      threshold (0.45): recall 0.88 at sf0.1, 0.71 at sf0.001 —
-      the classic ANN trade; work drops from all n²/2 pairs to the
-      ~C(8,≤2)=37-replica bucket join. True near-dup thresholds
-      (cos ≥ 0.9 ⇒ small angles) collide on far more blocks.
+    - ``"lsh"`` — the scale path: two vectors meet iff their LSH
+      bucket codes differ in ≤ 2·``emit_radius`` bits (what emitting
+      each vector into every bucket within Hamming ``emit_radius`` of
+      its own would give). It runs the persisted-index serve path
+      (:func:`_lsh_scored_pairs`) with the corpus as both batch and
+      store, probing at radius 2·``emit_radius`` from one side only:
+      probe rows that hit no occupied bucket are dropped before any
+      vector is attached, so work tracks candidates, not the
+      C(n_planes, ≤2R) probe count. ``block_size`` is unused. This is
+      an *approximate* join — reported pairs are always true (cosine
+      is verified exactly), but a pair whose buckets differ in more
+      bits is never seen. Measured on the synthetic fixtures at the
+      query threshold (0.45): recall 0.88 at sf0.1, 0.71 at sf0.001 —
+      the classic ANN trade. True near-dup thresholds (cos ≥ 0.9 ⇒
+      small angles) collide on far more blocks. Cosines are rounded
+      to 4 places, like the exact path.
     """
     import pandas as pd
 
+    if blocking == "lsh":
+        payload, probes = _lsh_probes(
+            embeddings, id_col, vec_col, n_planes, 2 * emit_radius, None
+        )
+        store = _lsh_index_rows(embeddings, id_col, vec_col, n_planes)
+        # both directions of a pair are scored; keep one
+        return (
+            _lsh_scored_pairs(probes, payload, store, threshold, digits=4)
+            .filter(F.col("new_id") < F.col("old_id"))
+            .select(
+                F.col("new_id").alias("i"), F.col("old_id").alias("j"), "cosine_sim"
+            )
+        )
     base = embeddings.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
     ).withColumn("chunk", F.floor(F.col("id") / F.lit(block_size)).cast("int"))
-    if blocking == "lsh":
-        return _lsh_near_dup_pairs(
-            base, embeddings, threshold, vec_col, n_planes, emit_radius
-        )
     base = base.withColumn("bkt", F.lit(0))
     blocks = base.groupBy("bkt", "chunk").agg(
         F.collect_list(F.struct(F.col("id"), F.col("v"))).alias("items")
@@ -215,83 +231,6 @@ def near_dup_pairs(
     )
 
 
-def _lsh_near_dup_pairs(
-    base: DataFrame,
-    embeddings: DataFrame,
-    threshold: float,
-    vec_col: str,
-    n_planes: int,
-    emit_radius: int,
-) -> DataFrame:
-    """LSH-blocked pair generation: one numpy pass assigns buckets and
-    emits each vector into every probe bucket; each bucket group then
-    computes its all-pairs cosine matrix via ``applyInPandas`` — the
-    canonical per-bucket shape, with no struct-list collect and no
-    block-pair join. A pair colliding in several shared buckets is
-    deduped once at the end.
-    """
-    import numpy as np
-    import pandas as pd
-
-    dim = _vec_dim(embeddings, vec_col)
-    wmat = np.array(
-        [[_plane_weight(p, i) for i in range(1, dim + 1)] for p in range(n_planes)]
-    )
-    masks = np.array(probe_masks(n_planes, emit_radius), dtype=np.int64)
-    bitvals = 1 << np.arange(n_planes, dtype=np.int64)
-    thr = float(threshold)
-
-    def emit_probes(batches):
-        # LIGHT (id, bkt) rows only: carrying the vector on every
-        # probe row multiplies the payload by |masks| inside ONE
-        # Python worker (OOM at large radius/planes); the vector is
-        # joined back JVM-side below, where the shuffle can spill.
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf["v"]), dtype=np.float64)
-            b0 = ((m @ wmat.T > 0) * bitvals).sum(axis=1)
-            ids = pdf["id"].to_numpy()
-            reps = len(masks)
-            step = max(1, 2_000_000 // reps)
-            for s in range(0, len(ids), step):
-                chunk = ids[s : s + step]
-                yield pd.DataFrame(
-                    {
-                        "id": chunk.repeat(reps),
-                        "bkt": np.bitwise_xor(
-                            b0[s : s + step].repeat(reps),
-                            np.tile(masks, len(chunk)),
-                        ),
-                    }
-                )
-
-    probed = base.select("id", "v").mapInPandas(
-        emit_probes, schema="id long, bkt long"
-    ).join(base.select("id", "v"), "id")
-
-    def pairs_in_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        m = np.array(list(pdf["v"]), dtype=np.float64)
-        norm = m / np.linalg.norm(m, axis=1, keepdims=True)
-        cos = np.round(norm @ norm.T, 4)
-        ii, jj = np.nonzero(cos >= thr)
-        keep = ids[ii] < ids[jj]
-        return pd.DataFrame(
-            {
-                "i": ids[ii][keep],
-                "j": ids[jj][keep],
-                "cosine_sim": cos[ii, jj][keep],
-            }
-        )
-
-    return (
-        probed.groupBy("bkt")
-        .applyInPandas(pairs_in_bucket, schema="i long, j long, cosine_sim double")
-        .dropDuplicates(["i", "j"])
-    )
-
-
 def _plane_weight(plane: int, dim_index: int) -> float:
     """Deterministic pseudo-random hyperplane component in [-1, 1):
     md5-derived 60-bit value scaled. The formula is pure — identical
@@ -305,33 +244,43 @@ def _plane_weight(plane: int, dim_index: int) -> float:
     return h / float(2**59) - 1.0
 
 
+@lru_cache(maxsize=64)
+def _plane_weights(n_planes: int, dim: int):
+    """The ``n_planes × dim`` matrix of :func:`_plane_weight` values
+    (row p = plane p, column i = dimension i + 1), cached and
+    read-only: every bucketer (Catalyst literals, numpy emission,
+    driver-side fold) reads these doubles. Row p does not depend on
+    ``n_planes``, so a prefix of rows is the smaller matrix."""
+    import numpy as np
+
+    w = np.array(
+        [[_plane_weight(p, i) for i in range(1, dim + 1)] for p in range(n_planes)]
+    )
+    w.setflags(write=False)
+    return w
+
+
 def _py_lsh_bucket(vec, dim: int, n_planes: int) -> int:
     """Driver-side twin of :func:`lsh_bucket` for already-collected
     query vectors — BIT-IDENTICAL to the Catalyst expression: the same
     left-to-right IEEE-double fold (``x * w`` per element, then
-    ``acc + x``) over the same :func:`_plane_weight` values, so the
+    ``acc + x``) over the same :func:`_plane_weights` values, so the
     sign of every projection matches the expression's exactly (Python
     floats ARE IEEE doubles; same ops, same order). Mirrors the
-    expression's NULL semantics: a row whose length differs from
-    ``dim`` sees NULL padding in ``zip_with`` → NULL projection →
-    zero contribution for that plane, and a NULL element poisons the
-    fold the same way. Exists so the serve path can collect plain
+    expression's NULL semantics: a length other than ``dim`` (NULL
+    padding in ``zip_with``) or a NULL element makes every projection
+    NULL, so the bucket is 0. Exists so the serve path can collect plain
     ``(id, qv)`` rows instead of planning an 8×dim-literal bucket
     expression per serve (r15: the expression collect measured
     ~0.7 s/serve at sf0.1 vs ~0.1 s for the plain collect)."""
-    if vec is None:
-        return 0
+    if vec is None or len(vec) != dim or any(x is None for x in vec):
+        return 0  # every projection is NULL
     bucket = 0
-    for p in range(n_planes):
+    for p, w in enumerate(_plane_weights(n_planes, dim).tolist()):
         acc = 0.0
-        n = max(len(vec), dim)
-        for i in range(n):
-            x = vec[i] if i < len(vec) else None
-            if x is None or i >= dim:
-                acc = None
-                break
-            acc = acc + (x * _plane_weight(p, i + 1))
-        if acc is not None and acc > 0:
+        for x, wi in zip(vec, w):
+            acc = acc + (x * wi)
+        if acc > 0:
             bucket += 1 << p
     return bucket
 
@@ -357,10 +306,8 @@ def lsh_bucket(v: Column, dim: int, n_planes: int = N_PLANES) -> Column:
     of n_planes × dim md5 expression evaluations per row.
     """
     bucket = F.lit(0)
-    for p in range(n_planes):
-        weights = F.array(
-            *[F.lit(_plane_weight(p, i)) for i in range(1, dim + 1)]
-        )
+    for p, row in enumerate(_plane_weights(n_planes, dim).tolist()):
+        weights = F.array(*[F.lit(w) for w in row])
         proj = F.aggregate(
             F.zip_with(v, weights, lambda x, w: x * w),
             F.lit(0.0),
@@ -386,6 +333,18 @@ def probe_masks(n_planes: int, radius: int) -> list[int]:
                 m |= 1 << b
             masks.append(m)
     return masks
+
+
+def _rank_probe_bits(pp: int, radius: int):
+    """:func:`probe_masks` over ``pp`` bits read as RANK-position
+    masks for query-directed probing: row k is pattern k's 0/1
+    selector over a query's ``pp`` smallest-|margin| planes (column 0
+    = smallest). ``selector @ plane_bit_values`` resolves the
+    patterns to one query's XOR masks."""
+    import numpy as np
+
+    masks = np.array(probe_masks(pp, radius), dtype=np.int64)
+    return (masks[:, None] >> np.arange(pp)) & 1
 
 
 def lsh_bucketed_topk(
@@ -786,13 +745,14 @@ def label_centroid_stats(
 
 
 # ------------------------------------------------------------------
-# Persisted LSH index: the 100 TB serving shape. The in-session
-# `_lsh_near_dup_pairs` replicates each vector into its probe buckets
-# (covering-radius emission) because everything lives in one job; a
-# PERSISTED index stores each vector ONCE, partitioned by its base
-# bucket, and moves the multi-probe to the QUERY side — probing r
-# buckets is then parquet partition PRUNING (the scan never touches
-# the other 2^n_planes − r directories).
+# Persisted LSH index: the 100 TB serving shape. The index stores each
+# vector ONCE, partitioned by its base bucket, and the multi-probe
+# lives on the QUERY side — probing r buckets is then parquet
+# partition PRUNING (the scan never touches the other 2^n_planes − r
+# directories). One probe-and-score core serves it
+# (`_lsh_probes` + `_lsh_scored_pairs`); the in-session
+# `near_dup_pairs(blocking="lsh")` runs the same core with the corpus
+# as its own store.
 
 
 def auto_n_planes(n_rows: int, target_per_bucket: int = 200) -> int:
@@ -950,14 +910,8 @@ def calibrate_lsh_planes(
         if len(ia) == 0:
             return _floor_fallback()
     dim = X.shape[1]
-    # weights for the LARGEST candidate once; plane p's weights do not
-    # depend on the total plane count, so smaller candidates slice
-    wmat = np.array(
-        [
-            [_plane_weight(p, i) for i in range(1, dim + 1)]
-            for p in range(max_planes)
-        ]
-    )
+    # weights for the LARGEST candidate once; smaller candidates slice
+    wmat = _plane_weights(max_planes, dim)
     margins_all = X @ wmat.T  # n × max_planes
     per_candidate: dict[int, float] = {}
     chosen = None
@@ -1374,6 +1328,121 @@ def _detect_partitioned(path: str, key: str) -> bool:
     return partitioned and k == key
 
 
+def _lsh_probes(
+    batch: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_planes: int,
+    radius: int,
+    probe_planes: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Probe emission for the LSH probe-and-score core. Returns
+    ``(payload, probes)``: ``payload`` is one ``(new_id, qv, qn)`` row
+    per scoreable batch vector (NULL and zero-norm vectors — no
+    defined cosine — are excluded HERE, so emission and payload see
+    the same set); ``probes`` is one LIGHT ``(new_id, bkt)`` row per
+    probed bucket, from one Arrow pass. With ``probe_planes=None``
+    each vector probes every bucket within Hamming ``radius`` of its
+    own; otherwise only flips of its ``probe_planes`` smallest-margin
+    planes (:func:`_rank_probe_bits`)."""
+    import numpy as np
+    import pandas as pd
+
+    wmat = _plane_weights(n_planes, _vec_dim(batch, vec_col))
+    bitvals = 1 << np.arange(n_planes, dtype=np.int64)
+    if probe_planes is None:
+        masks = np.array(probe_masks(n_planes, radius), dtype=np.int64)
+    else:
+        pp = min(probe_planes, n_planes)
+        selector = _rank_probe_bits(pp, radius)  # n_patterns × pp
+    payload = (
+        batch.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("new_id"), as_double(F.col(vec_col)).alias("qv"))
+        .withColumn("qn", _norm(F.col("qv")))
+        .filter(F.col("qn") > 0)
+    )
+
+    def emit_probes(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            m = np.array(list(pdf["qv"]), dtype=np.float64)
+            marg = m @ wmat.T
+            b0 = ((marg > 0) * bitvals).sum(axis=1)
+            ids = pdf["new_id"].to_numpy()
+            if probe_planes is None:
+                row_masks = np.broadcast_to(masks, (len(ids), len(masks)))
+            else:
+                # plane bit values in ascending-|margin| order, N × pp
+                order = np.argsort(np.abs(marg), axis=1)[:, :pp]
+                row_masks = bitvals[order] @ selector.T  # N × n_patterns
+            reps = row_masks.shape[1]
+            # chunk the output: a large Arrow batch × a large mask set
+            # must not materialize one giant frame in the worker
+            step = max(1, 2_000_000 // reps)
+            for s in range(0, len(ids), step):
+                bkts = np.bitwise_xor(
+                    b0[s : s + step, None], row_masks[s : s + step]
+                ).ravel()
+                yield pd.DataFrame(
+                    {"new_id": ids[s : s + step].repeat(reps), "bkt": bkts}
+                )
+
+    probes = payload.select("new_id", "qv").mapInPandas(
+        emit_probes, schema="new_id long, bkt long"
+    )
+    return payload, probes
+
+
+def _lsh_scored_pairs(
+    probes: DataFrame,
+    payload: DataFrame,
+    store: DataFrame,
+    threshold: float,
+    digits: int = 6,
+    with_exact_flag: bool = False,
+) -> DataFrame:
+    """Score probe rows against store rows ``(bkt, id, v, nrm)``:
+    ``(new_id, old_id, cosine_sim)`` pairs with the cosine rounded to
+    ``digits`` places and ≥ ``threshold`` (plus ``is_exact`` when
+    asked), self-pairs dropped. Each pair meets in exactly one probe
+    bucket, but the plain-parquet append contract is at-least-once on
+    retry, so a store MAY hold duplicate id rows: pairs are deduped.
+
+    Only probe rows whose bucket is OCCUPIED in ``store`` get the
+    query vector attached. Probe count explodes with the radius
+    (C(n_planes, ≤r) — 190k masks/vector at 24 planes, r=6) while
+    occupied buckets are bounded by store rows, so the vector-carrying
+    side of the cogroup — and the number of Python scoring calls —
+    tracks CANDIDATES, never probe fan-out. The join strategy for
+    ``payload`` is the caller's (a broadcast hint for a small batch)."""
+    # the cogroup needs one key type on both sides: equal int and long
+    # keys hash to different groups
+    store = store.select(F.col("bkt").cast("long").alias("bkt"), "id", "v", "nrm")
+    live = probes.join(store.select("bkt").distinct(), "bkt", "semi")
+    left = live.join(payload, "new_id").select("bkt", "new_id", "qv", "qn")
+    # a raw cosine half a unit in the last kept place below the
+    # threshold still rounds up to it — prefilter below that
+    scored = _kernel_scored_pairs(
+        left,
+        store,
+        "bkt",
+        threshold - 0.5 * 10.0**-digits,
+    )
+    cols = [
+        F.col("new_id"),
+        F.col("old_id"),
+        F.round(F.col("cosine_raw"), digits).alias("cosine_sim"),
+    ]
+    if with_exact_flag:
+        cols.append(F.col("is_exact"))
+    return (
+        scored.select(*cols)
+        .filter(F.col("cosine_sim") >= threshold)
+        .dropDuplicates(["new_id", "old_id"])
+    )
+
+
 def lsh_index_near_dups(
     spark,
     index_path: str,
@@ -1444,92 +1513,22 @@ def lsh_index_near_dups(
     the data bounds, never the probe count, which the radius
     explodes.) Query-side-only replication at radius R yields the
     same candidate set as both-sides replication at radius R/2 (a
-    pair meets iff Hamming(a,b) ≤ R), so ``emit_radius=2`` here
-    matches the in-session ``near_dup_pairs(blocking='lsh')``
-    candidates.
+    pair meets iff Hamming(a,b) ≤ R); the in-session
+    ``near_dup_pairs(blocking='lsh', emit_radius=R)`` is this same
+    probe-and-score core at radius 2R, with the corpus as its own
+    store.
 
     ``n_planes`` is resolved from the store's ``_meta.json`` when
     present (an "auto"-built index knows its own plane count); the
     argument is the pre-meta-store fallback only.
     """
-    import numpy as np
-    import pandas as pd
-
     n_planes = _store_n_planes(index_path, n_planes)
     probe_planes = _resolve_probe_planes(
         probe_planes, index_path, n_planes, emit_radius
     )
     skip_hot_buckets = _resolve_skip_hot_buckets(skip_hot_buckets, index_path)
-    dim = _vec_dim(new_embeddings, vec_col)
-    wmat = np.array(
-        [[_plane_weight(p, i) for i in range(1, dim + 1)] for p in range(n_planes)]
-    )
-    masks = np.array(probe_masks(n_planes, emit_radius), dtype=np.int64)
-    bitvals = 1 << np.arange(n_planes, dtype=np.int64)
-    if probe_planes is not None:
-        from itertools import combinations
-
-        pp = min(probe_planes, n_planes)
-        # flip patterns over margin-RANK positions (0 = smallest
-        # margin); resolved to actual plane bits per query row below
-        rank_patterns = [
-            list(bits)
-            for r in range(min(emit_radius, pp) + 1)
-            for bits in combinations(range(pp), r)
-        ]
-
-    base = new_embeddings.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("new_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    # zero-norm vectors (no defined cosine) are excluded HERE so both
-    # the probe emission and the payload join see the same set
-    payload = base.withColumn("qn", _norm(F.col("qv"))).filter(F.col("qn") > 0)
-
-    def emit_probes(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf["qv"]), dtype=np.float64)
-            marg = m @ wmat.T
-            b0 = ((marg > 0) * bitvals).sum(axis=1)
-            ids = pdf["new_id"].to_numpy()
-            if probe_planes is None:
-                row_masks = None
-                reps = len(masks)
-            else:
-                # per-row masks from the pp lowest-|margin| planes
-                order = np.argsort(np.abs(marg), axis=1)[:, :pp]
-                pb = bitvals[order]  # N × pp plane bit values
-                row_masks = np.stack(
-                    [
-                        pb[:, pat].sum(axis=1)
-                        if pat
-                        else np.zeros(len(ids), dtype=np.int64)
-                        for pat in rank_patterns
-                    ],
-                    axis=1,
-                )  # N × n_patterns
-                reps = row_masks.shape[1]
-            # chunk the output: a large Arrow batch × a large mask set
-            # must not materialize one giant frame in the worker
-            step = max(1, 2_000_000 // reps)
-            for s in range(0, len(ids), step):
-                chunk = ids[s : s + step]
-                if row_masks is None:
-                    bkts = np.bitwise_xor(
-                        b0[s : s + step].repeat(reps),
-                        np.tile(masks, len(chunk)),
-                    )
-                else:
-                    bkts = np.bitwise_xor(
-                        b0[s : s + step, None], row_masks[s : s + step]
-                    ).ravel()
-                yield pd.DataFrame(
-                    {"new_id": chunk.repeat(reps), "bkt": bkts}
-                )
-
-    probes = payload.select("new_id", "qv").mapInPandas(
-        emit_probes, schema="new_id long, bkt long"
+    payload, probes = _lsh_probes(
+        new_embeddings, id_col, vec_col, n_planes, emit_radius, probe_planes
     )
     if skip_hot_buckets:
         hot = store_sub(spark, index_path, "_hot_buckets")
@@ -1545,11 +1544,6 @@ def lsh_index_near_dups(
     index = _with_nrm(
         apply_tombstones(store_data(spark, index_path), index_path)
     ).withColumn("bkt", F.col("bkt").cast("long"))
-    # each (new, old) pair meets in EXACTLY one probe bucket (the mask
-    # is forced to b_new XOR b_old), so a CLEAN index yields each pair
-    # once — but the plain-parquet append contract is at-least-once on
-    # retry, so a store MAY hold duplicate id rows; dedup the
-    # (threshold-filtered, small) result rather than trusting it
     if scoring == "arrow":
         # the expr path's bkt equi-join gave the partitioned store
         # scan dynamic partition pruning for free (broadcast probes);
@@ -1559,47 +1553,37 @@ def lsh_index_near_dups(
         # PartitionFilters on the directory layout, row-group min/max
         # pruning on the sorted flat layout. A probed set too big to
         # ship as a literal INSET would not have pruned anything
-        # anyway (the batch touches most of the store).
-        probes = probes.localCheckpoint()
-        pb_rows = (
-            probes.select("bkt").distinct().limit(PRUNE_BUCKET_CAP + 1).collect()
-        )
+        # anyway (the batch touches most of the store) — and when ONE
+        # vector's probe set is already that big, the set is not even
+        # collected: its distinct over |batch| × |masks| probe rows
+        # (47.5M at 24 planes, r=6) cost more than the whole serve.
+        from math import comb
+
+        pp = n_planes if probe_planes is None else min(probe_planes, n_planes)
+        per_vector = sum(comb(pp, k) for k in range(min(emit_radius, pp) + 1))
         right = index.select("bkt", "id", "v", "nrm")
-        if len(pb_rows) <= PRUNE_BUCKET_CAP:
-            right = right.filter(
-                F.col("bkt").isin([r["bkt"] for r in pb_rows])
+        if per_vector <= PRUNE_BUCKET_CAP:
+            probes = probes.localCheckpoint()
+            pb_rows = (
+                probes.select("bkt")
+                .distinct()
+                .limit(PRUNE_BUCKET_CAP + 1)
+                .collect()
             )
-        # payload-bounding guard (r14): keep only probe rows whose
-        # bucket actually EXISTS in the (pruned) store before the
-        # query vector is attached. Probe count explodes with the
-        # radius (C(n_planes, ≤r) — 190k masks/vector at 24 planes,
-        # r=6) while occupied buckets are bounded by store rows; a
-        # probe row surviving this semi-join meets ≥1 store row, so
-        # the vector-carrying left side of the cogroup is bounded by
-        # CANDIDATES, never by probe fan-out (the same invariant the
-        # probe emission itself documents). Without it the exhaustive
-        # high-radius corner shuffled dim·8 bytes per PROBE row —
-        # measured as a 38-min sf0.001 fuzz test; with it the same
-        # test runs in seconds. Light (new_id, bkt) rows only; the
-        # occupied set is the INSET-pruned scan's buckets, so AQE
-        # broadcasts it and no extra shuffle appears.
-        live = probes.join(right.select("bkt").distinct(), "bkt", "semi")
-        left = live.join(F.broadcast(payload), "new_id").select(
-            "bkt", "new_id", "qv", "qn"
+            if len(pb_rows) <= PRUNE_BUCKET_CAP:
+                right = right.filter(
+                    F.col("bkt").isin([r["bkt"] for r in pb_rows])
+                )
+        # the batch is driver-small next to the store: broadcast it
+        return _lsh_scored_pairs(
+            probes,
+            F.broadcast(payload),
+            right,
+            threshold,
+            with_exact_flag=with_exact_flag,
         )
-        scored = _kernel_scored_pairs(left, right, "bkt", threshold)
-        cols = [
-            F.col("new_id"),
-            F.col("old_id"),
-            F.round(F.col("cosine_raw"), 6).alias("cosine_sim"),
-        ]
-        if with_exact_flag:
-            cols.append(F.col("is_exact"))
-        return (
-            scored.select(*cols)
-            .filter(F.col("cosine_sim") >= threshold)
-            .dropDuplicates(["new_id", "old_id"])
-        )
+    # pure-Catalyst reference scoring; pairs deduped as in
+    # _lsh_scored_pairs
     cand = (
         index.join(probes, "bkt")
         .filter(F.col("id") != F.col("new_id"))
@@ -1939,9 +1923,15 @@ def append_lsh_index(
 
 def _py_norm(v) -> float:
     """Driver-side replica of ``_norm``'s SEQUENTIAL fold (same
-    addition order → bit-identical double) for collected query rows."""
+    addition order → bit-identical double) for collected query rows.
+    A NULL vector or element makes ``_norm`` NULL; here it yields 0.0,
+    so serve paths drop the row like a zero-norm one."""
+    if v is None:
+        return 0.0
     acc = 0.0
     for x in v:
+        if x is None:
+            return 0.0
         acc += x * x
     return acc ** 0.5
 
@@ -2012,32 +2002,22 @@ def lsh_index_topk(
         masks = probe_masks(n_planes, emit_radius)
         mask_for = lambda r: masks  # noqa: E731 — shared exhaustive set
     else:
-        from itertools import combinations
-
         import numpy as np
 
         pp = min(probe_planes, n_planes)
-        wmat = np.array(
-            [
-                [_plane_weight(p, i) for i in range(1, dim + 1)]
-                for p in range(n_planes)
-            ]
-        )
-        patterns = [
-            bits
-            for r in range(min(emit_radius, pp) + 1)
-            for bits in combinations(range(pp), r)
-        ]
+        wmat = _plane_weights(n_planes, dim)
+        selector = _rank_probe_bits(pp, emit_radius)
 
         def mask_for(r):
             marg = np.abs(wmat @ np.array(r["qv"], dtype=np.float64))
             low = np.argsort(marg)[:pp]
-            return [sum(1 << int(low[i]) for i in pat) for pat in patterns]
+            return (selector @ (1 << low)).tolist()
 
     probe_rows = [
-        (r["query_id"], r["qv"], _py_norm(r["qv"]), qb ^ m)
+        (r["query_id"], r["qv"], qn, qb ^ m)
         for r in q_rows
-        if _py_norm(r["qv"]) > 0  # zero-norm query: no defined cosine
+        for qn in (_py_norm(r["qv"]),)
+        if qn > 0  # NULL or zero-norm query: no defined cosine
         for qb in (_py_lsh_bucket(r["qv"], dim, n_planes),)
         for m in mask_for(r)
     ]
