@@ -370,6 +370,200 @@ def test_compact_store_recovers_mid_swap_crash(spark, tmp_path):
     assert spark.read.parquet(store).count() == before
 
 
+def _appended_minhash_store(spark, tmp_path):
+    """A MinHash store built from a third of the docs and appended
+    twice: band= leaves hold 3 files, fpb= leaves 2-3."""
+    from tiki_data_pipeline_spark.operators import dedup as DD
+
+    docs = load_table(spark, SF, "documents")
+    store = str(tmp_path / "store")
+    DD.write_minhash_index(docs.filter(F.col("doc_id") % 3 == 0), store)
+    for r in (1, 2):
+        DD.append_minhash_index(docs.filter(F.col("doc_id") % 3 == r), store)
+    return store
+
+
+def _store_rows(spark, store):
+    """Row sets of the data tree and the _fingerprints sidecar."""
+    return (
+        {
+            (r["id"], tuple(r["sig"]), r["band_sig"], r["band"])
+            for r in spark.read.parquet(store).collect()
+        },
+        {tuple(r) for r in spark.read.parquet(store + "/_fingerprints").collect()},
+    )
+
+
+def _leaf_files(store):
+    """Parquet file count of every compactable leaf directory."""
+    from pathlib import Path
+
+    out = {}
+    for d in Path(store).iterdir():
+        if not d.is_dir() or d.name == "_decisions":
+            continue
+        subs = [s for s in d.iterdir() if s.is_dir() and "=" in s.name]
+        for leaf in subs or [d]:
+            out[leaf] = len([f for f in leaf.iterdir() if f.suffix == ".parquet"])
+    return out
+
+
+def test_compact_store_sweeps_crashed_tree_staging(spark, tmp_path, monkeypatch):
+    """A crash after a tree's one Spark write and before its per-leaf
+    swaps leaves only the staging tree behind: readers never see it,
+    a fold does not carry it into its staged tree, and the next
+    compact_store sweeps it."""
+    from pathlib import Path
+
+    import pytest
+
+    from tiki_data_pipeline_spark.sources import files as FS
+
+    store = _appended_minhash_store(spark, tmp_path)
+    staging = Path(store) / FS.COMPACT_STAGING
+
+    class Crash(Exception):
+        pass
+
+    def _crash(path, write_staging):
+        raise Crash(path)
+
+    def _crashed_compaction():
+        with monkeypatch.context() as m:
+            m.setattr(FS, "swap_parquet_rewrite", _crash)
+            with pytest.raises(Crash):
+                FS.compact_store(spark, store)
+        assert any(staging.rglob("*.parquet")), "tree write left no staging"
+
+    before = _store_rows(spark, store)
+    _crashed_compaction()
+    assert _store_rows(spark, store) == before
+
+    fps = spark.read.parquet(store + "/_fingerprints")
+    victims = fps.select("id").orderBy("id").limit(3)
+    gone = {r["id"] for r in victims.collect()}
+    FS.delete_from_store(spark, store, victims)
+    FS.fold_tombstones(spark, store)
+    assert not staging.exists(), "fold carried the compaction staging tree"
+    after_fold = tuple(
+        {r for r in rows if r[0] not in gone} for rows in before
+    )
+    assert _store_rows(spark, store) == after_fold
+
+    _crashed_compaction()  # fpb= leaves the fold did not touch: over target
+    FS.compact_store(spark, store)
+    assert not staging.exists()
+    assert _store_rows(spark, store) == after_fold
+    assert all(n == 1 for n in _leaf_files(store).values())
+
+
+def test_compact_store_second_call_rewrites_nothing(spark, tmp_path):
+    """Compaction work is proportional to what needs it: on a store
+    that is already compact no parquet file is rewritten (inode and
+    mtime unchanged) and the count matches the first call. A leaf's
+    '.old' crash leftover is still recovered before the skip
+    decision."""
+    import os
+    import shutil
+    from pathlib import Path
+
+    from tiki_data_pipeline_spark.sources.files import compact_store
+
+    store = _appended_minhash_store(spark, tmp_path)
+
+    def _stats():
+        return {
+            p: (os.stat(p).st_ino, os.stat(p).st_mtime_ns)
+            for p in Path(store).rglob("*.parquet")
+        }
+
+    n = compact_store(spark, store)
+    compacted = _stats()
+    assert compact_store(spark, store) == n
+    assert _stats() == compacted
+
+    shutil.move(store + "/band=1", store + "/band=1.old")
+    assert compact_store(spark, store) == n
+    assert not Path(store + "/band=1.old").exists()
+    assert _stats() == compacted
+
+
+def _lsh_rows(spark, path):
+    """(id, bkt, v) row set of an LSH index's data tree."""
+    return {
+        (r["id"], r["bkt"], tuple(r["v"]))
+        for r in spark.read.parquet(path).select("id", "bkt", "v").collect()
+    }
+
+
+def test_compact_store_keeps_each_leafs_columns(spark, tmp_path):
+    """Appending to a pre-nrm LSH index leaves legacy-only leaves
+    beside leaves written with nrm. Compaction must keep each leaf's
+    own columns: one scan over both kinds would read every file with
+    one schema and add a NULL nrm to the legacy leaves or drop it from
+    the new ones."""
+    import pyarrow.parquet as pq
+
+    from tiki_data_pipeline_spark.sources.files import compact_store
+
+    emb = load_table(spark, SF, "embeddings")
+    full = str(tmp_path / "full")
+    SIM.write_lsh_index(emb, full, partitioned=True)
+    bkt = spark.read.parquet(full).select(F.col("id").alias("vec_id"), "bkt")
+    path = str(tmp_path / "idx")
+    legacy = spark.read.parquet(full).filter(F.col("bkt") % 2 == 0).drop("nrm")
+    for r in (0, 1):
+        legacy.filter(F.col("id") % 2 == r).write.mode("append").partitionBy(
+            "bkt"
+        ).parquet(path)
+    odd = emb.join(bkt.filter(F.col("bkt") % 2 == 1), "vec_id").drop("bkt")
+    for r in (0, 1):
+        SIM.append_lsh_index(odd.filter(F.col("vec_id") % 2 == r), path)
+    before = _lsh_rows(spark, path)
+    over = {
+        int(leaf.name.split("=")[1]) % 2
+        for leaf, n in _leaf_files(path).items()
+        if n > 1
+    }
+    assert over == {0, 1}, "need over-target leaves of both kinds"
+
+    compact_store(spark, path)
+    leaves = _leaf_files(path)
+    assert all(n == 1 for n in leaves.values())
+    for leaf in leaves:
+        (f,) = leaf.glob("*.parquet")
+        has_nrm = "nrm" in pq.read_schema(f).names
+        assert has_nrm == (int(leaf.name.split("=")[1]) % 2 == 1), leaf.name
+    assert _lsh_rows(spark, path) == before
+
+
+def test_compact_store_posix_target_and_empty_leaf(spark, tmp_path):
+    """target_files_per_partition > 1 leaves at most that many files
+    in every leaf with row sets unchanged, and a zero-row leaf keeps
+    exactly one schema-bearing file."""
+    from pathlib import Path
+
+    from tiki_data_pipeline_spark.sources.files import compact_store
+
+    store = _appended_minhash_store(spark, tmp_path)
+    hot = store + "/_hot_bands"
+    empty = spark.read.parquet(hot)
+    assert empty.count() == 0
+    for _ in range(2):
+        empty.limit(0).coalesce(1).write.mode("append").parquet(hot)
+    before = _store_rows(spark, store)
+    assert _leaf_files(store)[Path(hot)] == 3
+    assert max(_leaf_files(store).values()) > 2
+
+    compact_store(spark, store, target_files_per_partition=2)
+    files = _leaf_files(store)
+    assert all(1 <= n <= 2 for n in files.values()), files
+    assert files[Path(hot)] == 1
+    assert spark.read.parquet(hot).schema == empty.schema
+    assert spark.read.parquet(hot).count() == 0
+    assert _store_rows(spark, store) == before
+
+
 def test_lsh_index_near_dups_matches_in_session_blocking(spark, tmp_path):
     """Distributed batch-vs-index near-dup with query-side radius 2R
     must produce exactly the cross-split pairs the in-session

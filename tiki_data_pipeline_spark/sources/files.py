@@ -264,8 +264,8 @@ def swap_parquet_rewrite(path: str, write_staging) -> None:
     rewrite into place, delete the old copy. A valid dataset exists at
     ``path`` at all times except during one rename, and a crash
     mid-swap leaves both copies on disk (never zero). Shared by
-    :func:`compact_parquet` and the streaming decisions-log layout
-    migration (``streaming.jobs``)."""
+    :func:`compact_parquet`, :func:`compact_store`'s per-leaf swaps and
+    the streaming decisions-log layout migration (``streaming.jobs``)."""
     import os
     import shutil
 
@@ -475,6 +475,112 @@ def check_store_meta(path: str, expected: dict) -> None:
         )
 
 
+# Crash leftovers a swap can leave beside a live directory: '.old' is
+# the live copy between the two renames, '.staging' a half-built
+# rewrite ('.compacting' is the pre-r8 staging suffix, still
+# recognized). compact_store stages each call's tree writes under one
+# dot-prefixed directory at the store root: Spark's file listing skips
+# it, and the '_'-prefixed sidecar loops never carry it.
+_SWAP_SUFFIXES = (".old", ".staging", ".compacting")
+COMPACT_STAGING = ".compact.staging"
+
+
+def _live_subdirs(dirpath: str) -> set[str]:
+    """Names of ``dirpath``'s live subdirectories, with swap crash
+    leftovers resolved to the live name they belong to ('band=0.old'
+    → 'band=0'): a leftover is mid-flight residue, NOT a partition,
+    and treating it as one would skip the recovery of the missing
+    live dir and leave bogus partition values in the tree. The
+    compaction staging tree belongs to no live directory and is left
+    out."""
+    import os
+
+    names: set[str] = set()
+    if not os.path.isdir(dirpath):
+        return names
+    for e in os.scandir(dirpath):
+        if not e.is_dir() or e.name == COMPACT_STAGING:
+            continue
+        name = e.name
+        for suffix in _SWAP_SUFFIXES:
+            if name.endswith(suffix):
+                name = name[: -len(suffix)]
+                break
+        names.add(name)
+    return names
+
+
+def _settled_parquet_files(leaf: str) -> list[str]:
+    """Resolve one directory's crash residue — recover an interrupted
+    swap from its ``.old`` copy, drop stale staging siblings (never
+    live data: the swap moves the live dir aside only after staging
+    is complete) — and list the parquet files it then holds."""
+    import os
+    import shutil
+
+    recover_interrupted_swap(leaf)
+    for suffix in _SWAP_SUFFIXES[1:]:  # the staging suffixes
+        shutil.rmtree(leaf + suffix, ignore_errors=True)
+    if not os.path.isdir(leaf):
+        return []
+    return sorted(f for f in os.listdir(leaf) if f.endswith(".parquet"))
+
+
+def _compact_leaves(
+    spark: SparkSession,
+    leaves: dict[str, list[str]],
+    staging: str,
+    target: int,
+) -> None:
+    """Rewrite ``leaves`` (leaf dir → its parquet files, all of one
+    tree and one file schema) to at most ``target`` files each with
+    ONE Spark write, then swap each leaf in with the per-leaf
+    :func:`swap_parquet_rewrite` protocol, so crash safety stays per
+    leaf. Rows are tagged with their leaf by FILE path, never by
+    re-rendered partition values (``cid=033`` or a numeric-looking run
+    hash do not round-trip — see :func:`_fold_decisions_sidecar`); the
+    leaves are read as roots, so no partition column is parsed and the
+    rows keep the files' own schema."""
+    import os
+    import shutil
+    from urllib.parse import unquote, urlparse
+
+    dirs = list(leaves)
+    idx = {os.path.abspath(d): i for i, d in enumerate(dirs)}
+    df = spark.read.parquet(*dirs)
+    cols = df.columns
+    # leaf index per file dir, keyed as Spark renders the file paths
+    uri_leaf = {
+        f.rsplit("/", 1)[0]: idx[os.path.dirname(unquote(urlparse(f).path))]
+        for f in df.inputFiles()
+    }
+    tag = F.element_at(
+        F.create_map(*[F.lit(x) for kv in uri_leaf.items() for x in kv]),
+        F.regexp_extract(F.input_file_name(), r"^(.*)/[^/]*$", 1),
+    )
+    # an untagged row would land in no leaf: fail the write instead
+    tag = F.coalesce(tag, F.raise_error(F.lit("compact_store: untagged row")))
+    # one task per leaf (target 1), or per (leaf, row-hash salt): each
+    # task writes one file per leaf it holds → ≤ target files per leaf
+    keys = [F.col("_leaf")]
+    if target > 1:
+        keys.append(F.pmod(F.xxhash64(*cols), F.lit(target)))
+    (
+        df.select(*cols, tag.alias("_leaf"))
+        .repartition(*keys)
+        .write.partitionBy("_leaf")
+        .parquet(staging)
+    )
+    for i, (leaf, files) in enumerate(leaves.items()):
+        staged = os.path.join(staging, f"_leaf={i}")
+        if not os.path.isdir(staged):
+            # zero-row leaf: partitionBy wrote nothing for it, so keep
+            # one of its (row-less) files as the schema-bearing file
+            os.makedirs(staged)
+            shutil.copy2(os.path.join(leaf, files[0]), staged)
+        swap_parquet_rewrite(leaf, lambda s, src=staged: os.rename(src, s))
+
+
 @_fenced("compact_store")
 def compact_store(
     spark: SparkSession,
@@ -483,22 +589,42 @@ def compact_store(
     fold_deletes: bool = True,
 ) -> int:
     """Maintenance compaction for an incrementally-appended store
-    (MinHash/LSH index trees): every partition directory (``band=…``,
-    ``bkt=…``) and every underscore sidecar (``_fingerprints``,
-    ``_decisions``) is rewritten to ``target_files_per_partition``
-    files via the crash-safe :func:`compact_parquet` swap (safe here
-    because these leaf directories never contain nested sidecars —
-    the root may, which is why a root-level file layout is NOT
-    compacted by this helper; use ``compact_parquet`` directly on
-    sidecar-free flat datasets). Returns the number of directories
-    compacted. Offline maintenance — run between ingest windows (the
-    per-directory swap briefly exposes a ``.staging`` sibling a
-    concurrent partition-discovery scan could trip on). Production
-    twin: lakehouse ``OPTIMIZE``. With ``fold_deletes`` (default) any
+    (MinHash/LSH/IVF index trees): every leaf directory — the data
+    tree's ``band=``/``bkt=``/``cid=`` partitions, the leaves one level
+    down in a partitioned sidecar (the ``fpb=`` buckets of
+    ``_fingerprints``), and each flat sidecar (``_hot_bands``,
+    ``_tombstones``, …) — ends with at most
+    ``target_files_per_partition`` parquet files. Discovery goes one
+    level down only, so no file of a ``run=/epoch=`` partitioned
+    ``_decisions`` log is read or rewritten (its ``run=`` dirs hold no
+    files directly; only a legacy flat log is a leaf).
+    A root-level flat file layout is NOT compacted either (the root
+    holds sidecars); use ``compact_parquet`` on sidecar-free flat
+    datasets.
+
+    Work is proportional to what needs it: crash residue is resolved
+    first (interrupted swaps recovered from ``.old``, stale staging
+    swept), then a leaf already at or under target is neither read nor
+    rewritten — ``coalesce(target)`` could not change its file count.
+    The over-target leaves of each tree are rewritten by one Spark
+    write into a staging tree readers cannot see, and swapped in leaf
+    by leaf with the crash-safe :func:`swap_parquet_rewrite` protocol
+    (:func:`_compact_leaves`); a crash between the write and the swaps
+    leaves only the staging tree, swept by the next call. Returns the
+    number of leaf directories at or under target when the call
+    returns, rewritten or not.
+
+    Offline maintenance — run between ingest windows (each swap
+    briefly exposes a ``.staging`` sibling a concurrent
+    partition-discovery scan could trip on). Production twin:
+    lakehouse ``OPTIMIZE``. With ``fold_deletes`` (default) any
     pending ``_tombstones`` are physically folded out first
     (:func:`fold_tombstones`) — compaction is the maintenance window
     where deletions stop costing an anti-join."""
     import os
+    import shutil
+
+    import pyarrow.parquet as pq
 
     if is_manifest_store(path):
         return MB.compact_store_manifest(
@@ -509,60 +635,46 @@ def compact_store(
         )
     if fold_deletes:
         fold_tombstones(spark, path)
+    staging = os.path.join(path, COMPACT_STAGING)
+    shutil.rmtree(staging, ignore_errors=True)  # a crashed call's writes
 
-    # Resolve crash leftovers to their LIVE directory name: a
-    # 'band=0.old' / 'band=0.staging' sibling is the swap's mid-flight
-    # residue, NOT a partition — compacting it as one would
-    # skip the recovery of the missing live dir and leave bogus
-    # partition values in the tree. compact_parquet(base) performs
-    # the .old recovery itself when only the leftover exists.
-    # ('.compacting' is the pre-r8 staging suffix, still recognized.)
-    bases: set[str] = set()
-    for e in os.scandir(path):
-        if not e.is_dir():
-            continue
-        name = e.name
-        for suffix in (".old", ".staging", ".compacting"):
-            if name.endswith(suffix):
-                name = name[: -len(suffix)]
-                break
-        if "=" in name or name.startswith("_"):
-            bases.add(name)
-    leaves: set[str] = set()
+    def _leaves(dirs) -> dict[str, list[str]]:
+        # leaf dir → its parquet files; a dir holding none is no leaf
+        return {d: fs for d in dirs if (fs := _settled_parquet_files(d))}
 
-    def _maybe_add(dirpath: str) -> bool:
-        if (
-            os.path.isdir(dirpath)
-            and any(f.endswith(".parquet") for f in os.listdir(dirpath))
-        ) or os.path.isdir(dirpath + ".old"):
-            leaves.add(dirpath)
-            return True
-        return False
+    # trees: the data tree's partition leaves, each partitioned
+    # sidecar's leaves, and each flat sidecar as a one-leaf tree
+    bases = sorted(_live_subdirs(path))
+    trees = [_leaves(os.path.join(path, b) for b in bases if "=" in b)]
+    for bdir in (os.path.join(path, b) for b in bases if b.startswith("_")):
+        trees.append(
+            _leaves([bdir])
+            or _leaves(
+                os.path.join(bdir, s)
+                for s in sorted(_live_subdirs(bdir))
+                if "=" in s
+            )
+        )
 
-    for b in bases:
-        bdir = os.path.join(path, b)
-        if _maybe_add(bdir) or not os.path.isdir(bdir):
-            continue
-        # partitioned sidecar (e.g. the fpb=-bucketed _fingerprints):
-        # its compactable leaves are one level down, with the same
-        # crash-leftover name resolution as the root
-        inner: set[str] = set()
-        for s in os.scandir(bdir):
-            if not s.is_dir():
-                continue
-            name = s.name
-            for suffix in (".old", ".staging", ".compacting"):
-                if name.endswith(suffix):
-                    name = name[: -len(suffix)]
-                    break
-            if "=" in name:
-                inner.add(name)
-        for name in inner:
-            _maybe_add(os.path.join(bdir, name))
-    leaf_dirs = sorted(leaves)
-    for d in leaf_dirs:
-        compact_parquet(spark, d, target_files_per_partition)
-    return len(leaf_dirs)
+    target = max(1, target_files_per_partition)
+    writes: list[dict[str, list[str]]] = []
+    for leaves in trees:
+        # one write per file schema (normally one per tree): a scan
+        # reads every file with ONE schema, so leaves whose files
+        # disagree on columns must not share it or columns would drop
+        groups: dict[frozenset, dict[str, list[str]]] = {}
+        for d, fs in leaves.items():
+            if len(fs) > target:
+                cols = frozenset(
+                    frozenset(pq.read_schema(os.path.join(d, f)).names)
+                    for f in fs
+                )
+                groups.setdefault(cols, {})[d] = fs
+        writes.extend(groups.values())
+    for k, group in enumerate(writes):
+        _compact_leaves(spark, group, os.path.join(staging, str(k)), target)
+    shutil.rmtree(staging, ignore_errors=True)
+    return sum(len(leaves) for leaves in trees)
 
 
 # ---------------------------------------------------------------------------
@@ -719,9 +831,7 @@ def snapshot_store(path: str, tag: str | None = None) -> int:
     staging = os.path.join(vroot, f".v{n}.staging")
     os.makedirs(staging)
     for e in os.scandir(path):
-        if e.name == VERSIONS_DIR or e.name.endswith(
-            (".old", ".staging", ".compacting")
-        ):
+        if e.name == VERSIONS_DIR or e.name.endswith(_SWAP_SUFFIXES):
             continue  # never snapshot snapshots or swap residue
         dst = os.path.join(staging, e.name)
         if e.is_dir():
