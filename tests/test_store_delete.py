@@ -577,6 +577,39 @@ class TestPrunedFold:
         # no duplicated live rows either: one row per original id
         assert after == [i for i in before if i != 999]
 
+    @pytest.mark.parametrize("crash", ["between_renames", "before_cleanup"])
+    def test_fold_settles_leaf_swap_residue(self, spark, tmp_path, backend, crash):
+        """A crashed compact_store leaf swap leaves ``bkt=N.old`` beside
+        (or instead of) ``bkt=N``. The fold must settle it as compaction
+        does — recover the live copy, drop the stale one — and never
+        carry it as a partition: right after the fold the rows are
+        exact and ``bkt`` keeps its type (a carried ``.old`` dir would
+        read as the string partition value "N.old")."""
+        if backend == "manifest":
+            pytest.skip("posix swap residue")
+        import shutil
+
+        path = self._store(spark, tmp_path, "residue")
+        scan = spark.read.parquet(path)
+        bkt_type = scan.schema["bkt"].dataType
+        rows = {r["id"]: r["bkt"] for r in scan.select("id", "bkt").collect()}
+        victim_bkt, residue_bkt = sorted(set(rows.values()))[:2]
+        victim = min(i for i, b in rows.items() if b == victim_bkt)
+        leaf = os.path.join(path, f"bkt={residue_bkt}")
+        if crash == "between_renames":
+            os.rename(leaf, leaf + ".old")  # .old IS the live copy
+        else:
+            shutil.copytree(leaf, leaf + ".old", copy_function=os.link)
+
+        delete_from_store(spark, path, _ids(spark, [victim]))
+        assert fold_tombstones(spark, path) == 1
+        after = spark.read.parquet(path)
+        assert after.schema["bkt"].dataType == bkt_type
+        assert sorted(
+            (r["id"], r["bkt"]) for r in after.select("id", "bkt").collect()
+        ) == sorted((i, b) for i, b in rows.items() if i != victim)
+        assert not os.path.exists(leaf + ".old")
+
     def test_hot_sidecar_refreshed_pruned_and_carried(self, spark, tmp_path, backend):
         path = self._store(spark, tmp_path, "hot")
         by_bkt = {}
@@ -633,7 +666,8 @@ class TestDecisionsRetire:
     never re-rendered partition values), by verbatim manifest
     reference on the manifest backend. Runs under BOTH backends —
     r13 gave the lineage log a manifest home (sub-scoped commits per
-    epoch, ``store_backend._scrub_decisions_manifest`` at fold)."""
+    epoch); both backends scrub it with the one
+    ``files._fold_decisions_sidecar`` at fold."""
 
     RUN = "abcd1234run"  # non-numeric: the run-as-double parse trap
 
@@ -739,6 +773,61 @@ class TestDecisionsRetire:
             e: self._leaf_identity(backend, mh_store, e) for e in (0, 1)
         } == before
         assert store_sub(spark, mh_store, "_decisions").count() == 4
+
+    def test_fold_keeps_untouched_entries_identical(self, spark, mh_store, backend):
+        """A fold that touches only some entries keeps every other one
+        unchanged: an untouched sidecar, the untouched ``_decisions``
+        leaf and the untouched ``fpb=`` buckets keep their inodes on
+        posix (hardlink carry, no byte copy) and their exact file
+        references on manifest; the touched ones are rewritten."""
+        from tiki_data_pipeline_spark.sources import store_backend as MB
+        from tiki_data_pipeline_spark.sources.files import fp_bucket
+
+        self._with_decisions(spark, mh_store, backend)
+        store_put(
+            spark.createDataFrame([(1, "a")], "k long, v string"),
+            mh_store, "overwrite", sub="_extra", coalesce=1,
+        )
+
+        def ident(entry):
+            if backend == "manifest":
+                return set(MB.manifest_files(mh_store, entry))
+            d = os.path.join(mh_store, entry)
+            return {
+                os.path.relpath(os.path.join(dp, f), d): os.stat(
+                    os.path.join(dp, f)
+                ).st_ino
+                for dp, _dns, fs in os.walk(d)
+                for f in fs
+                if f.endswith(".parquet")
+            }
+
+        victim = 2
+        vb = (
+            spark.createDataFrame([(victim,)], "id long")
+            .select(fp_bucket(F.col("id")).alias("b"))
+            .first()["b"]
+        )
+        buckets = {
+            r["fpb"]
+            for r in store_sub(spark, mh_store, "_fingerprints")
+            .select("fpb")
+            .distinct()
+            .collect()
+        }
+        assert vb in buckets and len(buckets) >= 2
+        untouched = ["_extra", f"_decisions/run={self.RUN}/epoch=1"] + [
+            f"_fingerprints/fpb={b}" for b in sorted(buckets - {vb})
+        ]
+        touched = [f"_decisions/run={self.RUN}/epoch=0", f"_fingerprints/fpb={vb}"]
+        before = {e: ident(e) for e in untouched + touched}
+        assert all(before.values())
+
+        delete_from_store(spark, mh_store, _ids(spark, [victim]))
+        fold_tombstones(spark, mh_store)
+        assert {e: ident(e) for e in untouched} == {e: before[e] for e in untouched}
+        for e in touched:
+            assert ident(e) != before[e], f"{e} was not rewritten"
 
     def test_flat_legacy_decisions_layout_scrubbed(self, spark, mh_store, backend):
         # pre-(run,epoch) logs are a single flat parquet dir; the

@@ -6,7 +6,7 @@ interleave across files); migrating to the partitioned tree restores
 probe-time partition pruning. Serve/append paths auto-detect layout
 per call, so migration must be purely physical: identical results
 before and after, sidecars (including pending ``_tombstones``)
-carried verbatim."""
+carried verbatim. Every test runs under both store backends."""
 
 from __future__ import annotations
 
@@ -17,11 +17,50 @@ from pyspark.sql import functions as F
 
 from tiki_data_pipeline_spark.operators import dedup as DD
 from tiki_data_pipeline_spark.operators import similarity as SIM
+from tiki_data_pipeline_spark.sources import store_backend as MB
 from tiki_data_pipeline_spark.sources.files import (
     delete_from_store,
+    is_manifest_store,
     migrate_store_layout,
     store_layout,
+    store_put,
+    store_sub_exists,
 )
+
+
+@pytest.fixture(params=["posix", "manifest"])
+def backend(request, monkeypatch):
+    """Run every migration under both store backends (posix
+    hardlink/rename vs object-store-safe manifest): stores built in a
+    test are born in the selected backend."""
+    monkeypatch.setenv("SPARK_GRAFT_STORE_BACKEND", request.param)
+    return request.param
+
+
+def _top_names(path):
+    """Top-level names of a store: directory entries on posix, the
+    first segment of each logical path on manifest."""
+    if is_manifest_store(path):
+        return {MB._lp(f).split("/", 1)[0] for f in MB.manifest_files(path)}
+    return set(os.listdir(path))
+
+
+def _sidecar_identity(path):
+    """What 'sidecars kept unchanged' means per backend: the inode of
+    every sidecar file on posix (hardlink carry), the file references
+    on manifest (reference carry)."""
+    if is_manifest_store(path):
+        return {
+            f
+            for f in MB.read_manifest(path, MB.current_gen(path))["files"]
+            if MB._lp(f).startswith("_")
+        }
+    return {
+        os.path.relpath(os.path.join(dp, f), path): os.stat(os.path.join(dp, f)).st_ino
+        for dp, _dns, fs in os.walk(path)
+        for f in fs
+        if os.path.relpath(dp, path).startswith("_") or f == "_meta.json"
+    }
 
 VECS = [
     (
@@ -49,6 +88,7 @@ def _topk(spark, path):
     }
 
 
+@pytest.mark.usefixtures("backend")
 class TestMigrateLayout:
     def test_flat_to_partitioned_and_back_serve_parity(self, spark, tmp_path):
         path = str(tmp_path / "lsh")
@@ -58,7 +98,7 @@ class TestMigrateLayout:
 
         assert migrate_store_layout(spark, path, partitioned=True)
         assert store_layout(path) == ("bkt", True)
-        assert any(e.startswith("bkt=") for e in os.listdir(path))
+        assert any(e.startswith("bkt=") for e in _top_names(path))
         assert _topk(spark, path) == baseline
         # idempotent: already in the requested layout
         assert not migrate_store_layout(spark, path, partitioned=True)
@@ -88,8 +128,21 @@ class TestMigrateLayout:
         assert victim not in hidden
 
         migrate_store_layout(spark, path, partitioned=True)
-        assert os.path.isdir(path + "/_tombstones")
+        assert store_sub_exists(path, "_tombstones")
         assert {n for _, n, _ in _topk(spark, path)} == hidden
+
+    def test_migration_keeps_sidecars_identical(self, spark, tmp_path):
+        # sidecars are kept, not rewritten or byte-copied: same inodes
+        # on posix, same file references on manifest
+        path = str(tmp_path / "lsh3")
+        SIM.write_lsh_index(_emb(spark), path)
+        delete_from_store(
+            spark, path, spark.createDataFrame([(3,)], "id long")
+        )
+        before = _sidecar_identity(path)
+        assert any("_tombstones" in f for f in before)
+        assert migrate_store_layout(spark, path, partitioned=True)
+        assert _sidecar_identity(path) == before
 
     def test_minhash_partitioned_to_flat_parity(self, spark, tmp_path):
         path = str(tmp_path / "mh")
@@ -116,6 +169,6 @@ class TestMigrateLayout:
 
     def test_unrecognized_store_raises(self, spark, tmp_path):
         path = str(tmp_path / "plain")
-        spark.range(5).write.parquet(path)
+        store_put(spark.range(5), path)
         with pytest.raises(ValueError, match="no recognized bucketing"):
             migrate_store_layout(spark, path, partitioned=True)

@@ -35,6 +35,8 @@ from tiki_data_pipeline_spark.sources.files import (
     read_store_version,
     rollback_store,
     snapshot_store,
+    update_store_meta,
+    version_path,
 )
 
 CORPUS = [
@@ -119,6 +121,17 @@ class TestSnapshot:
             .collect()
         }
         assert 5 in raw  # forensics view: physical rows intact
+
+    def test_snapshot_meta_is_isolated_from_live_meta_updates(self, spark, store):
+        """A snapshot pins the store meta as of the snapshot: a later
+        live meta update must not show through it. Posix snapshots (and
+        rewrites) carry ``_meta.json`` by hardlink, so a meta write must
+        replace the file, never rewrite it in place."""
+        update_store_meta(store, {"n_rows": 100})
+        v = snapshot_store(store)
+        update_store_meta(store, {"n_rows": 42})
+        assert read_store_meta(store)["n_rows"] == 42
+        assert read_store_meta(version_path(store, v))["n_rows"] == 100
 
     def test_snapshot_is_hardlinked_not_copied(self, spark, store, backend):
         if backend == "manifest":

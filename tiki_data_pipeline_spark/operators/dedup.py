@@ -2137,55 +2137,19 @@ def compact_span_df_store(spark, path: str) -> None:
 
 def _compact_count_store(spark, path: str, key: str) -> None:
     """Shared compaction for additive (key, df) count stores: fold to
-    one row per key via the backend-appropriate commit (manifest:
-    data-only commit carrying sidecars by reference + GC; posix:
-    crash-safe staging swap carrying sidecars verbatim)."""
-    import os
-    import shutil
+    one row per key in one ``StoreRewrite`` (either backend), keeping
+    every sidecar unchanged."""
+    from tiki_data_pipeline_spark.sources.files import StoreRewrite, store_data
 
-    from tiki_data_pipeline_spark.sources.files import (
-        VERSIONS_DIR,
-        _link_tree,
-        is_manifest_store,
-        store_data,
-        store_put,
-        swap_parquet_rewrite,
+    rw = StoreRewrite(path)
+    rw.write(
+        store_data(spark, path)
+        .groupBy(key)
+        .agg(F.sum("df").alias("df"))
+        .filter(F.col("df") > 0)
     )
-
-    if is_manifest_store(path):
-        from tiki_data_pipeline_spark.sources import store_backend as MB
-
-        folded = (
-            store_data(spark, path)
-            .groupBy(key)
-            .agg(F.sum("df").alias("df"))
-            .filter(F.col("df") > 0)
-        )
-        store_put(folded, path, "overwrite", keep_sidecars=True)
-        MB.gc_store(path)
-        return
-
-    def _stage(staging: str) -> None:
-        (
-            spark.read.parquet(path)
-            .groupBy(key)
-            .agg(F.sum("df").alias("df"))
-            .filter(F.col("df") > 0)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        for e in os.scandir(path):
-            if not e.name.startswith("_") or e.name in ("_SUCCESS",):
-                continue
-            dst = os.path.join(staging, e.name)
-            if e.is_dir() and e.name == VERSIONS_DIR:
-                _link_tree(e.path, dst)
-            elif e.is_dir():
-                shutil.copytree(e.path, dst, dirs_exist_ok=True)
-            else:
-                shutil.copy2(e.path, dst)
-
-    swap_parquet_rewrite(path, _stage)
+    rw.keep(*rw.sidecars)
+    rw.commit("compact")
 
 
 def incremental_span_removal(

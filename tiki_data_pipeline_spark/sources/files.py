@@ -37,8 +37,12 @@ from tiki_data_pipeline_spark.sources.store_backend import (  # noqa: F401
 # object-store/lakehouse shape; see sources/store_backend.py). A
 # store is self-describing (`_mf/CURRENT.json` marks manifest), so
 # every helper below dispatches per store; serve and build code is
-# backend-agnostic. POSIX implementations are exact passthroughs of
-# the pre-backend code paths — zero plan or layout change.
+# backend-agnostic. Reads and appends dispatch to each backend's own
+# writer; every maintenance rewrite (fold, layout migration,
+# count-store and manifest compaction) runs ONE backend-agnostic body
+# through the StoreRewrite seam, whose commit is the only per-backend
+# step (posix: hardlink carry + directory swap; manifest: reference
+# carry + one generation commit).
 
 
 def store_data(spark: SparkSession, path: str) -> DataFrame:
@@ -98,7 +102,6 @@ def store_put(
     range_key: str | None = None,
     n_range_files: int | None = None,
     backend: str | None = None,
-    keep_sidecars: bool = False,
 ) -> None:
     """Write a store's data tree (``sub=None``) or one sidecar, in
     either backend. An EXISTING store keeps its backend regardless of
@@ -127,15 +130,8 @@ def store_put(
             coalesce=coalesce,
             range_key=range_key,
             n_range_files=n_range_files,
-            keep_sidecars=keep_sidecars,
         )
         return
-    if keep_sidecars and mode != "append" and sub is None:
-        raise ValueError(
-            "keep_sidecars is a manifest-commit scope; posix data-only "
-            "rewrites go through the staged swap helpers "
-            "(swap_parquet_rewrite / compact_*) which carry sidecars"
-        )
     target = os.path.join(root, sub) if sub else root
     if partition_by is not None:
         (
@@ -264,8 +260,9 @@ def swap_parquet_rewrite(path: str, write_staging) -> None:
     rewrite into place, delete the old copy. A valid dataset exists at
     ``path`` at all times except during one rename, and a crash
     mid-swap leaves both copies on disk (never zero). Shared by
-    :func:`compact_parquet`, :func:`compact_store`'s per-leaf swaps and
-    the streaming decisions-log layout migration (``streaming.jobs``)."""
+    :func:`compact_parquet`, :func:`compact_store`'s per-leaf swaps, the
+    posix commit of every :class:`StoreRewrite` and the streaming
+    decisions-log layout migration (``streaming.jobs``)."""
     import os
     import shutil
 
@@ -284,6 +281,7 @@ def swap_parquet_rewrite(path: str, write_staging) -> None:
 
 
 _FENCED: set[str] = set()  # store roots fenced by THIS process
+FENCE_LOCK = "_maintenance.lock"
 
 
 def _pid_alive(pid: int) -> bool:
@@ -328,7 +326,7 @@ def maintenance_fence(path: str, op: str):
     if is_manifest_store(path) or root in _FENCED or not os.path.isdir(root):
         yield
         return
-    lock = os.path.join(root, "_maintenance.lock")
+    lock = os.path.join(root, FENCE_LOCK)
     payload = json.dumps(
         {"pid": os.getpid(), "op": op, "created_unix": int(time.time())}
     )
@@ -421,8 +419,10 @@ def write_store_meta(path: str, meta: dict) -> None:
     if is_manifest_store(path):
         MB.put_json_entry(split_pin(path)[0], "_meta.json", meta)
         return
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(meta, f)
+    # a NEW file replaced into place, never an in-place write: snapshots
+    # and rewrites carry the old file by hardlink, which must keep its
+    # bytes
+    MB.FS.put_atomic(os.path.join(path, "_meta.json"), json.dumps(meta))
 
 
 def read_store_meta(path: str) -> dict | None:
@@ -478,11 +478,12 @@ def check_store_meta(path: str, expected: dict) -> None:
 # Crash leftovers a swap can leave beside a live directory: '.old' is
 # the live copy between the two renames, '.staging' a half-built
 # rewrite ('.compacting' is the pre-r8 staging suffix, still
-# recognized). compact_store stages each call's tree writes under one
-# dot-prefixed directory at the store root: Spark's file listing skips
-# it, and the '_'-prefixed sidecar loops never carry it.
+# recognized). compact_store and StoreRewrite stage their writes under
+# dot-prefixed directories at the store root: Spark's file listing
+# skips them, and a rewrite never carries them.
 _SWAP_SUFFIXES = (".old", ".staging", ".compacting")
 COMPACT_STAGING = ".compact.staging"
+REWRITE_STAGING = ".rewrite.staging"
 
 
 def _live_subdirs(dirpath: str) -> set[str]:
@@ -490,16 +491,16 @@ def _live_subdirs(dirpath: str) -> set[str]:
     leftovers resolved to the live name they belong to ('band=0.old'
     → 'band=0'): a leftover is mid-flight residue, NOT a partition,
     and treating it as one would skip the recovery of the missing
-    live dir and leave bogus partition values in the tree. The
-    compaction staging tree belongs to no live directory and is left
-    out."""
+    live dir and leave bogus partition values in the tree. Hidden
+    (dot-prefixed) directories such as the staging trees belong to no
+    live directory and are left out."""
     import os
 
     names: set[str] = set()
     if not os.path.isdir(dirpath):
         return names
     for e in os.scandir(dirpath):
-        if not e.is_dir() or e.name == COMPACT_STAGING:
+        if not e.is_dir() or e.name.startswith("."):
             continue
         name = e.name
         for suffix in _SWAP_SUFFIXES:
@@ -833,14 +834,7 @@ def snapshot_store(path: str, tag: str | None = None) -> int:
     for e in os.scandir(path):
         if e.name == VERSIONS_DIR or e.name.endswith(_SWAP_SUFFIXES):
             continue  # never snapshot snapshots or swap residue
-        dst = os.path.join(staging, e.name)
-        if e.is_dir():
-            _link_tree(e.path, dst)
-        else:
-            try:
-                os.link(e.path, dst)
-            except OSError:
-                shutil.copy2(e.path, dst)
+        _link_tree(e.path, os.path.join(staging, e.name))
     manifest = {
         "version": n,
         "tag": tag,
@@ -1060,7 +1054,6 @@ def rollback_store(path: str, version: int) -> None:
     moved. Manifest stores roll back with ONE commit whose file list
     is the pinned generation's — no data movement either."""
     import os
-    import shutil
 
     if is_manifest_store(path):
         MB.rollback(split_pin(path)[0], version)
@@ -1070,16 +1063,8 @@ def rollback_store(path: str, version: int) -> None:
     def _stage(staging: str) -> None:
         os.makedirs(staging)
         for e in os.scandir(vdir):
-            if e.name == "_version.json":
-                continue
-            dst = os.path.join(staging, e.name)
-            if e.is_dir():
-                _link_tree(e.path, dst)
-            else:
-                try:
-                    os.link(e.path, dst)
-                except OSError:
-                    shutil.copy2(e.path, dst)
+            if e.name != "_version.json":
+                _link_tree(e.path, os.path.join(staging, e.name))
         # carry the FULL version history across the swap
         _link_tree(
             os.path.join(path, VERSIONS_DIR),
@@ -1157,74 +1142,21 @@ def fp_bucket(id_col: "F.Column") -> "F.Column":
     return F.pmod(F.xxhash64(id_col), F.lit(FP_BUCKETS)).cast("int")
 
 
-def _fold_id_sidecar(
-    spark: SparkSession, src: str, dst: str, tomb: DataFrame
-) -> None:
-    """Rewrite an id-keyed sidecar (``_fingerprints``) without its
-    tombstoned rows. A ``fpb=``-bucketed sidecar is pruned: only the
-    buckets the victim ids hash into are anti-joined and rewritten;
-    untouched buckets are hardlinked into staging (O(metadata)). A
-    legacy flat sidecar falls back to the full anti-join rewrite."""
-    import os
-    import shutil
-
-    bucketed = any(
-        e.name.startswith("fpb=") for e in os.scandir(src) if e.is_dir()
-    )
-    if bucketed:
-        affected = sorted(
-            r["b"]
-            for r in tomb.select(fp_bucket(F.col("id")).alias("b"))
-            .distinct()
-            .collect()
-        )
-        actual = {
-            e.name
-            for e in os.scandir(src)
-            if e.is_dir() and e.name.startswith("fpb=")
-        }
-        expected = {f"fpb={b}" for b in affected}
-        # value→dirname round-trip guard, same discipline as the main
-        # tree (Spark wrote these int dirs itself, but stay paranoid)
-        if expected <= actual and len(actual) == spark.read.parquet(
-            src
-        ).select("fpb").distinct().count():
-            os.makedirs(dst, exist_ok=True)
-            hit = expected & actual
-            if hit:
-                (
-                    spark.read.parquet(src)
-                    .filter(F.col("fpb").isin(affected))
-                    .join(F.broadcast(tomb), "id", "anti")
-                    .repartition(F.col("fpb"))
-                    .write.partitionBy("fpb")
-                    .parquet(os.path.join(dst, "_data.tmp"))
-                )
-                tmp = os.path.join(dst, "_data.tmp")
-                for e in os.scandir(tmp):
-                    if e.name.startswith("fpb="):
-                        shutil.move(e.path, os.path.join(dst, e.name))
-                shutil.rmtree(tmp, ignore_errors=True)
-            for name in actual - expected:
-                _link_tree(os.path.join(src, name), os.path.join(dst, name))
-            return
-    (
-        spark.read.parquet(src)
-        .join(F.broadcast(tomb), "id", "anti")
-        .write.mode("overwrite")
-        .parquet(dst)
-    )
-
-
 def _link_tree(src: str, dst: str) -> None:
-    """Carry a directory into staging without moving bytes: hardlink
-    every file (same-filesystem, O(metadata) — the local-disk twin of
-    a lakehouse manifest carry, where a rewrite re-lists untouched
-    data files instead of copying them), falling back to a byte copy
-    if the staging dir lands on another device."""
+    """Carry a file or directory into staging without moving bytes:
+    hardlink every file (same-filesystem, O(metadata) — the local-disk
+    twin of a lakehouse manifest carry, where a rewrite re-lists
+    untouched data files instead of copying them), falling back to a
+    byte copy if the staging dir lands on another device."""
     import os
     import shutil
 
+    if not os.path.isdir(src):
+        try:
+            os.link(src, dst)
+        except OSError:
+            shutil.copy2(src, dst)
+        return
     try:
         shutil.copytree(src, dst, copy_function=os.link)
     except OSError:
@@ -1232,8 +1164,260 @@ def _link_tree(src: str, dst: str) -> None:
         shutil.copytree(src, dst)
 
 
+# ---------------------------------------------------------------------------
+# Store rewrites: one path for both backends
+# ---------------------------------------------------------------------------
+# Every maintenance rewrite of a store's data and sidecars — the
+# tombstone fold, layout migration, count-store compaction and manifest
+# compaction — is ONE backend-agnostic body written against
+# StoreRewrite: the caller writes NEW parquet under a fresh base
+# directory that mirrors the store's logical layout and names the
+# logical entries it keeps unchanged (at any depth: a ``bkt=3`` dir,
+# ``_fingerprints/fpb=7``, one ``_decisions/run=…/epoch=…`` leaf, a
+# whole sidecar); every other entry is dropped. Only the commit differs
+# per backend — posix hardlinks the kept entries into the base and
+# swaps it in with swap_parquet_rewrite; manifest keeps the kept
+# entries' file references and commits one generation
+# (``store_backend._commit`` + ``gc_store``).
+
+_BUCKET_KEYS = ("band", "bkt", "cid")
+# posix-only root entries, outside every logical listing, that a posix
+# rewrite always carries: snapshot history (immutable — time travel to
+# a pre-rewrite version keeps seeing the old rows) and the fence lock
+_POSIX_CARRY = (VERSIONS_DIR, FENCE_LOCK)
+
+
+def store_entries(path: str) -> dict[str, str]:
+    """Every file of a store (any read handle), keyed by LOGICAL path —
+    its path from the store root (``bkt=3/part-0.parquet``,
+    ``_fingerprints/fpb=7/…``, ``_meta.json``) — mapped to its physical
+    path. Manifest: the files of the CURRENT (or pinned) generation.
+    Posix: a walk of the tree that leaves out what no reader sees
+    (dot-prefixed names, Spark's ``_SUCCESS`` markers) and the
+    posix-only history and fence lock."""
+    import os
+
+    root, pin = split_pin(path)
+    if is_manifest_store(root):
+        files = MB.read_manifest(root, MB._resolve_gen(root, pin))["files"]
+        return {MB._lp(f): os.path.join(root, f) for f in files}
+    out: dict[str, str] = {}
+    for dp, dns, fns in os.walk(root):
+        rel = os.path.relpath(dp, root)
+        top = rel == "."
+        dns[:] = [
+            d for d in dns if not d.startswith(".") and not (top and d in _POSIX_CARRY)
+        ]
+        for f in fns:
+            if f.startswith(".") or f == "_SUCCESS" or (top and f in _POSIX_CARRY):
+                continue
+            out[f if top else f"{rel}/{f}"] = os.path.join(dp, f)
+    return out
+
+
+def _top_entries(entries: dict[str, str], sidecars: bool) -> list[str]:
+    """Top-level logical names: the sidecars (``_``-prefixed), or the
+    data tree's partition dirs and flat files."""
+    return sorted(
+        {lp.split("/", 1)[0] for lp in entries if lp.startswith("_") == sidecars}
+    )
+
+
+def _layout(entries: dict[str, str]) -> tuple[str | None, bool]:
+    """(bucketing key, partitioned) of a store from its logical entries
+    (see :func:`store_layout`)."""
+    data = sorted(
+        lp for lp in entries if lp.endswith(".parquet") and not lp.startswith("_")
+    )
+    for k in _BUCKET_KEYS:
+        if any("/" in lp and lp.startswith(f"{k}=") for lp in data):
+            return k, True
+    if data:
+        try:
+            import pyarrow.parquet as pq
+
+            cols = set(pq.read_schema(entries[data[0]]).names)
+            for k in _BUCKET_KEYS:
+                if k in cols:
+                    return k, False
+        except Exception:
+            pass
+    return None, False
+
+
+def _settle_store(root: str) -> None:
+    """Resolve a posix store's swap crash residue — the root's, every
+    top-level directory's, and every sidecar subdirectory's (the
+    ``fpb=`` buckets) — with the helpers :func:`compact_store` uses, so
+    a rewrite plans on, and carries, what compaction would see: an
+    interrupted ``bkt=97.old`` leaf swap is recovered, never carried as
+    a partition whose value reads as the string ``"97.old"``."""
+    import os
+
+    recover_interrupted_swap(root)
+    for b in _live_subdirs(root) - {VERSIONS_DIR}:
+        d = os.path.join(root, b)
+        _settled_parquet_files(d)
+        if b.startswith("_"):
+            for s in _live_subdirs(d):
+                _settled_parquet_files(os.path.join(d, s))
+
+
+class StoreRewrite:
+    """One rewrite of a store through the seam described above.
+
+    Construct it BEFORE planning: on posix it settles crash residue
+    first, so the plan's reads and :attr:`entries` see a settled store;
+    on manifest it records the generation the commit is based on (the
+    commit CAS). Write new files with :meth:`write`, name unchanged
+    entries with :meth:`keep`, then :meth:`commit`. A crash or an
+    exception before the commit leaves the live store as it was; the
+    abandoned base is swept by the next rewrite (posix) or by
+    ``gc_store`` (manifest)."""
+
+    def __init__(self, path: str):
+        import os
+        import shutil
+
+        root, pin = split_pin(path)
+        if pin is not None:
+            raise ValueError(f"cannot rewrite a pinned snapshot handle {path}")
+        self.root = root
+        self.manifest = is_manifest_store(root)
+        if self.manifest:
+            self.gen = MB.current_gen(root)
+            self.base = os.path.join(root, MB.GEN_DIR, f"{self.gen + 1:08d}")
+            for f in MB.FS.list_files(self.base):  # a crashed attempt's orphans
+                MB.FS.delete(f)
+        else:
+            _settle_store(root)
+            self.base = os.path.join(root, REWRITE_STAGING)
+            shutil.rmtree(self.base, ignore_errors=True)
+        self.entries = store_entries(root)
+        self.kept: set[str] = set()
+
+    @property
+    def sidecars(self) -> list[str]:
+        return _top_entries(self.entries, sidecars=True)
+
+    @property
+    def data_entries(self) -> list[str]:
+        return _top_entries(self.entries, sidecars=False)
+
+    @property
+    def layout(self) -> tuple[str | None, bool]:
+        return _layout(self.entries)
+
+    def keep(self, *entries: str) -> None:
+        self.kept.update(entries)
+
+    def write(
+        self,
+        df: DataFrame,
+        entry: str = "",
+        partition_by: str | None = None,
+        range_key: str | None = None,
+        files: int | None = None,
+    ) -> None:
+        """Write ``df`` as the new files of logical ``entry`` ("" = the
+        data tree). Shapes mirror the store writers: ``partition_by`` —
+        one file per partition dir, or up to ``files`` per dir through a
+        row-hash salt; ``range_key`` — ``files`` (default 4) range-sorted
+        flat files; otherwise ``files`` coalesced files, if given."""
+        import os
+
+        if partition_by is not None:
+            if files and files > 1:
+                df = df.repartition(files, F.xxhash64(*[F.col(c) for c in df.columns]))
+            else:
+                df = df.repartition(F.col(partition_by))
+        elif range_key is not None:
+            df = df.repartitionByRange(files or 4, range_key).sortWithinPartitions(
+                range_key
+            )
+        elif files:
+            df = df.coalesce(files)
+        # append: the base is fresh, and the writes of one rewrite share it
+        w = df.write.mode("append")
+        if partition_by is not None:
+            w = w.partitionBy(partition_by)
+        w.parquet(os.path.join(self.base, entry) if entry else self.base)
+
+    def has_data(self) -> bool:
+        """Does the rewritten data tree hold any file, kept or new?"""
+        import os
+
+        return any(not e.startswith("_") for e in self.kept) or any(
+            f.endswith(".parquet")
+            and not os.path.relpath(f, self.base).startswith(("_", "."))
+            for f in MB.FS.list_files(self.base)
+        )
+
+    def _is_kept(self, lp: str) -> bool:
+        parts = lp.split("/")
+        return any("/".join(parts[:i]) in self.kept for i in range(1, len(parts) + 1))
+
+    def commit(self, op: str) -> None:
+        import os
+
+        if self.manifest:
+            files = MB.read_manifest(self.root, self.gen)["files"]
+            kept = [f for f in files if self._is_kept(MB._lp(f))]
+            new = MB._list_new_parquet(self.root, self.base)
+            MB._commit(self.root, kept + new, op, based_on=self.gen)
+            MB.gc_store(self.root)
+            return
+        os.makedirs(self.base, exist_ok=True)
+        carried = sorted(self.kept) + [
+            e for e in _POSIX_CARRY if os.path.exists(os.path.join(self.root, e))
+        ]
+        for e in carried:
+            dst = os.path.join(self.base, e)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            _link_tree(os.path.join(self.root, e), dst)
+        swap_parquet_rewrite(self.root, lambda staging: os.rename(self.base, staging))
+
+
+def _fold_id_sidecar(
+    spark: SparkSession, rw: StoreRewrite, name: str, tomb: DataFrame
+) -> None:
+    """Fold an id-keyed sidecar (``_fingerprints``) through ``rw``. A
+    ``fpb=``-bucketed sidecar is pruned: only the buckets the victim ids
+    hash into are anti-joined and rewritten, every other bucket is kept.
+    A legacy flat sidecar, or bucketing that does not round-trip, falls
+    back to the full anti-join rewrite."""
+    src = store_sub(spark, rw.root, name)
+    actual = {
+        parts[1]
+        for lp in rw.entries
+        if (parts := lp.split("/"))[0] == name
+        and len(parts) > 2
+        and parts[1].startswith("fpb=")
+    }
+    if actual:
+        affected = sorted(
+            r["b"]
+            for r in tomb.select(fp_bucket(F.col("id")).alias("b")).distinct().collect()
+        )
+        expected = {f"fpb={b}" for b in affected}
+        # value→dirname round-trip guard, same discipline as the data
+        # tree (Spark wrote these int dirs itself, but stay paranoid)
+        if expected <= actual and len(actual) == src.select("fpb").distinct().count():
+            rw.keep(*(f"{name}/{b}" for b in actual - expected))
+            if expected & actual:
+                rw.write(
+                    src.filter(F.col("fpb").isin(affected)).join(
+                        F.broadcast(tomb), "id", "anti"
+                    ),
+                    name,
+                    partition_by="fpb",
+                )
+            return
+    rw.write(src.join(F.broadcast(tomb), "id", "anti"), name)
+
+
 def _fold_decisions_sidecar(
-    spark: SparkSession, src: str, dst: str, tomb: DataFrame
+    spark: SparkSession, rw: StoreRewrite, tomb: DataFrame
 ) -> None:
     """Retire tombstoned ids from a ``_decisions`` lineage log (the
     streaming sinks' exactly-once decision records, ``run=/epoch=``
@@ -1248,15 +1432,16 @@ def _fold_decisions_sidecar(
 
     Leaf-pruned like the data fold: one column-pruned scan tagged
     with ``input_file_name`` finds the epoch leaves that actually
-    reference a victim; only those are rewritten into staging, every
-    other leaf carries by hardlink. Leaf identity comes from FILE
-    paths, never from re-rendering partition VALUES — a run hash
-    that parses numerically (e.g. ``33312574e463`` → double) does
-    not round-trip to its directory name, so value-derived paths
-    would corrupt the layout (the hazard ``_epoch_decisions``
-    documents). Affected-leaf rewrites are one small job per epoch
-    leaf: a takedown batch touches the few epochs that ingested or
-    matched its victims, not the log's full history.
+    reference a victim; only those are rewritten, every other leaf is
+    kept (posix hardlink, manifest reference). Leaf identity comes
+    from FILE paths, never from re-rendering partition VALUES — a run
+    hash that parses numerically (e.g. ``33312574e463`` → double) does
+    not round-trip to its directory name, so value-derived paths would
+    corrupt the layout (the hazard ``_epoch_decisions`` documents).
+    Affected-leaf rewrites are one small job per epoch leaf: a
+    takedown batch touches the few epochs that ingested or matched its
+    victims, not the log's full history. A legacy flat log is one leaf,
+    ``_decisions`` itself.
 
     Interaction with epoch replay: dropping a victim's row changes a
     committed epoch's id-set, so a stream resumed from a checkpoint
@@ -1268,19 +1453,16 @@ def _fold_decisions_sidecar(
     import os
     from urllib.parse import unquote, urlparse
 
-    leaves: dict[str, str] = {}
-    for root, _dirs, fnames in os.walk(src):
-        if any(f.endswith(".parquet") for f in fnames):
-            leaves[os.path.relpath(root, src)] = root
-    df = spark.read.parquet(src) if leaves else None
-    idc = (
-        next((c for c in ("doc_id", "vec_id", "id") if c in df.columns), None)
-        if df is not None
-        else None
-    )
-    refs = [c for c in (idc, "matched_id") if c and c in (df.columns if df is not None else [])]
+    leaves: dict[str, list[str]] = {}
+    for lp, f in rw.entries.items():
+        if lp.startswith("_decisions/") and lp.endswith(".parquet"):
+            leaves.setdefault(os.path.dirname(lp), []).append(f)
+    df = store_sub(spark, rw.root, "_decisions") if leaves else None
+    cols = df.columns if df is not None else []
+    idc = next((c for c in ("doc_id", "vec_id", "id") if c in cols), None)
+    refs = [c for c in (idc, "matched_id") if c in cols]
     if not refs:
-        _link_tree(src, dst)
+        rw.keep("_decisions")
         return
 
     hits = (
@@ -1293,27 +1475,21 @@ def _fold_decisions_sidecar(
         .distinct()
         .collect()
     )
+    leaf_of = {os.path.abspath(f): leaf for leaf, fs in leaves.items() for f in fs}
     affected = set()
     for r in hits:
         p = r["_f"]
         if p.startswith("file:"):
             p = unquote(urlparse(p).path)
-        affected.add(os.path.relpath(os.path.dirname(p), src))
+        affected.add(leaf_of[os.path.abspath(p)])
 
-    os.makedirs(dst, exist_ok=True)
-    for rel, leaf in leaves.items():
-        staged = dst if rel == "." else os.path.join(dst, rel)
-        if rel not in affected:
-            if rel == ".":
-                import shutil
-
-                for e in os.scandir(leaf):
-                    if e.is_file():
-                        os.link(e.path, os.path.join(dst, e.name))
-            else:
-                _link_tree(leaf, staged)
+    for leaf, fs in sorted(leaves.items()):
+        if leaf not in affected:
+            rw.keep(leaf)
             continue
-        ldf = spark.read.parquet(leaf)  # leaf read: no partition cols
+        # explicit leaf files: the leaf dir is the base path, so no
+        # partition columns are parsed and the rows keep the files' schema
+        ldf = spark.read.parquet(*fs)
         out = ldf
         if idc in ldf.columns:
             out = out.join(
@@ -1331,11 +1507,9 @@ def _fold_decisions_sidecar(
                 )
                 .drop("_v")
             )
-        # coalesce(1): an emptied epoch leaf must still hold one
+        # one file: an emptied epoch leaf must still hold one
         # schema-bearing file for later reads of the log
-        out.select(*ldf.columns).coalesce(1).write.mode("overwrite").parquet(
-            staged
-        )
+        rw.write(out.select(*ldf.columns), leaf, files=1)
 
 
 @_fenced("fold_tombstones")
@@ -1346,30 +1520,32 @@ def fold_tombstones(
     prune: bool | str = "auto",
     refresh_hot: bool = True,
 ) -> int:
-    """Physically remove tombstoned rows from a store (crash-safe
-    whole-directory swap): rewrite the data minus the tombstoned ids,
-    fold id-keyed sidecars the same way, scrub the streaming
-    ``_decisions`` lineage log of every reference to a retired id
+    """Physically remove tombstoned rows from a store in one
+    :class:`StoreRewrite` (crash-safe on either backend): rewrite the
+    data minus the tombstoned ids, fold id-keyed sidecars the same way
+    (:func:`_fold_id_sidecar`), scrub the streaming ``_decisions``
+    lineage log of every reference to a retired id
     (:func:`_fold_decisions_sidecar` — subject rows dropped,
-    ``matched_id`` pointers nulled), carry every other sidecar over
-    verbatim, and drop the ``_tombstones`` sidecar atomically with
-    the swap (it is simply not staged). Returns the number of
-    distinct ids folded, 0 if none were pending.
+    ``matched_id`` pointers nulled), keep every other sidecar
+    unchanged, and drop the ``_tombstones`` sidecar atomically with the
+    commit (it is simply not kept). Returns the number of distinct ids
+    folded, 0 if none were pending.
 
     **Partition-pruned on partitioned trees** (``prune="auto"``): one
     id-column scan semi-joined against the (driver-small) tombstone
     set finds the ``band=``/``bkt=``/``cid=`` partitions that actually
     hold victims; ONLY those partition dirs are rewritten (the scan
     itself partition-prunes via an ``isin`` on the key), and every
-    untouched dir is carried into staging by hardlink — O(metadata),
-    no bytes moved. A takedown batch therefore costs the victims'
-    partition share of the store, not a full rewrite: the shape that
-    keeps deletion viable at 100 TB, where a fold that re-writes
-    99.99 % untouched data cannot run. ``prune=False`` forces the
-    full rewrite (the parity baseline); the full path also remains
-    the automatic fallback when a partition value does not round-trip
-    to its directory name (nulls, escaped strings) — wrong pruning
-    could duplicate or drop rows, so anything unprovable rewrites.
+    untouched dir is kept — by hardlink on posix, by reference on
+    manifest: O(metadata), no bytes moved. A takedown batch therefore
+    costs the victims' partition share of the store, not a full
+    rewrite: the shape that keeps deletion viable at 100 TB, where a
+    fold that re-writes 99.99 % untouched data cannot run.
+    ``prune=False`` forces the full rewrite (the parity baseline); the
+    full path also remains the automatic fallback when a partition
+    value does not round-trip to its directory name (nulls, escaped
+    strings) — wrong pruning could duplicate or drop rows, so anything
+    unprovable rewrites.
 
     Layout is preserved: partitioned trees stay partitioned; a flat
     key-sorted dataset is re-range-sorted on its key (row-group
@@ -1383,6 +1559,8 @@ def fold_tombstones(
     A crash mid-fold leaves either the old tree (tombstones intact —
     the serve anti-join still hides the ids) or the new one
     (tombstones folded); re-running is a no-op or completes the fold.
+    Snapshots are not rewritten: time travel to a pre-fold version
+    intentionally still sees the folded rows.
 
     Hot-occupancy sidecars (``_hot_bands`` / ``_hot_buckets``) are
     refreshed in the same maintenance window (``refresh_hot=True``):
@@ -1392,39 +1570,26 @@ def fold_tombstones(
     bucket that shrank below the cap re-enters candidate generation
     instead of being skipped forever on stale counts."""
     import os
-    import shutil
 
-    if is_manifest_store(path):
-        # object-store path: new files + manifest commit; untouched
-        # partitions carried by REFERENCE instead of hardlink
-        return MB.fold_tombstones_manifest(
-            spark,
-            path,
-            fold_sidecars=fold_sidecars,
-            prune=prune,
-            refresh_hot=refresh_hot,
+    rw = StoreRewrite(path)
+    if rw.manifest and os.path.isdir(os.path.join(rw.root, "_decisions")):
+        # a physical _decisions dir the manifest never listed (written
+        # by a pre-dispatch streaming path): folding would succeed
+        # WITHOUT scrubbing it — a silent takedown-lineage leak
+        raise ValueError(
+            f"manifest store {rw.root} carries a rogue physical _decisions "
+            "directory outside the manifest; migrate it into manifest "
+            "entries (re-run the stream on the fixed sink, or commit the "
+            "files) before folding tombstones"
         )
-    # the pruned path reads `path` EAGERLY (affected-partition scan)
-    # before swap_parquet_rewrite gets a chance to recover a prior
-    # crashed swap — recover first so that scan never lands in the
-    # between-renames window
-    recover_interrupted_swap(path)
     tomb = store_tombstones(spark, path)
     if tomb is None:
         return 0
     n_tomb = tomb.count()
-    part_key = next(
-        (
-            k
-            for k in ("band", "bkt", "cid")
-            if any(
-                e.name.startswith(f"{k}=") for e in os.scandir(path) if e.is_dir()
-            )
-        ),
-        None,
-    )
+    key, partitioned = rw.layout
+    part_key = key if partitioned else None
+    scan = store_data(spark, path) if rw.data_entries else tomb.limit(0)
 
-    scan = spark.read.parquet(path)
     affected_vals: list | None = None
     removed_rows: int | None = None
     # "auto" skips the pruning pre-scan on band= stores: the MinHash
@@ -1433,6 +1598,7 @@ def fold_tombstones(
     # never win there and the pre-scan is pure overhead. prune=True
     # still forces the pruned path (parity tests).
     do_prune = prune is True or (prune == "auto" and part_key != "band")
+    actual = {e for e in rw.data_entries if "=" in e}  # partition dirs
     if part_key is not None and do_prune:
         # one column-pruned pass over (id, partition key): which
         # partitions hold victims, and how many rows leave each —
@@ -1444,122 +1610,67 @@ def fold_tombstones(
             .collect()
         )
         vals = [r[part_key] for r in aff]
-        expected = {f"{part_key}={v}" for v in vals}
-        actual = {
-            e.name
-            for e in os.scandir(path)
-            if e.is_dir() and e.name.startswith(f"{part_key}=")
-        }
         if (
             all(v is not None for v in vals)
-            and expected <= actual
+            and {f"{part_key}={v}" for v in vals} <= actual
             # expected ⊆ actual alone misses ALIASED dirs: two names
             # that parse to the same value (cid=33 and cid=033 both
             # read as 33 under Spark's int inference) would let the
-            # affected rewrite merge both dirs into one AND hardlink
-            # the second verbatim as untouched — duplicating its live
-            # rows and retaining its victims. Spark's own writer never
-            # emits such a layout, but an externally crafted tree can;
+            # affected rewrite merge both dirs into one AND keep the
+            # second verbatim as untouched — duplicating its live rows
+            # and retaining its victims. Spark's own writer never emits
+            # such a layout, but an externally crafted tree can;
             # require dirs ↔ distinct parsed values to be 1:1
             # (partition-column-only scan — file listing, no row read)
-            and len(actual)
-            == scan.select(part_key).distinct().count()
+            and len(actual) == scan.select(part_key).distinct().count()
         ):
             affected_vals = vals
             removed_rows = sum(r["_n"] for r in aff)
         # else: value→dirname round-trip unproven — full rewrite
 
-    def _stage(staging: str) -> None:
-        os.makedirs(staging, exist_ok=True)
-        if part_key is not None and affected_vals is not None:
-            untouched = {
-                e.name
-                for e in os.scandir(path)
-                if e.is_dir() and e.name.startswith(f"{part_key}=")
-            } - {f"{part_key}={v}" for v in affected_vals}
-            if affected_vals:
-                live = scan.filter(
-                    F.col(part_key).isin(affected_vals)
-                ).join(F.broadcast(tomb), "id", "anti")
-                (
-                    live.repartition(F.col(part_key))
-                    .write.partitionBy(part_key)
-                    .parquet(os.path.join(staging, "_data.tmp"))
-                )
-                tmp = os.path.join(staging, "_data.tmp")
-                for e in os.scandir(tmp):
-                    shutil.move(e.path, os.path.join(staging, e.name))
-                shutil.rmtree(tmp, ignore_errors=True)
-            for name in untouched:
-                _link_tree(
-                    os.path.join(path, name), os.path.join(staging, name)
-                )
-        elif part_key is not None:
-            live = scan.join(F.broadcast(tomb), "id", "anti")
-            (
-                live.repartition(F.col(part_key))
-                .write.partitionBy(part_key)
-                .parquet(os.path.join(staging, "_data.tmp"))
+    if affected_vals is not None:
+        rw.keep(*(actual - {f"{part_key}={v}" for v in affected_vals}))
+        if affected_vals:
+            rw.write(
+                scan.filter(F.col(part_key).isin(affected_vals)).join(
+                    F.broadcast(tomb), "id", "anti"
+                ),
+                partition_by=part_key,
             )
-            # partitionBy writes into staging/_data.tmp/<key>=…; hoist
-            # the partition dirs up so the staged tree mirrors `path`
-            tmp = os.path.join(staging, "_data.tmp")
-            for e in os.scandir(tmp):
-                shutil.move(e.path, os.path.join(staging, e.name))
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            live = scan.join(F.broadcast(tomb), "id", "anti")
-            sort_key = next(
-                (k for k in ("band", "bkt", "cid") if k in live.columns), None
-            )
-            if sort_key is not None:
-                live = live.repartitionByRange(4, sort_key).sortWithinPartitions(
-                    sort_key
-                )
-            live.write.mode("overwrite").parquet(staging)
-        # every-row-deleted guard: partitionBy on an empty DataFrame
-        # writes NO files; leave one schema-bearing file so later
-        # serves (and the n_rows recount) still infer a schema
-        has_data = any(
-            e.name.startswith(f"{part_key}=") if part_key else
-            e.name.endswith(".parquet")
-            for e in os.scandir(staging)
+    else:
+        # partitioned trees stay partitioned (partition_by wins); a
+        # flat tree is re-range-sorted on its key
+        rw.write(
+            scan.join(F.broadcast(tomb), "id", "anti"),
+            partition_by=part_key,
+            range_key=key,
         )
-        if not has_data:
-            scan.limit(0).coalesce(1).write.mode("append").parquet(staging)
-        for e in os.scandir(path):
-            if not e.name.startswith("_") or e.name == TOMBSTONE_DIR:
-                continue
-            dst = os.path.join(staging, e.name)
-            if e.is_dir() and e.name in fold_sidecars:
-                # bucketed sidecars rewrite only the victim buckets
-                # (hardlink the rest); flat legacy ones rewrite whole
-                _fold_id_sidecar(spark, e.path, dst, tomb)
-            elif e.is_dir() and e.name == "_decisions":
-                # lineage records must stop naming retired ids too
-                _fold_decisions_sidecar(spark, e.path, dst, tomb)
-            elif e.is_dir() and e.name == VERSIONS_DIR:
-                # snapshots are immutable history — carry by hardlink
-                # (a byte copy of every snapshot per fold would be the
-                # O(store) cost snapshots exist to avoid); a fold does
-                # NOT rewrite them: time travel to a pre-fold version
-                # intentionally still sees the folded rows
-                _link_tree(e.path, dst)
-            elif e.is_dir():
-                shutil.copytree(e.path, dst, dirs_exist_ok=True)
-            elif e.is_file():
-                shutil.copy2(e.path, dst)
+    if not rw.has_data():
+        # every row deleted: partitionBy on an empty DataFrame writes
+        # NO files; leave one schema-bearing file so later serves (and
+        # the n_rows recount) still infer a schema
+        rw.write(scan.limit(0), files=1)
+    for name in rw.sidecars:
+        if name == TOMBSTONE_DIR:
+            continue  # folded: dropped atomically with the commit
+        if name == "_decisions":
+            # lineage records must stop naming retired ids too
+            _fold_decisions_sidecar(spark, rw, tomb)
+        elif name in fold_sidecars:
+            _fold_id_sidecar(spark, rw, name, tomb)
+        else:
+            rw.keep(name)
+    rw.commit("fold")
 
-    swap_parquet_rewrite(path, _stage)
     meta = read_store_meta(path) or {}
     if "n_rows" in meta:
         if removed_rows is not None:
             # pruned fold already counted the departing rows — update
-            # by delta instead of a full post-swap recount (the last
+            # by delta instead of a full post-commit recount (the last
             # O(store) step the pruned path removes)
             n_rows = max(0, int(meta["n_rows"]) - removed_rows)
         else:
-            n_rows = int(spark.read.parquet(path).count())
+            n_rows = int(store_data(spark, path).count())
         update_store_meta(path, {"n_rows": n_rows})
     if refresh_hot:
         _refresh_hot_sidecars(spark, path, part_key, affected_vals)
@@ -1628,50 +1739,23 @@ def _refresh_hot_sidecars(
 
 
 def store_layout(path: str) -> tuple[str | None, bool]:
-    """Inspect a store's physical layout: returns ``(key,
-    partitioned)`` where key is the bucketing column (``band`` /
-    ``bkt`` / ``cid``) inferred from the directory tree or the data
+    """Inspect a store's physical layout (either backend): returns
+    ``(key, partitioned)`` where key is the bucketing column (``band``
+    / ``bkt`` / ``cid``) inferred from the logical entries or the data
     schema, and partitioned tells whether the tree uses ``key=…``
     directory partitions (True) or the flat key-sorted dataset
     (False). ``(None, False)`` for a store with no recognized key."""
-    import os
-
-    if is_manifest_store(path):
-        return MB.store_layout(path)
-    for k in ("band", "bkt", "cid"):
-        if any(
-            e.name.startswith(f"{k}=") for e in os.scandir(path) if e.is_dir()
-        ):
-            return k, True
-    try:
-        import pyarrow.parquet as pq
-
-        first = next(
-            (
-                os.path.join(path, f)
-                for f in sorted(os.listdir(path))
-                if f.endswith(".parquet")
-            ),
-            None,
-        )
-        if first is not None:
-            cols = set(pq.read_schema(first).names)
-            for k in ("band", "bkt", "cid"):
-                if k in cols:
-                    return k, False
-    except Exception:
-        pass
-    return None, False
+    return _layout(store_entries(path))
 
 
 @_fenced("migrate_store_layout")
 def migrate_store_layout(
     spark: SparkSession, path: str, partitioned: bool
 ) -> bool:
-    """Rewrite a store between its two physical layouts (crash-safe
-    whole-directory swap, sidecars carried verbatim): the flat
-    key-sorted dataset (right for small corpora — row-group min/max
-    pruning, no directory blowup) and the ``key=…`` directory-
+    """Rewrite a store between its two physical layouts in one
+    :class:`StoreRewrite` (crash-safe, sidecars kept unchanged): the
+    flat key-sorted dataset (right for small corpora — row-group
+    min/max pruning, no directory blowup) and the ``key=…`` directory-
     partitioned tree (right once the store is large — probes become
     partition pruning, appends land in their own directories).
 
@@ -1686,12 +1770,8 @@ def migrate_store_layout(
     if the store was already in the requested layout. Production
     twin: re-clustering a lakehouse table (``OPTIMIZE ZORDER`` /
     rewrite_data_files)."""
-    import os
-    import shutil
-
-    if is_manifest_store(path):
-        return MB.migrate_store_layout_manifest(spark, path, partitioned)
-    key, is_part = store_layout(path)
+    rw = StoreRewrite(path)
+    key, is_part = rw.layout
     if key is None:
         raise ValueError(
             f"store at {path} has no recognized bucketing column "
@@ -1699,39 +1779,13 @@ def migrate_store_layout(
         )
     if is_part == partitioned:
         return False
-
-    def _stage(staging: str) -> None:
-        os.makedirs(staging, exist_ok=True)
-        rows = spark.read.parquet(path)
-        if partitioned:
-            (
-                rows.repartition(F.col(key))
-                .write.partitionBy(key)
-                .parquet(os.path.join(staging, "_data.tmp"))
-            )
-            tmp = os.path.join(staging, "_data.tmp")
-            for e in os.scandir(tmp):
-                shutil.move(e.path, os.path.join(staging, e.name))
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            (
-                rows.repartitionByRange(4, key)
-                .sortWithinPartitions(key)
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-        for e in os.scandir(path):
-            if not e.name.startswith("_"):
-                continue
-            dst = os.path.join(staging, e.name)
-            if e.is_dir() and e.name == VERSIONS_DIR:
-                _link_tree(e.path, dst)  # immutable history: O(metadata)
-            elif e.is_dir():
-                shutil.copytree(e.path, dst, dirs_exist_ok=True)
-            elif e.is_file():
-                shutil.copy2(e.path, dst)
-
-    swap_parquet_rewrite(path, _stage)
+    rows = store_data(spark, path)
+    if partitioned:
+        rw.write(rows, partition_by=key)
+    else:
+        rw.write(rows, range_key=key)
+    rw.keep(*rw.sidecars)
+    rw.commit("migrate")
     return True
 
 

@@ -17,8 +17,19 @@ backends behind one API (`sources.files` dispatches per store):
   NEW manifest and commits by atomically replacing the pointer —
   snapshot = pin a generation (one small JSON write, zero data I/O),
   rollback = point a new manifest at an old generation's file list,
-  fold/compact = write replacement files and REFERENCE the untouched
-  ones, expiry = manifest-diff garbage collection.
+  expiry = manifest-diff garbage collection.
+
+Maintenance rewrites (tombstone fold, layout migration, compaction)
+are not written twice: each is ONE backend-agnostic body in
+``sources.files`` written against ``files.StoreRewrite``. The caller
+writes replacement files under a fresh base that mirrors the logical
+layout and names the entries it keeps; on a manifest store the base is
+the next generation prefix, kept entries keep their file REFERENCES,
+and :func:`_commit` + :func:`gc_store` finish the rewrite (posix
+hardlinks the kept entries and swaps the directory instead). This
+module keeps only what is manifest-specific: the commit protocol,
+versions and GC, and the ``_decisions`` re-grouping of
+:func:`_compact_decisions_manifest`.
 
 Everything here reduces to five object-store primitives — atomic
 single-key put, get, list, delete, exists (:class:`LocalObjectFS`) —
@@ -394,8 +405,6 @@ def store_put(
     coalesce: int | None = None,
     range_key: str | None = None,
     n_range_files: int | None = None,
-    keep_sidecars: bool = False,
-    files_per_partition: int | None = None,
 ) -> int:
     """Write a batch into a manifest store: new parquet files under a
     fresh generation prefix, then one manifest commit. ``mode``
@@ -405,9 +414,8 @@ def store_put(
     is always into an empty prefix. Shapes mirror the posix writers
     1:1 (partitioned / range-sorted flat / coalesced sidecar), so
     plans and row-group layouts are identical across backends.
-    ``files_per_partition`` > 1 salts the partitioned repartition so
-    each Hive dir comes out with up to that many files (the posix
-    ``compact_store`` honors its target the same way)."""
+    Maintenance rewrites that replace the data tree but keep sidecars
+    go through ``files.StoreRewrite`` instead."""
     root, pin = split_pin(path)
     if pin is not None:
         raise ValueError(f"cannot write to a pinned snapshot handle {path}")
@@ -416,18 +424,10 @@ def store_put(
     target = os.path.join(gen_dir, sub) if sub else gen_dir
     w = df
     if partition_by is not None:
-        if files_per_partition and files_per_partition > 1:
-            # exactly N tasks, rows row-hash-spread across them: each
-            # task writes one file per key it holds → up to N files
-            # per Hive dir (the posix compact_parquet target honored)
-            w = w.repartition(
-                files_per_partition, F.xxhash64(*[F.col(c) for c in df.columns])
-            )
-        else:
-            # one task per key: each Hive dir comes out as one file
-            w = w.repartition(F.col(partition_by))
+        # one task per key: each Hive dir comes out as one file
         (
-            w.write.mode("overwrite")
+            w.repartition(F.col(partition_by))
+            .write.mode("overwrite")
             .partitionBy(partition_by)
             .parquet(target)
         )
@@ -447,18 +447,12 @@ def store_put(
     parent_files = read_manifest(root, cur)["files"]
     if mode == "append":
         keep = parent_files
-    elif sub is None and not keep_sidecars:
+    elif sub is None:
         # full-data overwrite = full rebuild: drop EVERY reference,
         # sidecars included — posix parity (Spark's overwrite clears
         # the whole tree there). A rebuilt store that silently kept
         # its old _tombstones would hide ids the new corpus contains.
         keep = []
-    elif sub is None:
-        # keep_sidecars=True: an INTERNAL data-only rewrite (compact /
-        # layout migration) — replace the data tree, carry every
-        # sidecar + meta reference, exactly like the posix staged
-        # swaps that copy sidecars into staging verbatim
-        keep = [f for f in parent_files if _lp(f).split("/", 1)[0].startswith("_")]
     else:
         keep = [f for f in parent_files if not _covered(_lp(f), sub)]
     return _commit(root, keep + new_files, f"{mode}:{sub or 'data'}", based_on=cur)
@@ -614,354 +608,9 @@ def gc_store(root: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Layout inspection
+# Maintenance: compact (fold and layout migration are files.StoreRewrite
+# bodies shared with posix)
 # ---------------------------------------------------------------------------
-
-
-def data_partition_key(path: str) -> str | None:
-    """The Hive partition key of the data tree (``band``/``bkt``/
-    ``cid``…) read off the manifest's logical paths, or None for a
-    flat layout."""
-    root, pin = split_pin(path)
-    for f in manifest_files(root, None, _resolve_gen(root, pin)):
-        seg = _lp(f).split("/", 1)[0]
-        if "=" in seg:
-            return seg.split("=", 1)[0]
-    return None
-
-
-def data_partition_dirs(path: str) -> set[str]:
-    """Logical partition-dir names (``band=0`` …) of the data tree."""
-    root, pin = split_pin(path)
-    out = set()
-    for f in manifest_files(root, None, _resolve_gen(root, pin)):
-        seg = _lp(f).split("/", 1)[0]
-        if "=" in seg:
-            out.add(seg)
-    return out
-
-
-def store_layout(path: str) -> tuple[str | None, bool]:
-    """Manifest twin of ``files.store_layout``: (key, partitioned)
-    from the manifest's logical paths, falling back to the first data
-    file's schema for flat key-sorted layouts."""
-    key = data_partition_key(path)
-    if key in ("band", "bkt", "cid"):
-        return key, True
-    root, pin = split_pin(path)
-    files = [
-        f
-        for f in manifest_files(root, None, _resolve_gen(root, pin))
-        if f.endswith(".parquet")
-    ]
-    if files:
-        try:
-            import pyarrow.parquet as pq
-
-            cols = set(pq.read_schema(os.path.join(root, files[0])).names)
-            for k in ("band", "bkt", "cid"):
-                if k in cols:
-                    return k, False
-        except Exception:
-            pass
-    return None, False
-
-
-# ---------------------------------------------------------------------------
-# Maintenance: fold / compact / migrate
-# ---------------------------------------------------------------------------
-
-
-def _scrub_decisions_manifest(
-    spark: SparkSession,
-    root: str,
-    gen_dir: str,
-    refs: list[str],
-    tomb: DataFrame,
-) -> tuple[list[str], list[str]]:
-    """Manifest twin of ``files._fold_decisions_sidecar``: retire
-    tombstoned ids from the streaming sinks' ``_decisions`` lineage
-    log. Leaf-pruned — one column-pruned scan tagged with
-    ``input_file_name`` finds the ``run=/epoch=`` leaves that actually
-    reference a victim (as subject id or ``matched_id`` pointer); only
-    those are rewritten as NEW files under the fold's generation,
-    every untouched leaf's references carry verbatim (zero data I/O).
-    Subject rows DROP, ``matched_id`` pointers NULL — same GDPR
-    contract as the posix scrub. Returns (kept refs, new refs)."""
-    leaves: dict[str, list[str]] = {}
-    for f in refs:
-        leaves.setdefault(os.path.dirname(_lp(f)), []).append(f)
-    df = store_read(spark, root, "_decisions")
-    idc = (
-        next((c for c in ("doc_id", "vec_id", "id") if c in df.columns), None)
-        if df is not None
-        else None
-    )
-    ref_cols = [
-        c
-        for c in (idc, "matched_id")
-        if c and c in (df.columns if df is not None else [])
-    ]
-    if not ref_cols:
-        return refs, []
-
-    from urllib.parse import unquote, urlparse
-
-    hits = (
-        df.select(
-            F.input_file_name().alias("_f"),
-            F.explode(F.array(*[F.col(c) for c in ref_cols])).alias("id"),
-        )
-        .join(F.broadcast(tomb), "id", "semi")
-        .select("_f")
-        .distinct()
-        .collect()
-    )
-    affected: set[str] = set()
-    for r in hits:
-        p = r["_f"]
-        if p.startswith("file:"):
-            p = unquote(urlparse(p).path)
-        affected.add(os.path.dirname(_lp(os.path.relpath(p, root))))
-
-    keep: list[str] = []
-    new_files: list[str] = []
-    for leaf, leaf_refs in sorted(leaves.items()):
-        if leaf not in affected:
-            keep += leaf_refs
-            continue
-        # leaf read (explicit files, inferred basePath = the leaf dir):
-        # no partition columns, matching the posix leaf-file read
-        ldf = spark.read.parquet(*[os.path.join(root, f) for f in leaf_refs])
-        out = ldf
-        if idc in ldf.columns:
-            out = out.join(
-                F.broadcast(tomb.withColumnRenamed("id", idc)), idc, "anti"
-            )
-        if "matched_id" in ldf.columns:
-            vt = tomb.select(
-                F.col("id").alias("matched_id"), F.lit(True).alias("_v")
-            )
-            out = (
-                out.join(F.broadcast(vt), "matched_id", "left")
-                .withColumn(
-                    "matched_id",
-                    F.when(F.col("_v").isNull(), F.col("matched_id")),
-                )
-                .drop("_v")
-            )
-        target = os.path.join(gen_dir, leaf)
-        # coalesce(1): an emptied epoch leaf still holds one
-        # schema-bearing file for later reads of the log
-        out.select(*ldf.columns).coalesce(1).write.mode("overwrite").parquet(
-            target
-        )
-        new_files += _list_new_parquet(root, target)
-    return keep, new_files
-
-
-def fold_tombstones_manifest(
-    spark: SparkSession,
-    path: str,
-    fold_sidecars: tuple[str, ...] = ("_fingerprints",),
-    prune: bool | str = "auto",
-    refresh_hot: bool = True,
-) -> int:
-    """Manifest twin of ``files.fold_tombstones`` — same pruning
-    logic, object-store-safe mechanics: victim partitions are
-    rewritten as NEW files under a fresh generation, untouched
-    partitions are carried BY REFERENCE (their manifest entries copy
-    verbatim — zero data I/O, the manifest equivalent of the posix
-    hardlink carry), the ``_tombstones`` entries are simply not
-    listed, and ONE pointer put commits everything. Old files are
-    garbage-collected after the commit unless a snapshot pins them
-    (time travel to a pre-fold version intentionally still sees the
-    folded rows). ``prune`` semantics match the posix path: "auto"
-    prunes on bkt/cid trees (never band — every band partition holds
-    every victim by construction), True forces it, False forces the
-    full rewrite."""
-    from tiki_data_pipeline_spark.sources import files as FL
-
-    root, pin = split_pin(path)
-    if pin is not None:
-        raise ValueError(f"cannot fold a pinned snapshot handle {path}")
-    if os.path.isdir(os.path.join(root, "_decisions")):
-        # a physical _decisions dir the manifest never listed (written
-        # by a pre-dispatch streaming path): folding would succeed
-        # WITHOUT scrubbing it — a silent takedown-lineage leak
-        raise ValueError(
-            f"manifest store {root} carries a rogue physical _decisions "
-            "directory outside the manifest; migrate it into manifest "
-            "entries (re-run the stream on the fixed sink, or commit the "
-            "files) before folding tombstones"
-        )
-    tomb_raw = store_read(spark, root, FL.TOMBSTONE_DIR)
-    if tomb_raw is None:
-        return 0
-    tomb = tomb_raw.select("id").distinct()
-    n_tomb = tomb.count()
-    key = data_partition_key(root)
-    part_key = key if key in ("band", "bkt", "cid") else None
-    scan = store_read(spark, root, None)
-    if scan is None:
-        scan = tomb.limit(0)
-
-    affected_vals: list | None = None
-    removed_rows: int | None = None
-    do_prune = prune is True or (prune == "auto" and part_key != "band")
-    actual = data_partition_dirs(root)
-    if part_key is not None and do_prune:
-        aff = (
-            scan.join(F.broadcast(tomb), "id", "semi")
-            .groupBy(part_key)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        vals = [r[part_key] for r in aff]
-        expected = {f"{part_key}={v}" for v in vals}
-        # same aliased-dir 1:1 guard as the posix fold: names must
-        # round-trip to distinct parsed values or pruning is unprovable
-        if (
-            all(v is not None for v in vals)
-            and expected <= actual
-            and len(actual) == scan.select(part_key).distinct().count()
-        ):
-            affected_vals = vals
-            removed_rows = sum(r["_n"] for r in aff)
-
-    cur = current_gen(root)
-    gen_dir = os.path.join(root, GEN_DIR, f"{cur + 1:08d}")
-    parent_files = read_manifest(root, cur)["files"]
-    keep: list[str] = []
-    new_files: list[str] = []
-
-    # ---- data tree ----
-    if part_key is not None and affected_vals is not None:
-        untouched = actual - {f"{part_key}={v}" for v in affected_vals}
-        keep += [
-            f
-            for f in parent_files
-            if _lp(f).split("/", 1)[0] in untouched
-        ]
-        if affected_vals:
-            live = scan.filter(F.col(part_key).isin(affected_vals)).join(
-                F.broadcast(tomb), "id", "anti"
-            )
-            (
-                live.repartition(F.col(part_key))
-                .write.mode("overwrite")
-                .partitionBy(part_key)
-                .parquet(gen_dir)
-            )
-            new_files += _list_new_parquet(root, gen_dir)
-    elif part_key is not None:
-        live = scan.join(F.broadcast(tomb), "id", "anti")
-        (
-            live.repartition(F.col(part_key))
-            .write.mode("overwrite")
-            .partitionBy(part_key)
-            .parquet(gen_dir)
-        )
-        new_files += _list_new_parquet(root, gen_dir)
-    else:
-        live = scan.join(F.broadcast(tomb), "id", "anti")
-        sort_key = next(
-            (k for k in ("band", "bkt", "cid") if k in live.columns), None
-        )
-        if sort_key is not None:
-            live = live.repartitionByRange(4, sort_key).sortWithinPartitions(
-                sort_key
-            )
-        live.write.mode("overwrite").parquet(gen_dir)
-        new_files += _list_new_parquet(root, gen_dir)
-    if not keep and not new_files:
-        # every row deleted: keep one schema-bearing file for later reads
-        scan.limit(0).coalesce(1).write.mode("overwrite").parquet(gen_dir)
-        new_files += _list_new_parquet(root, gen_dir)
-
-    # ---- sidecars ----
-    tops = {
-        _lp(f).split("/", 1)[0]
-        for f in parent_files
-        if _lp(f).split("/", 1)[0].startswith("_")
-    }
-    for name in sorted(tops):
-        if name == FL.TOMBSTONE_DIR:
-            continue  # folded: simply not listed — atomic with the commit
-        refs = [f for f in parent_files if _covered(_lp(f), name)]
-        if name == "_decisions":
-            # lineage records must stop naming retired ids too
-            k, nf = _scrub_decisions_manifest(spark, root, gen_dir, refs, tomb)
-            keep += k
-            new_files += nf
-            continue
-        if name in fold_sidecars and refs:
-            bucketed = any(
-                _lp(f).startswith(f"{name}/fpb=") for f in refs
-            )
-            src = store_read(spark, root, name)
-            tgt = os.path.join(gen_dir, name)
-            if bucketed:
-                affected_b = sorted(
-                    r["b"]
-                    for r in tomb.select(
-                        FL.fp_bucket(F.col("id")).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                )
-                actual_b = {
-                    _lp(f).split("/")[1]
-                    for f in refs
-                    if "/" in _lp(f) and _lp(f).split("/")[1].startswith("fpb=")
-                }
-                expected_b = {f"fpb={b}" for b in affected_b}
-                if (
-                    expected_b <= actual_b
-                    and len(actual_b)
-                    == src.select("fpb").distinct().count()
-                ):
-                    keep += [
-                        f
-                        for f in refs
-                        if _lp(f).split("/")[1] in (actual_b - expected_b)
-                    ]
-                    hit = expected_b & actual_b
-                    if hit:
-                        (
-                            src.filter(F.col("fpb").isin(affected_b))
-                            .join(F.broadcast(tomb), "id", "anti")
-                            .repartition(F.col("fpb"))
-                            .write.mode("overwrite")
-                            .partitionBy("fpb")
-                            .parquet(tgt)
-                        )
-                        new_files += _list_new_parquet(root, tgt)
-                    continue
-            # flat (or unprovable bucketing): full anti-join rewrite
-            (
-                src.join(F.broadcast(tomb), "id", "anti")
-                .write.mode("overwrite")
-                .parquet(tgt)
-            )
-            new_files += _list_new_parquet(root, tgt)
-        else:
-            keep += refs  # hot sidecars / meta / layout: carried by ref
-
-    _commit(root, keep + new_files, "fold", based_on=cur)
-    gc_store(root)
-
-    meta = FL.read_store_meta(root) or {}
-    if "n_rows" in meta:
-        if removed_rows is not None:
-            n_rows = max(0, int(meta["n_rows"]) - removed_rows)
-        else:
-            df = store_read(spark, root, None)
-            n_rows = int(df.count()) if df is not None else 0
-        FL.update_store_meta(root, {"n_rows": n_rows})
-    if refresh_hot:
-        FL._refresh_hot_sidecars(spark, root, part_key, affected_vals)
-    return n_tomb
 
 
 def compact_store_manifest(
@@ -970,71 +619,48 @@ def compact_store_manifest(
     target_files_per_partition: int = 1,
     fold_deletes: bool = True,
 ) -> int:
-    """Manifest twin of ``files.compact_store``: fold pending deletes,
-    then rewrite the data tree (and any fpb-bucketed ``_fingerprints``
-    sidecar) into one fresh generation — partitioned trees come out
-    with one file per partition (the hash repartition puts each key in
-    exactly one task), flat trees re-range-sort on their key. Commits
-    once, garbage-collects after. Returns the number of logical
-    directories rewritten."""
+    """Manifest branch of ``files.compact_store``: fold pending deletes,
+    then rewrite the data tree (and the ``_fingerprints`` sidecar) in
+    ONE ``files.StoreRewrite`` — partitioned trees come out with up to
+    ``target_files_per_partition`` files per partition, flat trees
+    re-range-sort on their key, every other sidecar keeps its
+    references — and re-group a streaming ``_decisions`` log
+    (:func:`_compact_decisions_manifest`). Garbage-collects after.
+    Returns the number of logical directories rewritten."""
     from tiki_data_pipeline_spark.sources import files as FL
 
     root, pin = split_pin(path)
     if pin is not None:
         raise ValueError(f"cannot compact a pinned snapshot handle {path}")
     if fold_deletes:
-        fold_tombstones_manifest(spark, root)
-    key, partitioned = store_layout(root)
+        FL.fold_tombstones(spark, root)
+    rw = FL.StoreRewrite(root)
+    key, partitioned = rw.layout
+    target = max(1, target_files_per_partition)
     count = 0
-    if partitioned and key is not None:
-        n_dirs = len(data_partition_dirs(root))
-        store_put(
-            store_read(spark, root, None),
-            root,
-            "overwrite",
-            partition_by=key,
-            keep_sidecars=True,
-            files_per_partition=target_files_per_partition,
-        )
-        count += n_dirs
-    elif key is not None:
-        store_put(
-            store_read(spark, root, None),
-            root,
-            "overwrite",
-            range_key=key,
-            n_range_files=max(1, target_files_per_partition),
-            keep_sidecars=True,
-        )
+    if key is None:
+        rw.keep(*rw.data_entries)
+    elif partitioned:
+        rw.write(store_read(spark, root, None), partition_by=key, files=target)
+        count += len(rw.data_entries)
+    else:
+        rw.write(store_read(spark, root, None), range_key=key, files=target)
         count += 1
-    if FL.store_sub_partitioned(root, "_fingerprints", "fpb"):
-        fps = store_read(spark, root, "_fingerprints")
-        n_dirs = len(
-            {
-                _lp(f).split("/")[1]
-                for f in manifest_files(root, "_fingerprints")
-                if "/" in _lp(f)
-            }
-        )
-        store_put(
-            fps,
-            root,
-            "overwrite",
-            partition_by="fpb",
-            sub="_fingerprints",
-            files_per_partition=target_files_per_partition,
-        )
-        count += n_dirs
-    elif FL.store_sub_exists(root, "_fingerprints"):
-        fps = store_read(spark, root, "_fingerprints")
-        store_put(
-            fps,
-            root,
-            "overwrite",
-            sub="_fingerprints",
-            coalesce=max(1, target_files_per_partition),
-        )
-        count += 1
+    fps = {
+        lp.split("/")[1]
+        for lp in rw.entries
+        if lp.startswith("_fingerprints/")
+    }
+    if fps:
+        src = store_read(spark, root, "_fingerprints")
+        if any(b.startswith("fpb=") for b in fps):
+            rw.write(src, "_fingerprints", partition_by="fpb", files=target)
+            count += len(fps)
+        else:
+            rw.write(src, "_fingerprints", files=target)
+            count += 1
+    rw.keep(*(s for s in rw.sidecars if s != "_fingerprints"))
+    rw.commit("compact")
     count += _compact_decisions_manifest(spark, root)
     gc_store(root)
     return count
@@ -1077,30 +703,3 @@ def _compact_decisions_manifest(spark: SparkSession, root: str) -> int:
     keep = [f for f in parent_files if not _covered(_lp(f), "_decisions")]
     _commit(root, keep + new_files, "compact:_decisions", based_on=cur)
     return 1
-
-
-def migrate_store_layout_manifest(
-    spark: SparkSession, path: str, partitioned: bool
-) -> bool:
-    """Manifest twin of ``files.migrate_store_layout``: one rewrite of
-    the data tree into the other physical layout, one commit, GC.
-    Sidecars carry by reference."""
-    root, _ = split_pin(path)
-    key, is_part = store_layout(root)
-    if key is None:
-        raise ValueError(
-            f"store at {root} has no recognized bucketing column "
-            "(band/bkt/cid) — cannot migrate layout"
-        )
-    if is_part == partitioned:
-        return False
-    rows = store_read(spark, root, None)
-    if partitioned:
-        store_put(rows, root, "overwrite", partition_by=key, keep_sidecars=True)
-    else:
-        store_put(
-            rows, root, "overwrite", range_key=key, n_range_files=4,
-            keep_sidecars=True,
-        )
-    gc_store(root)
-    return True

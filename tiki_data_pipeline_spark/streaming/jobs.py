@@ -309,8 +309,8 @@ def _epoch_decisions(
     (one atomic pointer commit replaces the epoch's own prior
     attempt, the object-store twin of the posix dynamic partition
     overwrite), reads resolve through the manifest, and the takedown
-    fold scrubs the log leaf-pruned like the posix sidecar
-    (``store_backend._scrub_decisions_manifest``). A rogue PHYSICAL
+    fold scrubs the log leaf-pruned on either backend
+    (``files._fold_decisions_sidecar``). A rogue PHYSICAL
     ``_decisions`` directory under a manifest root (written by a
     pre-dispatch code path) fails loudly: the manifest never lists
     it, so folds would silently skip the lineage scrub.
