@@ -53,6 +53,39 @@ def test_repetition_flags(spark):
     assert out[2]["n_distinct_tokens"] == out[2]["n_tokens"] == 5
 
 
+def test_repetition_filter_short_and_empty_docs(spark):
+    """Docs with fewer than 2 tokens get no stats row, in the plain
+    select and in the corpus pipeline's anti-join, where the flag filter
+    is pushed below the ``size >= 2`` guard and the bigram expression
+    may be evaluated on them first (it must not index out of range)."""
+    long_rep = " ".join(["spam"] * 200)
+    docs = _docs(
+        spark,
+        [
+            (1, None, "en"),
+            (2, "", "en"),
+            (3, "   ", "en"),
+            (4, "one", "en"),
+            (5, "a a", "en"),
+            (6, long_rep, "en"),
+            (7, "the quick brown fox jumps", "en"),
+        ],
+    )
+    rep = CU.repetition_stats(docs)
+    out = {r["doc_id"]: r.asDict() for r in rep.collect()}
+    assert set(out) == {5, 6, 7}
+    assert (out[5]["n_tokens"], out[5]["n_distinct_tokens"]) == (2, 1)
+    assert out[5]["n_bigrams"] == out[5]["top_bigram_count"] == 1
+    assert out[5]["flag_repetitive"] == 1
+    assert out[6]["n_bigrams"] == out[6]["top_bigram_count"] == 199
+    assert out[6]["flag_repetitive"] == 1
+    assert out[7]["flag_repetitive"] == 0
+
+    flagged = rep.filter(F.col("flag_repetitive") == 1).select("doc_id")
+    kept = docs.join(flagged, "doc_id", "left_anti")
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2, 3, 4, 7]
+
+
 def test_stratified_sample_rate_bounds_and_determinism(spark):
     rows = [(i, f"doc number {i}", "en" if i % 2 else "fr") for i in range(200)]
     docs = _docs(spark, rows)

@@ -7,7 +7,12 @@ that is invisible at fixture scale and fatal at 100 TB."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from tests.plan_guard import assert_no_lambda_resplit
+from tiki_data_pipeline_spark.io import load_table
+from tiki_data_pipeline_spark.operators import curation as CU
+from tiki_data_pipeline_spark.operators import dedup as DD
 from tiki_data_pipeline_spark.plans.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -224,3 +229,49 @@ def test_no_expensive_expression_inside_filter(spark, name):
         and any(m in line for m in EXPENSIVE_FILTER_MARKERS)
     ]
     assert bad == [], f"{name}: expensive work inlined into a Filter: {bad}"
+
+
+def _docs(spark):
+    return load_table(spark, SF, "documents")
+
+
+def _pipeline_repetition(spark):
+    """The corpus pipeline's repetition stage: an anti-join against the
+    flagged ids, so the flag filter is pushed below the projections."""
+    docs = _docs(spark)
+    flagged = CU.repetition_stats(docs).filter(F.col("flag_repetitive") == 1)
+    return docs.join(flagged.select("doc_id"), "doc_id", "left_anti")
+
+
+def _dsir_bucketize(hash_mode):
+    def build(spark):
+        prep, buckets = CU._dsir_featurizer(hash_mode, 1024, "text")
+        return prep(_docs(spark), F.col("doc_id")).select("doc_id", buckets())
+
+    return build
+
+
+# Token-array operators whose lambdas must never re-tokenize the text
+# per element (tests/plan_guard.py). The filtered and anti-join forms
+# matter most: a filter on a derived column is pushed below the
+# projection that materialized the token array and inlines its split.
+NO_LAMBDA_RESPLIT = {
+    "pipeline_repetition": _pipeline_repetition,
+    "doc_repetition_filter": lambda s: QUERIES["doc_repetition_filter"](s, SF),
+    "corpus_curation_pipeline": (
+        lambda s: QUERIES["corpus_curation_pipeline"](s, SF)
+    ),
+    "dsir_bucketize_md5": _dsir_bucketize("md5"),
+    "dsir_bucketize_xxhash64": _dsir_bucketize("xxhash64"),
+    "filtered_word_entropy": lambda s: CU.word_entropy(_docs(s)).filter(
+        F.col("entropy_bits") < 3
+    ),
+    "filtered_shingles": lambda s: DD.shingles(_docs(s)).filter(
+        F.col("shingle").startswith("a")
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(NO_LAMBDA_RESPLIT))
+def test_no_per_element_retokenize(spark, name):
+    assert_no_lambda_resplit(NO_LAMBDA_RESPLIT[name](spark))

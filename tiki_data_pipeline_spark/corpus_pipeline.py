@@ -90,8 +90,9 @@ class CorpusPipeline:
         hashed-n-gram distribution matches the target slice
         ``docs.filter(dsir_target_pred)``. The PIPELINE default is
         ``dsir_hash="xxhash64"`` — the production mode (pure JVM
-        codegen, no md5 hex render/parse; measured 5.7× faster
-        featurize at 500k docs and 463→25.9 s at 5M) — while the
+        codegen, no md5 hex render/parse; measured 2.3× faster
+        than md5 for 50k docs on 4 CPUs, see
+        ``curation.dsir_log_weights``) — while the
         registry/oracle queries keep the cross-engine-checkable md5
         family; the two modes' weight distributions agree
         statistically (pinned by

@@ -89,6 +89,24 @@ def contamination_stats(
     )
 
 
+def _adjacent_pairs(arr: Column, f) -> Column:
+    """``[f(arr[i], arr[i+1]) for i]`` built from two slices of ``arr``.
+
+    The lambda reads only its own parameters. The obvious
+    ``transform(sequence(1, n-1), i -> f(element_at(arr, i), ...))``
+    reads ``arr`` from inside the lambda, and when a filter on a
+    derived column is pushed through the projection that materialized
+    ``arr``, the optimizer inlines ``arr``'s defining expression (a
+    regex ``split`` of the whole text) into the lambda: one full
+    re-tokenize per element. The slices are plain arguments, so
+    however ``arr`` is inlined each row evaluates it O(1) times. A
+    1-element array yields ``[]`` (no out-of-range ``element_at`` for
+    a hoisted subexpression to trip on) and NULL yields NULL; ``arr``
+    must not be empty (a ``split`` never is)."""
+    n = F.size(arr)
+    return F.zip_with(F.slice(arr, 1, n - 1), F.slice(arr, 2, n - 1), f)
+
+
 def repetition_stats(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -104,14 +122,18 @@ def repetition_stats(
     bigrams — integer comparisons; the count≥2 guard keeps short
     all-distinct documents (where 1 of 4 bigrams is already 25%)
     from tripping on noise.
+
+    Bigrams come from :func:`_adjacent_pairs`. A filter on
+    ``flag_repetitive`` (the corpus pipeline's anti-join) is pushed
+    below both projections with ``toks`` inlined, so any lambda that
+    read ``toks`` would re-split the text once per bigram, O(tokens²)
+    per row; and the bigram expression may be hoisted ahead of the
+    ``size >= 2`` guard, so it must be safe on empty and 1-token docs.
     """
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     base = docs.select(id_col, toks.alias("toks")).filter(F.size("toks") >= 2)
     t = F.col("toks")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 1),
-        lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
-    )
+    grams = _adjacent_pairs(t, lambda a, b: F.concat_ws(" ", a, b))
     base = base.withColumn("grams", grams)
     g = F.col("grams")
     # Most-frequent-bigram count = longest equal run in the SORTED gram
@@ -270,20 +292,24 @@ def word_entropy(
     text signal: H = log2(n) - sum(c·log2 c)/n over token counts.
 
     Computed per-row from the token array (narrow, no shuffle); the
-    distinct-token list is SORTED before summation so Spark and the
+    counts are summed in SORTED distinct-token order so Spark and the
     oracle add the identical float sequence, then rounded to 4dp.
+
+    The counts are the run lengths of the sorted token array: run
+    boundaries are where adjacent sorted tokens differ, and a count is
+    the gap between consecutive boundaries. Every lambda reads only its
+    own parameters, so a filter on ``entropy_bits`` that the optimizer
+    pushes below the projection (inlining the ``split`` into the plan)
+    still tokenizes each row O(1) times; the cost is one O(n log n)
+    sort, not an O(vocab·n) per-distinct-token scan.
     """
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     base = docs.select(id_col, toks.alias("toks")).filter(F.size("toks") >= 1)
     t = F.col("toks")
-    # O(vocab·n) distinct-scan. A sorted-run fold is O(n log n) but
-    # measured ~2.5× SLOWER here: interpreted higher-order structs cost
-    # more per element than vocab·n simple comparisons at small vocab.
-    # Revisit only for corpora whose per-doc vocab grows with doc length.
-    counts = F.transform(
-        F.array_sort(F.array_distinct(t)),
-        lambda g: F.size(F.filter(t, lambda x: x == g)).cast("double"),
-    )
+    breaks = _adjacent_pairs(F.array_sort(t), lambda a, b: a != b)
+    edges = F.concat(F.array(F.lit(True)), breaks, F.array(F.lit(True)))
+    bounds = F.array_compact(F.transform(edges, lambda e, i: F.when(e, i)))
+    counts = _adjacent_pairs(bounds, lambda a, b: (b - a).cast("double"))
     s = F.aggregate(
         counts,
         F.lit(0.0),
@@ -362,19 +388,88 @@ def redact_pii(
 
 def _dsir_grams(text: Column) -> Column:
     """Unigrams + bigrams of the whitespace-lowered token stream.
-    The token array is materialized by callers BEFORE this expression
-    feeds higher-order functions (NOTES invariant)."""
+    ``toks`` is an inline ``split``, not a column: the bigrams come
+    from :func:`_adjacent_pairs`, whose lambda never reads ``toks``,
+    so each row splits its text O(1) times."""
     toks = F.split(F.lower(F.trim(text)), r"\s+")
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat(
-                F.element_at(toks, i), F.lit("_"), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = _adjacent_pairs(toks, lambda a, b: F.concat(a, F.lit("_"), b))
     return F.concat(toks, bigrams)
+
+
+def _dsir_featurizer(hash: str, n_buckets: int, text_col: str):
+    """DSIR featurization for one ``hash`` mode as ``(prep, buckets)``:
+    ``prep(d, *cols)`` is the PREP projection (``cols``, ``_has_text``
+    and what the bucket expression reads, materialized so nothing
+    expensive is re-evaluated per element) and ``buckets()`` is the
+    per-doc bucket-array EXPRESSION over prep's output.
+
+    They are split because the two consumers in
+    :func:`dsir_log_weights` need different shapes: bucketize
+    materializes ``_bkts`` as a column (the raw corpus is
+    localCheckpointed right after, so its explode reads arrays from
+    memory), while the TARGET distribution explodes the expression
+    directly — explode(<attribute>) trips InferFiltersFromGenerate,
+    which inlines the full featurize into a size()>0 filter and pushes
+    it below the fan-out repartition: the whole target corpus then
+    hashes on ONE core (the same trap the span family documents in
+    dedup.py)."""
+    if hash == "md5":
+        def prep(d: DataFrame, *cols) -> DataFrame:
+            return d.select(
+                *cols,
+                F.col(text_col).isNotNull().alias("_has_text"),
+                F.coalesce(F.col(text_col), F.lit("")).alias("_txt"),
+            )
+
+        def buckets() -> Column:
+            return F.transform(
+                _dsir_grams(F.col("_txt")),
+                # int, not bigint: buckets < n_buckets, and the
+                # materialized arrays are the featurize pass's whole
+                # memory footprint — half-width halves the spill
+                lambda g: F.pmod(
+                    md5_h56(g, "dsir"), F.lit(n_buckets)
+                ).cast("int"),
+            )
+    elif hash == "xxhash64":
+        # The fast mode avoids materializing GRAM STRINGS entirely:
+        # each token is xxhash64'd once (salted), unigram buckets are
+        # pmod of that long, and bigram buckets hash the two adjacent
+        # token LONGS natively (xxhash64 is variadic over columns) —
+        # no per-bigram string concat, half the string hashing, and
+        # no overflow-prone arithmetic (ANSI mode would throw on a
+        # long multiply). The token-hash array is materialized as a
+        # real column first so the slices the bigram pairs are built
+        # from read it instead of re-evaluating the hash transform.
+        def prep(d: DataFrame, *cols) -> DataFrame:
+            toks = F.split(
+                F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
+                r"\s+",
+            )
+            return d.select(
+                *cols,
+                F.col(text_col).isNotNull().alias("_has_text"),
+                F.transform(
+                    toks,
+                    lambda t: F.xxhash64(F.concat(F.lit("dsir:"), t)),
+                ).alias("_th"),
+            )
+
+        def buckets() -> Column:
+            th = F.col("_th")
+            uni = F.transform(
+                th, lambda h: F.pmod(h, F.lit(n_buckets)).cast("int")
+            )
+            big = _adjacent_pairs(
+                th,
+                lambda a, b: F.pmod(F.xxhash64(a, b), F.lit(n_buckets)).cast(
+                    "int"
+                ),
+            )
+            return F.concat(uni, big)
+    else:
+        raise ValueError(f"unknown DSIR hash mode: {hash!r}")
+    return prep, buckets
 
 
 def dsir_log_weights(
@@ -397,10 +492,11 @@ def dsir_log_weights(
     ``"xxhash64"`` is the production-scale mode: tokens are hashed
     once with the variadic JVM builtin and bigram buckets hash the
     two adjacent token LONGS — no bigram string is ever materialized
-    and no md5 hex render/parse runs. Measured 5.7× faster at 500k
-    docs (a first xxhash64-over-gram-STRINGS variant was only ~5%
-    faster: the dominant featurize cost is building the gram
-    strings, not the hash function). Bucket assignments differ
+    and no md5 hex render/parse runs. Measured 2.3× faster than md5
+    (6.2 → 2.7 s for 50k docs on 4 CPUs). The 5.7× (500k docs) once
+    quoted here was taken while md5 mode re-split the whole text
+    once per bigram; at 50k docs that trap made md5 32 s, 11.7× the
+    xxhash64 time. Bucket assignments differ
     between modes (both uniform), so DSIR's distribution estimates
     agree statistically, not bitwise: weights stores pin the mode in
     meta and consumers must not mix them."""
@@ -418,82 +514,9 @@ def dsir_log_weights(
     # differs, which the round-to-4 contract already absorbs.
     # (The previous shape aggregated (id, bucket, cnt) bags — a
     # corpus-sized exchange that was 10× the cost of the math.)
-    # Each mode splits into a PREP projection (what the bucket
-    # expression reads — materialized so nothing expensive is
-    # re-evaluated per element) and the bucket-array EXPRESSION
-    # itself, because the two consumers need different shapes:
-    # bucketize() materializes ``_bkts`` as a column (the raw corpus
-    # is localCheckpointed right after, so its explode reads arrays
-    # from memory), while the TARGET distribution explodes the
-    # expression directly — explode(<attribute>) trips
-    # InferFiltersFromGenerate, which inlines the full featurize into
-    # a size()>0 filter and pushes it below the fan-out repartition:
-    # the whole target corpus then hashes on ONE core (the same trap
-    # the span family documents in dedup.py).
-    if hash == "md5":
-        def _prepped(d: DataFrame, *cols) -> DataFrame:
-            return d.select(
-                *cols,
-                F.col(text_col).isNotNull().alias("_has_text"),
-                F.coalesce(F.col(text_col), F.lit("")).alias("_txt"),
-            )
-
-        def _bkts_expr():
-            return F.transform(
-                _dsir_grams(F.col("_txt")),
-                # int, not bigint: buckets < n_buckets, and the
-                # materialized arrays are the featurize pass's whole
-                # memory footprint — half-width halves the spill
-                lambda g: F.pmod(
-                    md5_h56(g, "dsir"), F.lit(n_buckets)
-                ).cast("int"),
-            )
-    elif hash == "xxhash64":
-        # The fast mode avoids materializing GRAM STRINGS entirely:
-        # each token is xxhash64'd once (salted), unigram buckets are
-        # pmod of that long, and bigram buckets hash the two adjacent
-        # token LONGS natively (xxhash64 is variadic over columns) —
-        # no per-bigram string concat, half the string hashing, and
-        # no overflow-prone arithmetic (ANSI mode would throw on a
-        # long multiply). The token-hash array is materialized as a
-        # real column first so the bigram lambda's element_at reads
-        # it instead of re-evaluating the hash transform per window
-        # (the O(T²) inlining trap NOTES documents for the span
-        # family).
-        def _prepped(d: DataFrame, *cols) -> DataFrame:
-            toks = F.split(
-                F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-                r"\s+",
-            )
-            return d.select(
-                *cols,
-                F.col(text_col).isNotNull().alias("_has_text"),
-                F.transform(
-                    toks,
-                    lambda t: F.xxhash64(F.concat(F.lit("dsir:"), t)),
-                ).alias("_th"),
-            )
-
-        def _bkts_expr():
-            th = F.col("_th")
-            uni = F.transform(
-                th, lambda h: F.pmod(h, F.lit(n_buckets)).cast("int")
-            )
-            big = F.when(
-                F.size(th) >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(th) - 1),
-                    lambda i: F.pmod(
-                        F.xxhash64(
-                            F.element_at(th, i), F.element_at(th, i + 1)
-                        ),
-                        F.lit(n_buckets),
-                    ).cast("int"),
-                ),
-            ).otherwise(F.array().cast("array<int>"))
-            return F.concat(uni, big)
-    else:
-        raise ValueError(f"unknown DSIR hash mode: {hash!r}")
+    # Featurization is split into a PREP projection and the
+    # bucket-array EXPRESSION; see _dsir_featurizer for why.
+    prep, buckets = _dsir_featurizer(hash, n_buckets, text_col)
 
     # the raw corpus is featurized ONCE: the materialized per-doc
     # bucket arrays (≈ tokens × 2 ints/doc, tiny next to text) feed
@@ -509,8 +532,8 @@ def dsir_log_weights(
     docs = fan_out_small(docs)
     target = fan_out_small(target)
     def bucketize(d: DataFrame, *cols) -> DataFrame:
-        return _prepped(d, *cols).select(
-            *cols, "_has_text", _bkts_expr().alias("_bkts")
+        return prep(d, *cols).select(
+            *cols, "_has_text", buckets().alias("_bkts")
         )
 
     raw = bucketize(docs, F.col(id_col)).localCheckpoint()
@@ -524,12 +547,12 @@ def dsir_log_weights(
             .agg(F.count(F.lit(1)).alias(name))
         )
 
-    # target distribution: generator over the EXPRESSION (see the
-    # mode-split comment above — attribute explode would single-core
+    # target distribution: generator over the EXPRESSION (see
+    # _dsir_featurizer — attribute explode would single-core
     # the target featurize via the pushed inferred filter)
     tgt_dist = (
-        _prepped(target)
-        .select(F.explode(_bkts_expr()).alias("bucket"))
+        prep(target)
+        .select(F.explode(buckets()).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("c_tgt"))
     )
