@@ -90,21 +90,26 @@ def contamination_stats(
 
 
 def _adjacent_pairs(arr: Column, f) -> Column:
-    """``[f(arr[i], arr[i+1]) for i]`` built from two slices of ``arr``.
+    """``[f(arr[i], arr[i+1]) for i]``: ``arr`` zipped with its own
+    tail. ``arr``'s elements must not be NULL.
 
-    The lambda reads only its own parameters. The obvious
+    Every lambda reads only its own parameters. The obvious
     ``transform(sequence(1, n-1), i -> f(element_at(arr, i), ...))``
     reads ``arr`` from inside the lambda, and when a filter on a
     derived column is pushed through the projection that materialized
     ``arr``, the optimizer inlines ``arr``'s defining expression (a
     regex ``split`` of the whole text) into the lambda: one full
-    re-tokenize per element. The slices are plain arguments, so
-    however ``arr`` is inlined each row evaluates it O(1) times. A
-    1-element array yields ``[]`` (no out-of-range ``element_at`` for
-    a hoisted subexpression to trip on) and NULL yields NULL; ``arr``
-    must not be empty (a ``split`` never is)."""
-    n = F.size(arr)
-    return F.zip_with(F.slice(arr, 1, n - 1), F.slice(arr, 2, n - 1), f)
+    re-tokenize per element. Here ``arr`` appears twice, as plain
+    arguments, so however it is inlined each row evaluates it twice,
+    and nesting (pairs of pairs) costs 4×, not the 16× of two
+    ``size``-bounded slices. The tail is one shorter, so ``zip_with``
+    pads the last pair with NULL and ``array_compact`` drops it. An
+    empty or 1-element array yields ``[]`` (no out-of-range index for
+    a hoisted subexpression to trip on) and NULL yields NULL."""
+    tail = F.filter(arr, lambda x, i: i > 0)
+    return F.array_compact(
+        F.zip_with(arr, tail, lambda a, b: F.when(b.isNotNull(), f(a, b)))
+    )
 
 
 def repetition_stats(
@@ -300,8 +305,10 @@ def word_entropy(
     the gap between consecutive boundaries. Every lambda reads only its
     own parameters, so a filter on ``entropy_bits`` that the optimizer
     pushes below the projection (inlining the ``split`` into the plan)
-    still tokenizes each row O(1) times; the cost is one O(n log n)
-    sort, not an O(vocab·n) per-distinct-token scan.
+    still tokenizes each row O(1) times; the cost is a few O(n log n)
+    sorts (the sorted array is an argument of nested
+    :func:`_adjacent_pairs`), not an O(vocab·n) per-distinct-token
+    scan.
     """
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     base = docs.select(id_col, toks.alias("toks")).filter(F.size("toks") >= 1)
@@ -439,8 +446,8 @@ def _dsir_featurizer(hash: str, n_buckets: int, text_col: str):
         # no per-bigram string concat, half the string hashing, and
         # no overflow-prone arithmetic (ANSI mode would throw on a
         # long multiply). The token-hash array is materialized as a
-        # real column first so the slices the bigram pairs are built
-        # from read it instead of re-evaluating the hash transform.
+        # real column first so the bigram pairs read it instead of
+        # re-evaluating the hash transform.
         def prep(d: DataFrame, *cols) -> DataFrame:
             toks = F.split(
                 F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
