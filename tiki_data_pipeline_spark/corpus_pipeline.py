@@ -246,8 +246,8 @@ class CorpusPipeline:
         ``no_vector`` against the store (``lsh_index_dedup_status`` —
         exact-first staging, scale-safe probe defaults), the decisions
         land in the ``embedding_status`` stage parquet, and only the
-        unique survivors are appended (store-id anti-join keeps the
-        call idempotent). The report carries per-status counts plus
+        unique survivors are appended (the index append skips stored
+        ids, so the call is idempotent). The report carries per-status counts plus
         the store's bucket-occupancy stats; a hot bucket count > 0
         recommends a rebuild before it becomes a serve bottleneck.
 
@@ -305,15 +305,8 @@ class CorpusPipeline:
                 .agg(F.min(id_col).alias(id_col))
                 .select(id_col, vec_col)
             )
-            from tiki_data_pipeline_spark.sources.files import store_data
-
-            stored = store_data(self.spark, index).select(
-                F.col("id").alias(id_col)
-            )
-            to_add = survivors.join(stored, id_col, "anti")
-            report["appended"] = to_add.count()
-            SIM.append_lsh_index(
-                to_add, index, id_col=id_col, vec_col=vec_col, n_planes=None
+            report["appended"] = SIM.append_lsh_index(
+                survivors, index, id_col=id_col, vec_col=vec_col, n_planes=None
             )
         report["index_dir"] = index
         stats = SIM.lsh_bucket_stats(self.spark, index)
@@ -339,8 +332,9 @@ class CorpusPipeline:
         """SemDeDup stage over the near-dup-unique survivors: first
         call bootstraps the IVF index from them (auto-sized quantizer);
         later calls status each survivor against its home inverted
-        list and append only the semantically novel ones. Idempotent
-        like the LSH append (store-id anti-join)."""
+        list and append only the semantically novel ones; survivors
+        already stored are not statused again, so the call is
+        idempotent."""
         from tiki_data_pipeline_spark.operators import similarity as SIM
 
         out: dict = {}
@@ -376,11 +370,9 @@ class CorpusPipeline:
                 id_col,
                 "semi",
             )
-            out["appended"] = novel.count()
-            if out["appended"]:
-                SIM.append_ivf_index(
-                    self.spark, novel, ivf, id_col=id_col, vec_col=vec_col
-                )
+            out["appended"] = SIM.append_ivf_index(
+                self.spark, novel, ivf, id_col=id_col, vec_col=vec_col
+            )
             rec = SIM.ivf_retrain_recommendation(
                 self.spark, ivf, fresh, id_col=id_col, vec_col=vec_col
             )

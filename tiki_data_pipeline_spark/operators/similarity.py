@@ -1007,11 +1007,7 @@ def write_lsh_index(
         # count ADMITTED rows (non-null, non-zero-norm) — the raw
         # input count can overestimate both the plane sizing and the
         # layout decision at exactly the small-files boundary
-        n_rows = (
-            embeddings.filter(F.col(vec_col).isNotNull())
-            .filter(_norm(as_double(F.col(vec_col))) > 0)
-            .count()
-        )
+        n_rows = _admitted_rows(embeddings, id_col, vec_col).count()
     if n_planes == "auto":
         n_planes = auto_n_planes(n_rows)
     if partitioned and (1 << n_planes) > MAX_PARTITION_DIRS:
@@ -1280,23 +1276,46 @@ def _resolve_skip_hot_buckets(skip_hot_buckets, index_path: str) -> bool:
     return bool(meta.get("hot_buckets_serve_skip", False))
 
 
-def _lsh_index_rows(
-    embeddings: DataFrame, id_col: str, vec_col: str, n_planes: int
-) -> DataFrame:
-    """(id, v, bkt, nrm) rows — the persisted-LSH-index admission
-    rule: norm materialized at build time (serving divides by it
-    instead of re-folding O(dim) per candidate row); zero-norm vectors
+def _admitted_rows(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v, nrm) rows under the admission rule of every persisted
+    vector store: norm materialized at build time (serving divides by
+    it instead of re-folding O(dim) per candidate row); NULL vectors,
+    vectors with a NULL element (NULL norm) and zero-norm vectors
     (undefined cosine) excluded."""
-    dim = _vec_dim(embeddings, vec_col)
     return (
         embeddings.select(
-            F.col(id_col).alias("id"),
-            as_double(F.col(vec_col)).alias("v"),
-            lsh_bucket(as_double(F.col(vec_col)), dim, n_planes).alias("bkt"),
+            F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
         )
         .withColumn("nrm", _norm(F.col("v")))
         .filter(F.col("nrm") > 0)
     )
+
+
+def _lsh_rows(base: DataFrame, dim: int, n_planes: int) -> DataFrame:
+    """LSH family rows ``(id, v, bkt, nrm)``: admitted rows keyed by
+    their hyperplane code."""
+    bkt = lsh_bucket(F.col("v"), dim, n_planes).alias("bkt")
+    return base.select("id", "v", bkt, "nrm")
+
+
+def _lsh_index_rows(
+    embeddings: DataFrame, id_col: str, vec_col: str, n_planes: int
+) -> DataFrame:
+    base = _admitted_rows(embeddings, id_col, vec_col)
+    return _lsh_rows(base, _vec_dim(embeddings, vec_col), n_planes)
+
+
+def _ivf_rows(base: DataFrame, centroids: DataFrame) -> DataFrame:
+    """IVF family rows ``(id, cid, v, nrm)``: admitted rows on their
+    nearest centroid's inverted list."""
+    return assign_to_centroids(base, centroids).join(base, "id")
+
+
+def _ivfpq_rows(base: DataFrame, centroids: DataFrame, codebook) -> DataFrame:
+    """IVF-PQ family rows ``(id, codes, cid)``: PQ codes of admitted
+    rows on their nearest centroid's inverted list."""
+    codes = pq_encode(base, codebook, id_col="id", vec_col="v")
+    return codes.join(assign_to_centroids(base.select("id", "v"), centroids), "id")
 
 
 def _write_index_rows(
@@ -1328,6 +1347,54 @@ def _detect_partitioned(path: str, key: str) -> bool:
     return partitioned and k == key
 
 
+def _append_index(
+    spark, embeddings: DataFrame, path: str, id_col: str, vec_col: str,
+    meta_check: dict, key: str | None, rows,
+) -> int:
+    """The one append body of the persisted ANN families, which supply
+    only their signature ``meta_check``, partition ``key`` (None: flat
+    PQ) and ``rows(delta, dim)`` applying the store's frozen quantizer
+    to admitted ``(id, v, nrm)`` rows. Idempotent: stored ids are
+    skipped and an id repeated in the delta is added once, so a
+    re-sent delta adds nothing; tombstoned ids are rejected. Each
+    counter the meta records grows by the added rows' own value (a
+    delta-sized pass). Returns the number of rows added."""
+    from tiki_data_pipeline_spark.sources.files import (
+        check_store_meta,
+        read_store_meta,
+        reject_tombstoned,
+        update_store_meta,
+    )
+
+    check_store_meta(path, meta_check)
+    reject_tombstoned(spark, path, embeddings, id_col)
+    meta = read_store_meta(path) or {}
+    delta = (
+        _admitted_rows(embeddings, id_col, vec_col)
+        .join(store_data(spark, path).select("id"), "id", "anti")
+        .dropDuplicates(["id"])
+    )
+    aggs = [F.count(F.lit(1)).alias("n_rows"), F.max(F.size("v")).alias("dim")]
+    if "n_distinct_vectors" in meta:
+        aggs.append(
+            F.count_distinct(F.xxhash64(F.col("v"))).alias("n_distinct_vectors")
+        )
+    # the delta plan reads the store it joins: count before the write
+    stats = delta.agg(*aggs).collect()[0]
+    if not stats["n_rows"]:
+        return 0
+    partitioned = key is not None and _detect_partitioned(path, key)
+    _write_index_rows(rows(delta, stats["dim"]), path, "append", key, partitioned)
+    grown = {
+        c: int(meta[c]) + int(stats[c])
+        for c in ("n_rows", "n_distinct_vectors")
+        if c in meta
+    }
+    if grown:
+        update_store_meta(path, grown)
+    return int(stats["n_rows"])
+
+
 def _lsh_probes(
     batch: DataFrame,
     id_col: str,
@@ -1355,11 +1422,8 @@ def _lsh_probes(
     else:
         pp = min(probe_planes, n_planes)
         selector = _rank_probe_bits(pp, radius)  # n_patterns × pp
-    payload = (
-        batch.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("new_id"), as_double(F.col(vec_col)).alias("qv"))
-        .withColumn("qn", _norm(F.col("qv")))
-        .filter(F.col("qn") > 0)
+    payload = _admitted_rows(batch, id_col, vec_col).select(
+        F.col("id").alias("new_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
 
     def emit_probes(batches):
@@ -1406,8 +1470,8 @@ def _lsh_scored_pairs(
     ``(new_id, old_id, cosine_sim)`` pairs with the cosine rounded to
     ``digits`` places and ≥ ``threshold`` (plus ``is_exact`` when
     asked), self-pairs dropped. Each pair meets in exactly one probe
-    bucket, but the plain-parquet append contract is at-least-once on
-    retry, so a store MAY hold duplicate id rows: pairs are deduped.
+    bucket, but a store appended to before appends skipped stored ids
+    MAY hold duplicate id rows: pairs are deduped.
 
     Only probe rows whose bucket is OCCUPIED in ``store`` get the
     query vector attached. Probe count explodes with the radius
@@ -1612,6 +1676,54 @@ def lsh_index_near_dups(
     )
 
 
+def _best_match(pairs: DataFrame, id_col: str, status: Column, *lead) -> DataFrame:
+    """One ``(id, status, matched_id)`` row per ``new_id`` of
+    ``(new_id, old_id, cosine_sim)`` pairs: its best match by
+    ``lead`` columns, then highest cosine, ties → lowest store id. The
+    window is partitioned by the batch vector, so a partition holds
+    its true match count, never a corpus-sized one."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("new_id").orderBy(
+        *lead, F.col("cosine_sim").desc(), F.col("old_id").asc()
+    )
+    return (
+        pairs.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select(
+            F.col("new_id").alias(id_col),
+            status.alias("status"),
+            F.col("old_id").alias("matched_id"),
+        )
+    )
+
+
+def _status_per_vector(
+    new_embeddings: DataFrame, hits: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Status tail of the dedup-status serves: one row per batch
+    vector, its hit if any, else ``no_vector`` for a NULL / zero-norm
+    vector (no defined cosine — surfaced, never coalesced to unique),
+    else ``unique``."""
+    no_vec = F.col(vec_col).isNull() | (
+        F.coalesce(_norm(as_double(F.col(vec_col))), F.lit(0.0)) <= 0
+    )
+    return (
+        new_embeddings.select(id_col, no_vec.alias("_no_vec"))
+        .join(hits, id_col, "left")
+        .select(
+            id_col,
+            F.coalesce(
+                F.col("status"),
+                F.when(F.col("_no_vec"), F.lit("no_vector")).otherwise(
+                    F.lit("unique")
+                ),
+            ).alias("status"),
+            "matched_id",
+        )
+    )
+
+
 def lsh_index_dedup_status(
     spark,
     index_path: str,
@@ -1656,7 +1768,7 @@ def lsh_index_dedup_status(
     ``matched_id`` is the lowest-id exact match, else the best near
     match (highest cosine, ties → lowest id), else NULL. A NULL or
     zero-norm vector (no defined cosine — both stages exclude it, and
-    ``_lsh_index_rows`` would drop it at append time) is statused
+    ``_admitted_rows`` drops it at append time) is statused
     ``no_vector``, NOT ``unique``: coalescing it to unique made the
     ingest sink re-"append" it every epoch while the index writer
     silently dropped it, so it re-reported unique forever.
@@ -1667,8 +1779,7 @@ def lsh_index_dedup_status(
     batch's home buckets instead of shuffling the whole store's
     vector payload every micro-batch.
     """
-    from pyspark.sql import Window as W
-
+    near_batch = new_embeddings
     n_planes = _store_n_planes(index_path, n_planes)
     if exact_stage == "auto":
         from tiki_data_pipeline_spark.sources.files import read_store_meta
@@ -1680,7 +1791,7 @@ def lsh_index_dedup_status(
         exact_stage = not (n is not None and d is not None and int(n) == int(d))
     if exact_stage:
         dim = _vec_dim(new_embeddings, vec_col)
-        batch = new_embeddings.filter(F.col(vec_col).isNotNull()).select(
+        keyed = new_embeddings.filter(F.col(vec_col).isNotNull()).select(
             F.col(id_col),
             as_double(F.col(vec_col)).alias("qv"),
             lsh_bucket(as_double(F.col(vec_col)), dim, n_planes)
@@ -1697,7 +1808,7 @@ def lsh_index_dedup_status(
             F.col("bkt").cast("long").alias("_sb"),
         )
         exact = (
-            batch.join(
+            keyed.join(
                 store,
                 (F.col("_qb") == F.col("_sb"))
                 & (F.xxhash64(F.col("qv")) == F.xxhash64(F.col("_sv")))
@@ -1708,93 +1819,37 @@ def lsh_index_dedup_status(
             .agg(F.min("_store_id").alias("matched_id"))
             .withColumn("status", F.lit("exact_dup"))
         )
-        fresh = new_embeddings.join(exact.select(id_col), id_col, "left_anti")
-        near_pairs = lsh_index_near_dups(
-            spark,
-            index_path,
-            fresh,
-            threshold=threshold,
-            emit_radius=emit_radius,
-            n_planes=n_planes,
-            id_col=id_col,
-            vec_col=vec_col,
-            skip_hot_buckets=skip_hot_buckets,
-            probe_planes=probe_planes,
-            scoring=scoring,
-        )
-        # best match per vector: window partitioned by the vector, so
-        # the partition size is its true near-dup count, never
-        # corpus-sized
-        w = W.partitionBy("new_id").orderBy(
-            F.col("cosine_sim").desc(), F.col("old_id").asc()
-        )
-        near = (
-            near_pairs.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                F.col("new_id").alias(id_col),
-                F.col("old_id").alias("matched_id"),
-                F.lit("near_dup").alias("status"),
-            )
-        )
+        near_batch = new_embeddings.join(exact.select(id_col), id_col, "left_anti")
+    # without the exact stage (zero recorded duplicate mass) one near
+    # pass covers the whole batch, with bit-identical candidates
+    # flagged at scoring time. Ordering is_exact FIRST reproduces the
+    # staged path's preference (an exact match beats any near match;
+    # exact matches tie at cosine 1.0, so old_id ASC is the same
+    # min-store-id tiebreak).
+    near_pairs = lsh_index_near_dups(
+        spark,
+        index_path,
+        near_batch,
+        threshold=threshold,
+        emit_radius=emit_radius,
+        n_planes=n_planes,
+        id_col=id_col,
+        vec_col=vec_col,
+        skip_hot_buckets=skip_hot_buckets,
+        probe_planes=probe_planes,
+        with_exact_flag=not exact_stage,
+        scoring=scoring,
+    )
+    if exact_stage:
         hits = exact.select(id_col, "status", "matched_id").unionByName(
-            near.select(id_col, "status", "matched_id")
+            _best_match(near_pairs, id_col, F.lit("near_dup"))
         )
     else:
-        # exact-stage short-circuit (zero recorded duplicate mass):
-        # one near pass over the whole batch, with bit-identical
-        # candidates flagged at scoring time. Ordering is_exact FIRST
-        # reproduces the staged path's preference (an exact match
-        # beats any near match; exact matches tie at cosine 1.0, so
-        # old_id ASC is the same min-store-id tiebreak).
-        near_pairs = lsh_index_near_dups(
-            spark,
-            index_path,
-            new_embeddings,
-            threshold=threshold,
-            emit_radius=emit_radius,
-            n_planes=n_planes,
-            id_col=id_col,
-            vec_col=vec_col,
-            skip_hot_buckets=skip_hot_buckets,
-            probe_planes=probe_planes,
-            with_exact_flag=True,
-            scoring=scoring,
+        status = F.when(F.col("is_exact"), F.lit("exact_dup")).otherwise(
+            F.lit("near_dup")
         )
-        w = W.partitionBy("new_id").orderBy(
-            F.col("is_exact").desc(),
-            F.col("cosine_sim").desc(),
-            F.col("old_id").asc(),
-        )
-        hits = (
-            near_pairs.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                F.col("new_id").alias(id_col),
-                F.col("old_id").alias("matched_id"),
-                F.when(F.col("is_exact"), F.lit("exact_dup"))
-                .otherwise(F.lit("near_dup"))
-                .alias("status"),
-            )
-            .select(id_col, "status", "matched_id")
-        )
-    no_vec = F.col(vec_col).isNull() | (
-        F.coalesce(_norm(as_double(F.col(vec_col))), F.lit(0.0)) <= 0
-    )
-    return (
-        new_embeddings.select(id_col, no_vec.alias("_no_vec"))
-        .join(hits, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(
-                F.col("status"),
-                F.when(F.col("_no_vec"), F.lit("no_vector")).otherwise(
-                    F.lit("unique")
-                ),
-            ).alias("status"),
-            "matched_id",
-        )
-    )
+        hits = _best_match(near_pairs, id_col, status, F.col("is_exact").desc())
+    return _status_per_vector(new_embeddings, hits, id_col, vec_col)
 
 
 HOT_BUCKET_CAP = 10_000
@@ -1868,7 +1923,7 @@ def append_lsh_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_planes: int | None = N_PLANES,
-) -> None:
+) -> int:
     """Add new vectors to an existing persisted LSH index without a
     rebuild (continuous-ingest shape: the delta's bucket rows land in
     the partitions the serve path already prunes on). Layout is
@@ -1877,48 +1932,22 @@ def append_lsh_index(
     hyperplane family would bucket the delta incomparably and
     silently lose recall — while ``n_planes=None`` resolves from the
     meta (required for an "auto"-built store, whose plane count the
-    caller cannot know). Same at-least-once caveat as every
-    plain-parquet append — production is a lakehouse MERGE/OPTIMIZE
-    table."""
-    from tiki_data_pipeline_spark.sources.files import (
-        check_store_meta,
-        read_store_meta,
-        update_store_meta,
-    )
+    caller cannot know).
 
+    Idempotent like every ANN append (:func:`_append_index`): stored
+    ids are skipped, an id repeated in the delta is added once, and
+    the number of rows added is returned. ``n_distinct_vectors`` grows
+    by the delta's own distinct count — exact for the ingest sink's
+    one-survivor-per-vector deltas; a manual append of stored vectors
+    under NEW ids overcounts it, which costs only performance
+    (``is_exact`` keeps labels right; rebuild to reset it)."""
     if n_planes is None:
         n_planes = _store_n_planes(path, N_PLANES)
-    check_store_meta(path, {"kind": "lsh", "n_planes": n_planes})
-    from tiki_data_pipeline_spark.sources.files import reject_tombstoned
-
-    reject_tombstoned(embeddings.sparkSession, path, embeddings, id_col)
-    rows = _lsh_index_rows(embeddings, id_col, vec_col, n_planes)
-    # delta-sized stats pass (the serve-default meta must track
-    # appends without a store-wide rescan): n_rows grows by the
-    # admitted delta; n_distinct_vectors by the delta's OWN distinct
-    # count — exact for the ingest sink (it appends pre-deduped,
-    # store-anti-joined uniques, so the zero-duplicate-mass invariant
-    # behind the exact-stage short-circuit is maintained exactly). A
-    # blind manual append overlapping the store overcounts distincts
-    # and can leave the short-circuit on despite new cross-append dup
-    # mass — that costs PERFORMANCE if a mega-cluster forms (the
-    # short-circuit's is_exact scoring keeps labels correct in every
-    # case), and lsh_bucket_stats / a rebuild is the remedy
-    delta = rows.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct(F.xxhash64(F.col("v"))).alias("d"),
-    ).collect()[0]
-    _write_index_rows(rows, path, "append", "bkt", _detect_partitioned(path, "bkt"))
-    meta = read_store_meta(path) or {}
-    if "n_rows" in meta and "n_distinct_vectors" in meta:
-        update_store_meta(
-            path,
-            {
-                "n_rows": int(meta["n_rows"]) + int(delta["n"]),
-                "n_distinct_vectors": int(meta["n_distinct_vectors"])
-                + int(delta["d"]),
-            },
-        )
+    meta = {"kind": "lsh", "n_planes": n_planes}
+    return _append_index(
+        embeddings.sparkSession, embeddings, path, id_col, vec_col, meta, "bkt",
+        lambda delta, dim: _lsh_rows(delta, dim, n_planes),
+    )
 
 
 def _py_norm(v) -> float:
@@ -1946,6 +1975,69 @@ def _with_nrm(index: DataFrame) -> DataFrame:
     if "nrm" in index.columns:
         return index
     return index.withColumn("nrm", _norm(F.col("v"))).filter(F.col("nrm") > 0)
+
+
+def _admitted_queries(queries: DataFrame, id_col: str, vec_col: str) -> list:
+    """The one query admission of the persisted-index serves: a
+    bounded collect of ``(query_id, qv, qn)``, enforcing
+    ``MAX_QUERY_SET`` before anything else runs. NULL vectors,
+    vectors with a NULL element and zero-norm vectors have no defined
+    cosine and are dropped, so they never appear in a result."""
+    rows = (
+        queries.select(
+            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+        )
+        .limit(MAX_QUERY_SET + 1)  # bound the collect before it happens
+        .collect()
+    )
+    _check_query_set(len(rows))
+    return [
+        (r["query_id"], r["qv"], qn)
+        for r in rows
+        for qn in (_py_norm(r["qv"]),)
+        if qn > 0
+    ]
+
+
+def _probed_candidates(
+    spark, index_path: str, key: str, probe_rows: list, schema: str
+) -> DataFrame:
+    """Prune-then-join core of the probed serves (LSH, IVF, IVF-PQ):
+    the probed ``key`` set becomes an ``isin`` filter on the store
+    scan (partition pruning on the directory layout, row-group
+    min/max pruning on the sorted flat one), tombstoned rows are
+    dropped, and the driver-built probe rows ``(query_id, …, key)``
+    are broadcast-joined to what is left, self matches excluded."""
+    from tiki_data_pipeline_spark.sources.files import apply_tombstones
+
+    probes = spark.createDataFrame(probe_rows, schema=schema)
+    index = store_data(spark, index_path).filter(
+        F.col(key).isin(sorted({r[-1] for r in probe_rows}))
+    )
+    return (
+        apply_tombstones(index, index_path)
+        .join(F.broadcast(probes), key)
+        .filter(F.col("id") != F.col("query_id"))
+    )
+
+
+def _probe_and_score(
+    spark, index_path: str, key: str, probe_rows: list, k: int
+) -> DataFrame:
+    """Serve tail of the raw-vector indexes (LSH, IVF): probe rows
+    ``(query_id, qv, qn, key)`` → :func:`_probed_candidates` → exact
+    cosine (``qn`` computed once per query driver-side, ``nrm`` stored
+    at build time — no per-candidate O(dim) norm fold) → top-``k``."""
+    schema = f"query_id long, qv array<double>, qn double, {key} int"
+    cand = _with_nrm(_probed_candidates(spark, index_path, key, probe_rows, schema))
+    scored = cand.select(
+        "query_id",
+        F.col("id").alias("neighbor_id"),
+        F.round(
+            _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
+        ).alias("cosine_sim"),
+    )
+    return _topk_per_query(scored, "cosine_sim", k)
 
 
 def lsh_index_topk(
@@ -1985,22 +2077,11 @@ def lsh_index_topk(
     # _py_lsh_bucket) — the previous shape paid a _vec_dim probe job
     # PLUS per-serve planning of the 8×dim-literal bucket expression
     # (~0.7 s/serve at sf0.1 vs ~0.1 s for this collect, r15 A/B).
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("qv"),
-        )
-        .limit(MAX_QUERY_SET + 1)  # bound the collect before it happens
-        .collect()
-    )
-    _check_query_set(len(q_rows))
-    dim = next(
-        (len(r["qv"]) for r in q_rows if r["qv"] is not None and len(r["qv"])),
-        1,
-    )
+    q_rows = _admitted_queries(queries, id_col, vec_col)
+    dim = len(q_rows[0][1]) if q_rows else 1
     if probe_planes is None:
         masks = probe_masks(n_planes, emit_radius)
-        mask_for = lambda r: masks  # noqa: E731 — shared exhaustive set
+        mask_for = lambda qv: masks  # noqa: E731 — shared exhaustive set
     else:
         import numpy as np
 
@@ -2008,42 +2089,18 @@ def lsh_index_topk(
         wmat = _plane_weights(n_planes, dim)
         selector = _rank_probe_bits(pp, emit_radius)
 
-        def mask_for(r):
-            marg = np.abs(wmat @ np.array(r["qv"], dtype=np.float64))
+        def mask_for(qv):
+            marg = np.abs(wmat @ np.array(qv, dtype=np.float64))
             low = np.argsort(marg)[:pp]
             return (selector @ (1 << low)).tolist()
 
     probe_rows = [
-        (r["query_id"], r["qv"], qn, qb ^ m)
-        for r in q_rows
-        for qn in (_py_norm(r["qv"]),)
-        if qn > 0  # NULL or zero-norm query: no defined cosine
-        for qb in (_py_lsh_bucket(r["qv"], dim, n_planes),)
-        for m in mask_for(r)
+        (qid, qv, qn, qb ^ m)
+        for qid, qv, qn in q_rows
+        for qb in (_py_lsh_bucket(qv, dim, n_planes),)
+        for m in mask_for(qv)
     ]
-    probe_buckets = sorted({b for _, _, _, b in probe_rows})
-    probes = spark.createDataFrame(
-        probe_rows, schema="query_id long, qv array<double>, qn double, bkt int"
-    )
-    from tiki_data_pipeline_spark.sources.files import apply_tombstones
-
-    index = store_data(spark, index_path).filter(
-        F.col("bkt").isin(probe_buckets)  # partition pruning, not a scan
-    )
-    index = _with_nrm(apply_tombstones(index, index_path))
-    cand = index.join(F.broadcast(probes), "bkt").filter(
-        F.col("id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        # qn computed once per query driver-side, nrm stored in the
-        # index — no per-candidate O(dim) norm folds on the serve path
-        F.round(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-        ).alias("cosine_sim"),
-    )
-    return _topk_per_query(scored, "cosine_sim", k)
+    return _probe_and_score(spark, index_path, "bkt", probe_rows, k)
 
 
 # ------------------------------------------------------------------
@@ -2127,7 +2184,7 @@ def write_ivf_index(
     pruning), one cid-sorted dataset below ``partition_min_rows``
     (row-group min/max pruning, no small-files blowup).
     """
-    base = _ivf_index_rows(embeddings, id_col, vec_col)
+    base = _admitted_rows(embeddings, id_col, vec_col)
     n_rows = base.count()
     if n_centroids == "auto":
         n_centroids = auto_n_centroids(n_rows)
@@ -2135,10 +2192,9 @@ def write_ivf_index(
         centroids = ivf_train(
             embeddings, k=n_centroids, id_col=id_col, vec_col=vec_col
         )
-    assigned = assign_to_centroids(base, centroids).join(base, "id")
     if partitioned is None:
         partitioned = n_rows >= partition_min_rows
-    _write_index_rows(assigned, path, "overwrite", "cid", partitioned)
+    _write_index_rows(_ivf_rows(base, centroids), path, "overwrite", "cid", partitioned)
     store_put(centroids, path, "overwrite", sub="_centroids")
     from tiki_data_pipeline_spark.sources.files import write_store_meta
 
@@ -2165,52 +2221,30 @@ def write_ivf_index(
         )
 
 
-def _ivf_index_rows(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, v, nrm) rows under the IVF admission rule (non-null,
-    non-zero-norm — see write_lsh_index's rationale)."""
-    return (
-        embeddings.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-        .withColumn("nrm", _norm(F.col("v")))
-        .filter(F.col("nrm") > 0)
-    )
-
-
 def append_ivf_index(
     spark,
     embeddings: DataFrame,
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> None:
+) -> int:
     """Add delta vectors to an existing IVF index: assign them to the
     PERSISTED centroids (the quantizer is frozen at build time —
     FAISS's add-after-train semantics; re-training would silently
     remap every stored list) and append to the matching inverted
     lists. Layout auto-detected like :func:`append_lsh_index`; the
     quantizer itself needs no parameter validation — it is read from
-    the store. Re-train + rebuild when the delta shifts the
-    distribution enough that recall degrades — that is a monitored
-    offline decision (:func:`ivf_drift_report`), not an ingest-path
-    one."""
-    from tiki_data_pipeline_spark.sources.files import (
-        check_store_meta,
-        read_store_meta,
-        update_store_meta,
+    the store. Idempotent like every ANN append
+    (:func:`_append_index`): stored ids are skipped and an id
+    repeated in the delta is added once; ``n_rows`` (which keeps
+    ``nprobe="auto"`` honest) grows by the rows added. Returns that
+    count. Re-train + rebuild when the delta shifts the distribution
+    enough that recall degrades — that is a monitored offline
+    decision (:func:`ivf_drift_report`), not an ingest-path one."""
+    return _append_index(
+        spark, embeddings, path, id_col, vec_col, {"kind": "ivf"}, "cid",
+        lambda delta, _: _ivf_rows(delta, _require_sub(spark, path, "_centroids")),
     )
-
-    check_store_meta(path, {"kind": "ivf"})
-    from tiki_data_pipeline_spark.sources.files import reject_tombstoned
-
-    reject_tombstoned(spark, path, embeddings, id_col)
-    centroids = _require_sub(spark, path, "_centroids")
-    base = _ivf_index_rows(embeddings, id_col, vec_col)
-    n_delta = base.count()  # delta-sized; keeps nprobe="auto" honest
-    assigned = assign_to_centroids(base, centroids).join(base, "id")
-    _write_index_rows(assigned, path, "append", "cid", _detect_partitioned(path, "cid"))
-    meta = read_store_meta(path) or {}
-    if "n_rows" in meta:
-        update_store_meta(path, {"n_rows": int(meta["n_rows"]) + int(n_delta)})
 
 
 def ivf_semantic_dedup_status(
@@ -2251,16 +2285,11 @@ def ivf_semantic_dedup_status(
     DPP prunes the partitioned scan) — the oracle-translation
     reference and the zero-Python-task fallback.
     """
-    from pyspark.sql import Window as W
-
     from tiki_data_pipeline_spark.sources.files import check_store_meta
 
     check_store_meta(index_path, {"kind": "ivf"})
     centroids = _require_sub(spark, index_path, "_centroids")
-    valid = _ivf_index_rows(new_embeddings, id_col, vec_col)
-    assigned = assign_to_centroids(valid.select("id", "v"), centroids).join(
-        valid, "id"
-    )
+    assigned = _ivf_rows(_admitted_rows(new_embeddings, id_col, vec_col), centroids)
     from tiki_data_pipeline_spark.sources.files import apply_tombstones
 
     index = _with_nrm(
@@ -2308,39 +2337,12 @@ def ivf_semantic_dedup_status(
         )
     scored = (
         scored.filter(F.col("cosine_sim") >= threshold)
-        # at-least-once append contract: a store MAY hold duplicate id
-        # rows after a retried append — dedup the (small) hit set
+        # a store appended to before appends skipped stored ids MAY
+        # hold duplicate id rows — dedup the (small) hit set
         .dropDuplicates(["new_id", "old_id"])
     )
-    w = W.partitionBy("new_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("old_id").asc()
-    )
-    hits = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("new_id").alias(id_col),
-            F.lit("semantic_dup").alias("status"),
-            F.col("old_id").alias("matched_id"),
-        )
-    )
-    no_vec = F.col(vec_col).isNull() | (
-        F.coalesce(_norm(as_double(F.col(vec_col))), F.lit(0.0)) <= 0
-    )
-    return (
-        new_embeddings.select(id_col, no_vec.alias("_no_vec"))
-        .join(hits, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(
-                F.col("status"),
-                F.when(F.col("_no_vec"), F.lit("no_vector")).otherwise(
-                    F.lit("unique")
-                ),
-            ).alias("status"),
-            "matched_id",
-        )
-    )
+    hits = _best_match(scored, id_col, F.lit("semantic_dup"))
+    return _status_per_vector(new_embeddings, hits, id_col, vec_col)
 
 
 def ivf_drift_report(
@@ -2407,9 +2409,7 @@ def ivf_drift_report(
         # mirror the writers' admission rule (non-null, non-zero-norm):
         # the report must score exactly what an append would store, or
         # degenerate vectors could fake a distribution shift
-        new_embeddings.filter(F.col(vec_col).isNotNull())
-        .select(as_double(F.col(vec_col)).alias("v"))
-        .filter(_norm(F.col("v")) > 0),
+        _admitted_rows(new_embeddings, id_col, vec_col).select("v"),
         "new",
     )
     # k-row result: the global-total window runs over ≤ n_centroids
@@ -2535,66 +2535,14 @@ def ivf_index_topk(
     the recall-targeted probe depth instead of a caller guess. An
     explicit int always wins.
     """
-    import numpy as np
-
-
     cids, cmat = _read_centroid_mat(spark, index_path)
-    if nprobe == "auto":
-        from tiki_data_pipeline_spark.sources.files import read_store_meta
-
-        meta = read_store_meta(index_path) or {}
-        if meta.get("calibrated_nprobe"):
-            # a persisted calibrate_index_nprobe measurement beats
-            # the closed-form floor (see the ivfpq serve path)
-            nprobe = int(meta["calibrated_nprobe"])
-        else:
-            n_rows = meta.get("n_rows")
-            if n_rows is None:
-                n_rows = store_data(spark, index_path).count()
-            nprobe = auto_nprobe(int(n_rows), len(cids), k)
-
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-        )
-        .limit(MAX_QUERY_SET + 1)  # bound the collect before it happens
-        .collect()
-    )
-    _check_query_set(len(q_rows))
-    probe_rows = []
-    for r in q_rows:
-        qn = _py_norm(r["qv"])
-        if qn == 0:  # zero-norm query: no defined cosine
-            continue
-        qv = np.asarray(r["qv"], dtype=np.float64)
-        # |q-c|² − |q|² = −2q·c + |c|²; same argmin order as ivf_topk
-        d = -2.0 * (cmat @ qv) + (cmat * cmat).sum(axis=1)
-        order = np.lexsort((cids, d))[: min(nprobe, len(cids))]
-        probe_rows.extend(
-            (r["query_id"], r["qv"], qn, int(cids[i])) for i in order
-        )
-    probe_cids = sorted({c for _, _, _, c in probe_rows})
-    probes = spark.createDataFrame(
-        probe_rows, schema="query_id long, qv array<double>, qn double, cid int"
-    )
-    from tiki_data_pipeline_spark.sources.files import apply_tombstones
-
-    index = store_data(spark, index_path).filter(
-        F.col("cid").isin(probe_cids)  # partition pruning, not a scan
-    )
-    index = _with_nrm(apply_tombstones(index, index_path))
-    cand = index.join(F.broadcast(probes), "cid").filter(
-        F.col("id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        # qn driver-side once per query, nrm stored at build time
-        F.round(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-        ).alias("cosine_sim"),
-    )
-    return _topk_per_query(scored, "cosine_sim", k)
+    nprobe = _resolve_nprobe(spark, index_path, nprobe, len(cids), k)
+    probe_rows = [
+        (qid, qv, qn, int(cids[i]))
+        for qid, qv, qn in _admitted_queries(queries, id_col, vec_col)
+        for i in _centroid_order(cids, cmat, qv)[:nprobe]
+    ]
+    return _probe_and_score(spark, index_path, "cid", probe_rows, k)
 
 
 # ---------------------------------------------------------------------------
@@ -2635,6 +2583,44 @@ def _read_centroid_mat(spark, index_path: str):
     return cids, cmat
 
 
+def _centroid_order(cids, cmat, qv):
+    """Positions of the centroids nearest-first for one query — the
+    probe order shared by the IVF serves and nprobe calibration, and
+    the same rule as ``ivf_topk``: |q-c|² − |q|² = −2q·c + |c|²,
+    ties toward the lowest cid."""
+    import numpy as np
+
+    d = -2.0 * (cmat @ np.asarray(qv, dtype=np.float64)) + (cmat * cmat).sum(axis=1)
+    return np.lexsort((cids, d))
+
+
+def _nprobe_floor(spark, index_path: str, meta: dict, n_lists: int, k: int) -> int:
+    """:func:`auto_nprobe` from the store's recorded row count (a
+    pre-meta store pays one footer-only count job)."""
+    n_rows = meta.get("n_rows")
+    if n_rows is None:
+        n_rows = store_data(spark, index_path).count()
+    return auto_nprobe(int(n_rows), n_lists, k)
+
+
+def _resolve_nprobe(spark, index_path: str, nprobe, n_lists: int, k: int) -> int:
+    """The ``nprobe="auto"`` serve default of the IVF and IVF-PQ
+    serves. A persisted :func:`calibrate_index_nprobe` measurement
+    beats the closed-form floor: the 1/16-of-lists convention assumes
+    neighbors concentrate in the query's nearest lists, which
+    near-orthogonal corpora violate — r8's SCALE table showed
+    recall@5 = 0.88 at 200k vectors under the floor alone. An
+    explicit int always wins."""
+    if nprobe != "auto":
+        return int(nprobe)
+    from tiki_data_pipeline_spark.sources.files import read_store_meta
+
+    meta = read_store_meta(index_path) or {}
+    if meta.get("calibrated_nprobe"):
+        return int(meta["calibrated_nprobe"])
+    return _nprobe_floor(spark, index_path, meta, n_lists, k)
+
+
 def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
     """Per-query rank cut shared by every ANN serve path: top ``k``
     by ``score_col`` descending, neighbor id ascending on ties (the
@@ -2651,20 +2637,79 @@ def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
     )
 
 
-def _refine_or_adc(
-    scored: DataFrame,
-    refine_with: DataFrame | None,
-    shortlist: int,
-    k: int,
-    id_col: str,
-    vec_col: str,
+def _pq_luts(codebook, q_rows: list):
+    """``(qids, lut)`` for admitted query rows ``(query_id, qv, qn)``:
+    ``lut[qi, j, c] = |q_sub − codebook[j, c]|²`` over the
+    L2-normalized query — the ADC lookup table, driver-built (the
+    codebook is KBs)."""
+    import numpy as np
+
+    m, _, dsub = codebook.shape
+    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    Q = np.array([r[1] for r in q_rows], dtype=np.float64).reshape(-1, m * dsub)
+    Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    sub = lambda j: Q[:, j * dsub : (j + 1) * dsub][:, None, :]  # noqa: E731
+    lut = np.stack(
+        [((sub(j) - codebook[j][None]) ** 2).sum(axis=2) for j in range(m)], axis=1
+    )
+    return qids, lut
+
+
+def _adc_topk(
+    spark, index_path: str, rows: DataFrame, qids, lut,
+    refine_with: DataFrame | None, shortlist: int | str, k: int,
+    id_col: str, vec_col: str,
 ) -> DataFrame:
-    """Shared tail of the PQ serve paths: pure-ADC top-k when no raw
-    vectors are supplied, else exact-cosine re-rank of the per-query
-    ADC ``shortlist`` (point lookups of shortlist·|queries| raw
-    vectors — the codes scan never reads floats)."""
+    """The one ADC scorer of the PQ serves. ``rows`` are code rows
+    ``(id, codes)`` scored against every query (flat PQ), or probed
+    pairs ``(query_id, id, codes)`` (IVF-PQ); ``d² = Σ_j lut[q, j,
+    codes[j]]`` in one Arrow pass, no float vector read. Pure ADC
+    (``refine_with=None``) ranks by ``adc_cosine = 1 − d²/2`` rounded
+    to 4. Otherwise the per-query ADC ``shortlist`` (``"auto"`` =
+    :func:`_auto_shortlist` of the store's row count) is re-ranked by
+    exact cosine against the raw vectors (point lookups of
+    shortlist·|queries| raw vectors) into ``cosine_sim``."""
+    import numpy as np
+    import pandas as pd
+
+    m = lut.shape[1]
+    qpos = {int(q): i for i, q in enumerate(qids)}
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            C = np.array(list(pdf["codes"]), dtype=np.int64)
+            ids = pdf["id"].to_numpy()
+            if "query_id" in pdf.columns:  # probed pairs
+                qi = pdf["query_id"].map(qpos).to_numpy()
+                b = np.arange(len(C))
+            else:  # every query against every row, query-major
+                qi, b = np.divmod(np.arange(len(qids) * len(C)), len(C))
+            d2 = sum(lut[qi, j, C[b, j]] for j in range(m))
+            yield pd.DataFrame(
+                {"query_id": qids[qi], "neighbor_id": ids[b], "d2": d2}
+            )
+
+    scored = (
+        rows.mapInPandas(score, schema="query_id long, neighbor_id long, d2 double")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(1.0 - F.col("d2") / 2.0, 4).alias("adc_cosine"),
+        )
+    )
     if refine_with is None:
         return _topk_per_query(scored, "adc_cosine", k)
+    if shortlist == "auto":
+        # resolved only when a refine pass consumes it: on a pre-meta
+        # store the auto depth needs a full index count, which
+        # pure-ADC serving should never pay
+        from tiki_data_pipeline_spark.sources.files import read_store_meta
+
+        n_rows = (read_store_meta(index_path) or {}).get("n_rows")
+        shortlist = _auto_shortlist(n_rows or store_data(spark, index_path).count())
     short = _topk_per_query(scored, "adc_cosine", shortlist).select(
         "query_id", "neighbor_id"
     )
@@ -2767,13 +2812,7 @@ def pq_encode(
     m, _, dsub = cb.shape
     sq = (cb * cb).sum(axis=2)  # (m, k)
 
-    base = (
-        embeddings.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-        .withColumn("nrm", _norm(F.col("v")))
-        .filter(F.col("nrm") > 0)
-        .select("id", "v")
-    )
+    base = _admitted_rows(embeddings, id_col, vec_col).select("id", "v")
 
     def encode(batches):
         for pdf in batches:
@@ -2869,77 +2908,20 @@ def pq_index_topk(
     still touches no floats), and the output becomes the exact-contract
     ``(query_id, neighbor_id, cosine_sim)`` — measured recall@5 = 1.0
     at the auto depth on the synthetic corpus at every stress level."""
-    import numpy as np
-    import pandas as pd
-
     from tiki_data_pipeline_spark.sources.files import (
+        apply_tombstones,
         check_store_meta,
-        read_store_meta,
     )
 
     check_store_meta(index_path, {"kind": "pq"})
-    if shortlist == "auto" and refine_with is not None:
-        # resolved only when a refine pass will consume it: on a
-        # pre-meta store the auto depth needs a full index count,
-        # which pure-ADC serving should never pay
-        meta = read_store_meta(index_path) or {}
-        n_rows = meta.get("n_rows") or store_data(spark, index_path).count()
-        shortlist = _auto_shortlist(n_rows)
-    cb = _pq_codebook_mat(spark, index_path)
-    m, _, dsub = cb.shape
-
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-        .withColumn("nrm", _norm(F.col("v")))
-        .filter(F.col("nrm") > 0)
-        .collect()
+    qids, lut = _pq_luts(
+        _pq_codebook_mat(spark, index_path),
+        _admitted_queries(queries, id_col, vec_col),
     )
-    _check_query_set(len(qrows))
-    qids = np.array([r["id"] for r in qrows], dtype=np.int64)
-    Q = np.array([r["v"] for r in qrows], dtype=np.float64)
-    Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    # LUT[qi, j, c] = |q_sub − cb[j, c]|²
-    lut = np.stack(
-        [
-            ((Q[:, j * dsub : (j + 1) * dsub][:, None, :] - cb[j][None, :, :]) ** 2).sum(
-                axis=2
-            )
-            for j in range(m)
-        ],
-        axis=1,
-    )
-
-    def score(batches):
-        for pdf in batches:
-            C = np.array(list(pdf["codes"]), dtype=np.int64)  # (B, m)
-            ids = pdf["id"].values
-            # d2[qi, b] = Σ_j LUT[qi, j, C[b, j]]
-            d2 = np.zeros((len(qids), len(C)), dtype=np.float64)
-            for j in range(m):
-                d2 += lut[:, j, C[:, j]]
-            qi, b = np.where(np.ones_like(d2, dtype=bool))
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[qi],
-                    "neighbor_id": ids[b],
-                    "d2": d2[qi, b],
-                }
-            )
-
-    from tiki_data_pipeline_spark.sources.files import apply_tombstones
-
     codes = apply_tombstones(store_data(spark, index_path), index_path)
-    scored = (
-        codes.mapInPandas(score, schema="query_id long, neighbor_id long, d2 double")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(1.0 - F.col("d2") / 2.0, 4).alias("adc_cosine"),
-        )
+    return _adc_topk(
+        spark, index_path, codes, qids, lut, refine_with, shortlist, k, id_col, vec_col
     )
-    return _refine_or_adc(scored, refine_with, shortlist, k, id_col, vec_col)
 
 
 def append_pq_index(
@@ -2948,34 +2930,20 @@ def append_pq_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> None:
+) -> int:
     """Add delta vectors to an existing PQ index: encode them with the
     PERSISTED codebook (frozen at build time — FAISS add-after-train
     semantics, same rationale as :func:`append_ivf_index`) and append
-    the code rows; ids already stored are skipped (idempotent ingest).
-    Re-train + re-encode when quantization error drifts — an offline
-    decision, not an ingest-path one (monitor via
-    :func:`ivf_drift_report` on the same corpus)."""
-    from tiki_data_pipeline_spark.sources.files import (
-        check_store_meta,
-        read_store_meta,
-        reject_tombstoned,
-        update_store_meta,
+    the code rows. Idempotent like every ANN append
+    (:func:`_append_index`): stored ids are skipped and an id
+    repeated in the delta is added once; ``n_rows`` grows by the rows
+    added. Returns that count. Re-train + re-encode when quantization
+    error drifts — an offline decision, not an ingest-path one
+    (monitor via :func:`ivf_drift_report` on the same corpus)."""
+    return _append_index(
+        spark, embeddings, path, id_col, vec_col, {"kind": "pq"}, None,
+        lambda delta, _: pq_encode(delta, _pq_codebook_mat(spark, path), "id", "v"),
     )
-
-    check_store_meta(path, {"kind": "pq"})
-    reject_tombstoned(spark, path, embeddings, id_col)
-    cb = _pq_codebook_mat(spark, path)
-    stored = store_data(spark, path).select("id")
-    fresh = embeddings.join(
-        stored.withColumnRenamed("id", id_col), id_col, "anti"
-    )
-    codes = pq_encode(fresh, cb, id_col=id_col, vec_col=vec_col)
-    store_put(codes, path, "append")
-    if "n_rows" in (read_store_meta(path) or {}):
-        update_store_meta(
-            path, {"n_rows": int(store_data(spark, path).count())}
-        )
 
 
 def write_ivfpq_index(
@@ -3010,7 +2978,7 @@ def write_ivfpq_index(
     from tiki_data_pipeline_spark.sources.files import write_store_meta
 
     spark = embeddings.sparkSession
-    base = _ivf_index_rows(embeddings, id_col, vec_col)
+    base = _admitted_rows(embeddings, id_col, vec_col)
     n_rows = base.count()
     if n_centroids == "auto":
         n_centroids = auto_n_centroids(n_rows)
@@ -3020,11 +2988,9 @@ def write_ivfpq_index(
         )
     if codebook is None:
         codebook = pq_train(embeddings, m=m, k=k, id_col=id_col, vec_col=vec_col)
-    assigned = assign_to_centroids(base.select("id", "v"), centroids)
-    codes = pq_encode(embeddings, codebook, id_col=id_col, vec_col=vec_col)
-    rows = codes.join(assigned, "id")
     if partitioned is None:
         partitioned = n_rows >= partition_min_rows
+    rows = _ivfpq_rows(base, centroids, codebook)
     _write_index_rows(rows, path, "overwrite", "cid", partitioned)
     store_put(centroids, path, "overwrite", sub="_centroids")
     store_put(_pq_codebook_df(spark, codebook), path, "overwrite", sub="_codebook")
@@ -3074,106 +3040,34 @@ def ivfpq_index_topk(
     ADC ``shortlist`` with exact cosine (the
     :func:`pq_index_topk` refine contract). Output columns match the
     family: ``adc_cosine`` pure, ``cosine_sim`` refined."""
-    import numpy as np
-
-    from tiki_data_pipeline_spark.sources.files import (
-        check_store_meta,
-        read_store_meta,
-    )
+    from tiki_data_pipeline_spark.sources.files import check_store_meta
 
     check_store_meta(index_path, {"kind": "ivfpq"})
     cb = _pq_codebook_mat(spark, index_path)
-    m, _, dsub = cb.shape
     cids, cmat = _read_centroid_mat(spark, index_path)
-    if shortlist == "auto" and refine_with is not None:
-        # see pq_index_topk: only a refine pass reads the shortlist,
-        # so pure-ADC serving skips the (possibly full-count) resolve
-        meta = read_store_meta(index_path) or {}
-        shortlist = _auto_shortlist(
-            meta.get("n_rows") or store_data(spark, index_path).count()
-        )
-    if nprobe == "auto":
-        # Prefer the store's measured calibration (written by
-        # calibrate_ivfpq_nprobe / write_ivfpq_index) over the
-        # closed-form floor: the 1/16-of-lists convention assumes
-        # neighbors concentrate in the query's nearest lists, which
-        # near-orthogonal corpora violate — r8's SCALE table showed
-        # recall@5 = 0.88 at 200k vectors under the floor alone.
-        meta = read_store_meta(index_path) or {}
-        if meta.get("calibrated_nprobe"):
-            nprobe = int(meta["calibrated_nprobe"])
-        else:
-            n_rows = meta.get("n_rows") or store_data(spark, index_path).count()
-            nprobe = auto_nprobe(int(n_rows), len(cids), k)
-
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-        .limit(MAX_QUERY_SET + 1)
-        .collect()
+    nprobe = _resolve_nprobe(spark, index_path, nprobe, len(cids), k)
+    q_rows = _admitted_queries(queries, id_col, vec_col)
+    qids, lut = _pq_luts(cb, q_rows)
+    probe_rows = [
+        (qid, int(cids[i]))
+        for qid, qv, _ in q_rows
+        for i in _centroid_order(cids, cmat, qv)[:nprobe]
+    ]
+    cand = _probed_candidates(
+        spark, index_path, "cid", probe_rows, "query_id long, cid int"
     )
-    _check_query_set(len(q_rows))
-    luts: dict = {}
-    probe_rows = []
-    for r in q_rows:
-        qv = np.asarray(r["v"], dtype=np.float64)
-        qn = float(np.linalg.norm(qv))
-        if qn == 0:
-            continue
-        d = -2.0 * (cmat @ qv) + (cmat * cmat).sum(axis=1)
-        order = np.lexsort((cids, d))[: min(int(nprobe), len(cids))]
-        probe_rows.extend((int(r["id"]), int(cids[i])) for i in order)
-        qu = qv / qn
-        luts[int(r["id"])] = np.stack(
-            [
-                ((qu[j * dsub : (j + 1) * dsub][None, :] - cb[j]) ** 2).sum(axis=1)
-                for j in range(m)
-            ]
-        )
-    probe_cids = sorted({c for _, c in probe_rows})
-    probes = spark.createDataFrame(probe_rows, schema="query_id long, cid int")
-    from tiki_data_pipeline_spark.sources.files import apply_tombstones
-
-    index = apply_tombstones(
-        store_data(spark, index_path).filter(
-            F.col("cid").isin(probe_cids)  # partition pruning, not a scan
-        ),
+    return _adc_topk(
+        spark,
         index_path,
+        cand.select("query_id", "id", "codes"),
+        qids,
+        lut,
+        refine_with,
+        shortlist,
+        k,
+        id_col,
+        vec_col,
     )
-    cand = index.join(F.broadcast(probes), "cid").filter(
-        F.col("id") != F.col("query_id")
-    )
-
-    import pandas as pd
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.array(list(pdf["codes"]), dtype=np.int64)
-            qi = pdf["query_id"].values
-            d2 = np.empty(len(C), dtype=np.float64)
-            for q in np.unique(qi):
-                sel = qi == q
-                lut = luts[int(q)]
-                Cq = C[sel]
-                d2[sel] = sum(lut[j, Cq[:, j]] for j in range(m))
-            yield pd.DataFrame(
-                {
-                    "query_id": qi,
-                    "neighbor_id": pdf["id"].values,
-                    "d2": d2,
-                }
-            )
-
-    scored = cand.select("query_id", "id", "codes").mapInPandas(
-        score, schema="query_id long, neighbor_id long, d2 double"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(1.0 - F.col("d2") / 2.0, 4).alias("adc_cosine"),
-    )
-    return _refine_or_adc(scored, refine_with, shortlist, k, id_col, vec_col)
 
 
 def calibrate_index_nprobe(
@@ -3213,8 +3107,6 @@ def calibrate_index_nprobe(
     ``nprobe="auto"`` serving picks it up for free."""
     import math
 
-    import numpy as np
-
     from tiki_data_pipeline_spark.sources.files import (
         read_store_meta,
         update_store_meta,
@@ -3228,9 +3120,7 @@ def calibrate_index_nprobe(
         )
     cids, cmat = _read_centroid_mat(spark, index_path)
     n_lists = len(cids)
-    floor = auto_nprobe(
-        int(meta.get("n_rows") or 0), n_lists, k
-    )
+    floor = _nprobe_floor(spark, index_path, meta, n_lists, k)
 
     serve = ivfpq_index_topk if kind == "ivfpq" else ivf_index_topk
     proxy = serve(
@@ -3251,19 +3141,12 @@ def calibrate_index_nprobe(
         .select("id", "cid")
         .collect()
     }
-    q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-        .limit(MAX_QUERY_SET + 1)
-        .collect()
-    )
-    _check_query_set(len(q_rows))
-    rank_of: dict = {}
-    for r in q_rows:
-        qv = np.asarray(r["v"], dtype=np.float64)
-        d = -2.0 * (cmat @ qv) + (cmat * cmat).sum(axis=1)
-        order = np.lexsort((cids, d))
-        rank_of[int(r["id"])] = {int(cids[c]): i for i, c in enumerate(order)}
+    rank_of = {
+        int(qid): {
+            int(cids[c]): i for i, c in enumerate(_centroid_order(cids, cmat, qv))
+        }
+        for qid, qv, _ in _admitted_queries(queries, id_col, vec_col)
+    }
 
     ranks = sorted(
         rank_of[int(p["query_id"])][cid_of[p["neighbor_id"]]] for p in pairs
@@ -3308,39 +3191,19 @@ def append_ivfpq_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> None:
+) -> int:
     """Add delta vectors to an existing IVF-PQ index: assign to the
     persisted coarse centroids and encode with the persisted codebook
     (BOTH quantizers frozen — add-after-train), appending to the
-    matching lists; stored ids are skipped (idempotent). Layout
-    auto-detected like the other appends; retrain is the offline
-    drift decision (:func:`ivf_drift_report` on the same corpus)."""
-    from tiki_data_pipeline_spark.sources.files import (
-        check_store_meta,
-        read_store_meta,
-        update_store_meta,
+    matching lists. Idempotent like every ANN append
+    (:func:`_append_index`): stored ids are skipped and an id
+    repeated in the delta is added once; ``n_rows`` grows by the rows
+    added. Returns that count. Layout auto-detected like the other
+    appends; retrain is the offline drift decision
+    (:func:`ivf_drift_report` on the same corpus)."""
+    return _append_index(
+        spark, embeddings, path, id_col, vec_col, {"kind": "ivfpq"}, "cid",
+        lambda d, _: _ivfpq_rows(
+            d, _require_sub(spark, path, "_centroids"), _pq_codebook_mat(spark, path)
+        ),
     )
-
-    check_store_meta(path, {"kind": "ivfpq"})
-    from tiki_data_pipeline_spark.sources.files import reject_tombstoned
-
-    reject_tombstoned(spark, path, embeddings, id_col)
-    cb = _pq_codebook_mat(spark, path)
-    centroids = _require_sub(spark, path, "_centroids")
-    stored = store_data(spark, path).select("id")
-    fresh = embeddings.join(
-        stored.withColumnRenamed("id", id_col), id_col, "anti"
-    )
-    base = _ivf_index_rows(fresh, id_col, vec_col)
-    n_delta = base.count()
-    if not n_delta:
-        return
-    assigned = assign_to_centroids(base.select("id", "v"), centroids)
-    codes = pq_encode(fresh, cb, id_col=id_col, vec_col=vec_col)
-    rows = codes.join(assigned, "id")
-    _write_index_rows(
-        rows, path, "append", "cid", _detect_partitioned(path, "cid")
-    )
-    meta = read_store_meta(path) or {}
-    if "n_rows" in meta:
-        update_store_meta(path, {"n_rows": int(meta["n_rows"]) + int(n_delta)})

@@ -589,8 +589,8 @@ def incremental_embedding_sink(
     UNIQUE vectors are appended to the index so the next micro-batch
     dedups against them. Of within-batch identical vectors one min-id
     survivor enters the store, and an id already present in the index
-    is never appended again (the stored-id anti-join keeps epoch
-    retries idempotent). A NULL or zero-norm vector is statused
+    is never appended again (the index append is idempotent, so an
+    epoch retry adds nothing). A NULL or zero-norm vector is statused
     ``no_vector`` — not ``unique`` — so it is never "appended" (the
     index admits only scoreable vectors; coalescing it to unique made
     it re-report unique on every epoch forever). The caller's
@@ -626,19 +626,10 @@ def incremental_embedding_sink(
             .agg(F.min("vec_id").alias("vec_id"))
             .select("vec_id")
         )
-        from tiki_data_pipeline_spark.sources.files import store_data
-
-        stored_ids = store_data(spark, index_path).select(
-            F.col("id").alias("vec_id")
+        # the append skips stored ids and a repeated vec_id itself
+        SIM.append_lsh_index(
+            uniq.join(survivors, "vec_id", "semi"), index_path, n_planes=None
         )
-        to_add = (
-            uniq.join(survivors, "vec_id", "semi")
-            .join(stored_ids, "vec_id", "anti")
-            # a batch carrying the same vec_id twice (semi join keeps
-            # left-side duplicates) must still append the id once
-            .dropDuplicates(["vec_id"])
-        )
-        SIM.append_lsh_index(to_add, index_path, n_planes=None)
         statuses.append((epoch_id, status.count()))
 
     return (
@@ -702,17 +693,7 @@ def incremental_semantic_sink(
             .agg(F.min("vec_id").alias("vec_id"))
             .select("vec_id")
         )
-        from tiki_data_pipeline_spark.sources.files import store_data
-
-        stored_ids = store_data(spark, index_path).select(
-            F.col("id").alias("vec_id")
-        )
-        to_add = (
-            uniq.join(survivors, "vec_id", "semi")
-            .join(stored_ids, "vec_id", "anti")
-            .dropDuplicates(["vec_id"])
-        )
-        SIM.append_ivf_index(spark, to_add, index_path)
+        SIM.append_ivf_index(spark, uniq.join(survivors, "vec_id", "semi"), index_path)
         statuses.append((epoch_id, status.count()))
 
     return (

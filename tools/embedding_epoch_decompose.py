@@ -3,7 +3,7 @@
 r13 ask #2's measurement half; the vector twin of
 ``epoch_cost_decompose.py``): run the sink's per-epoch work MANUALLY
 — status serve, decision checkpoint, unique/survivor derivation,
-store-id anti-join, index append — timing each piece, plus the status
+index append (which skips stored ids itself) — timing each piece, plus the status
 serve's own sub-components (dim probe, probe emission, candidate
 scoring) as overlapping shares. r13 measured status 8.0 s / append
 2.7 s of an ~11 s epoch at 10× but never went below stage level.
@@ -38,7 +38,6 @@ def main() -> None:
     shutil.rmtree(OUT, ignore_errors=True)
 
     from tiki_data_pipeline_spark.operators import similarity as SIM
-    from tiki_data_pipeline_spark.sources.files import store_data
 
     vecs = replicated_vectors(spark, n)
     seed = vecs.filter(F.col("vec_id") < 10_000_000)
@@ -98,18 +97,9 @@ def main() -> None:
             .agg(F.min("vec_id").alias("vec_id"))
             .select("vec_id")
         )
-        stored_ids = t(
-            "stored_ids_scan",
-            lambda: store_data(spark, store)
-            .select(F.col("id").alias("vec_id"))
-            .localCheckpoint(),
-        )
         to_add = t(
             "to_add_derive",
-            lambda: uniq.join(survivors, "vec_id", "semi")
-            .join(stored_ids, "vec_id", "anti")
-            .dropDuplicates(["vec_id"])
-            .localCheckpoint(),
+            lambda: uniq.join(survivors, "vec_id", "semi").localCheckpoint(),
         )
         t("append_index", lambda: SIM.append_lsh_index(to_add, store, n_planes=None))
         t("status_count", lambda: status.count())
