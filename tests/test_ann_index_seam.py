@@ -11,7 +11,11 @@ from pyspark.sql import functions as F
 
 from tiki_data_pipeline_spark.io import load_table
 from tiki_data_pipeline_spark.operators import similarity as SIM
-from tiki_data_pipeline_spark.sources.files import read_store_meta, store_data
+from tiki_data_pipeline_spark.sources.files import (
+    delete_from_store,
+    read_store_meta,
+    store_data,
+)
 
 QIDS = [3, 11, 42, 77, 123]
 KINDS = ["lsh", "ivf", "pq", "ivfpq"]
@@ -51,17 +55,33 @@ def _topk(spark, kind, path, queries):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.parametrize("kind", KINDS)
-def test_append_is_idempotent(spark, sf_dir, tmp_path, kind):
-    """Build on half of the corpus, append the other half, then
-    re-send the whole corpus plus a delta repeating one id: the store
-    keeps one row per id, meta ``n_rows`` equals the row count, and
-    the served top-k does not move. A new id sent twice in one delta
-    is added once."""
+@pytest.fixture(scope="module", params=KINDS)
+def store(request, spark, sf_dir, tmp_path_factory):
+    """One index per kind, built on the even ids with the odd ids
+    appended. The idempotency test appends to it; the admission test
+    only reads it, so it holds either way."""
+    kind = request.param
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    path = str(tmp_path / kind)
+    path = str(tmp_path_factory.mktemp(kind) / "index")
     _write(kind, emb.filter(F.col("vec_id") % 2 == 0), path)
     _append(spark, kind, emb.filter(F.col("vec_id") % 2 == 1), path)
+    return kind, emb, path
+
+
+def _one(spark, vec_id, vec):
+    return spark.createDataFrame(
+        [(vec_id, list(vec))], "vec_id long, embedding array<double>"
+    )
+
+
+def test_append_is_idempotent(spark, store):
+    """Re-send the whole corpus plus a delta repeating one id: the
+    store keeps one row per id, meta ``n_rows`` equals the row count,
+    and the served top-k does not move. A new id sent twice in one
+    delta is added once, also with two different vectors, and its
+    whole row is built from one of them. A tombstoned id is refused
+    until the fold, stored or not."""
+    kind, emb, path = store
     queries = emb.filter(F.col("vec_id").isin(QIDS))
     before = _topk(spark, kind, path, queries)
 
@@ -87,15 +107,38 @@ def test_append_is_idempotent(spark, sf_dir, tmp_path, kind):
         distinct_vectors = store_data(spark, path).select(F.xxhash64("v")).distinct()
         assert read_store_meta(path)["n_distinct_vectors"] == distinct_vectors.count()
 
+    # one id, two vectors: its row is the row either vector gets on its
+    # own (partition key, codes and norm all from the same vector)
+    vecs = {r[0]: r[1] for r in queries.collect()}
+    pair = _one(spark, 10**6 + 1, vecs[QIDS[1]]).unionByName(
+        _one(spark, 10**6 + 1, vecs[QIDS[2]])
+    )
+    assert _append(spark, kind, pair, path) == 1
+    singles = _one(spark, 10**6 + 2, vecs[QIDS[1]]).unionByName(
+        _one(spark, 10**6 + 3, vecs[QIDS[2]])
+    )
+    assert _append(spark, kind, singles, path) == 2
+    rows = {
+        r["id"]: {**r.asDict(), "id": None}
+        for r in store_data(spark, path).filter(F.col("id") > 10**6).collect()
+    }
+    assert rows[10**6 + 1] in (rows[10**6 + 2], rows[10**6 + 3])
+    assert _counts() == (n + 4, n + 4, n + 4)
 
-@pytest.mark.parametrize("kind", KINDS)
-def test_serve_admits_only_scoreable_queries(spark, sf_dir, tmp_path, kind):
+    # a taken-down id is refused until the fold, stored or not
+    victim = spark.createDataFrame([(QIDS[3],), (10**7,)], "id long")
+    delete_from_store(spark, path, victim)
+    for delta in (emb, _one(spark, 10**7, vecs[QIDS[4]])):
+        with pytest.raises(ValueError, match="tombstoned"):
+            _append(spark, kind, delta, path)
+    assert _counts() == (n + 4, n + 4, n + 4)
+
+
+def test_serve_admits_only_scoreable_queries(spark, store):
     """A NULL vector, a vector with one NULL element and a zero vector
     have no defined cosine: none of them may appear in a serve's
     output, beside a normal query or alone."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    path = str(tmp_path / kind)
-    _write(kind, emb, path)
+    kind, emb, path = store
     good = emb.filter(F.col("vec_id") == QIDS[0]).first()["embedding"]
     bad = [
         (900_001, None),

@@ -126,6 +126,32 @@ def test_corpus_pipeline_embedding_branch(spark, tmp_path):
     assert again["bucket_stats"]["rows"] == 3
 
 
+def test_corpus_pipeline_rerun_between_takedown_and_maintain(spark, tmp_path):
+    """A re-run of the same batch after a takedown, before maintain()
+    folds it, appends nothing: the deleted id is still stored, and the
+    index append skips stored ids. After the fold the id is gone and a
+    re-run ingests it again (delete, fold, re-ingest)."""
+    from tiki_data_pipeline_spark.sources.files import delete_from_store, store_data
+
+    base = [float((i * 7) % 13 - 6) for i in range(8)]
+    batch = spark.createDataFrame(
+        [(0, base), (2, [9.0, -7.0] * 4)], "vec_id long, embedding array<float>"
+    )
+    pipe = CorpusPipeline(spark, str(tmp_path))
+    index = pipe.run_embeddings(batch)["index_dir"]
+    delete_from_store(spark, index, spark.createDataFrame([(2,)], "id long"))
+
+    again = pipe.run_embeddings(batch, threshold=0.99)
+    assert again["unique"] == 2  # each meets only itself in the store
+    assert again["appended"] == 0
+    assert store_data(spark, index).count() == 2
+
+    assert pipe.maintain(index)["folded"] == 1
+    after = pipe.run_embeddings(batch, threshold=0.99)
+    assert after["appended"] == 1
+    assert store_data(spark, index).count() == 2
+
+
 def test_corpus_pipeline_semantic_stage(spark, tmp_path):
     """SemDeDup stage composed after the near-dup fence: a vector
     that PASSES the LSH fence (cos < 0.99 to everything stored) but

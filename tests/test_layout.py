@@ -74,31 +74,6 @@ class TestZorderPruning:
             .filter(F.col("count") != 2).count() == 0
         )
 
-    def test_file_cuts_independent_of_session_state(
-        self, spark, grid, tmp_path
-    ):
-        # the same table written after unrelated RDDs lands in the same
-        # files: cut points come from the data, not a sampling seed
-        def files_of(path):
-            rows = (
-                spark.read.parquet(path)
-                .select("id", F.input_file_name().alias("f"))
-                .collect()
-            )
-            by_file: dict = {}
-            for r in rows:
-                by_file.setdefault(r["f"].rsplit("/", 1)[1][:10], set()).add(
-                    r["id"]
-                )
-            return sorted(map(sorted, by_file.values()))
-
-        a, b = str(tmp_path / "za"), str(tmp_path / "zb")
-        L.write_zordered(grid, a, ["x", "y"], target_files=8)
-        for _ in range(5):
-            spark.sparkContext.emptyRDD()
-        L.write_zordered(grid, b, ["x", "y"], target_files=8)
-        assert files_of(a) == files_of(b)
-
     def test_layout_meta_recorded(self, spark, grid, tmp_path):
         zpath = str(tmp_path / "z4")
         meta = L.write_zordered(grid, zpath, ["x", "y"], bits=4, target_files=2)
@@ -124,12 +99,6 @@ class TestBucketIndex:
             L.zorder_value([F.lit(3), F.lit(0)], bits=2).alias("z")
         )
         assert df.collect()[0]["z"] == 5
-
-
-    def test_aligned_cut_prefers_block_starts(self):
-        assert L._aligned_cut(4090, 4100) == 4096
-        assert L._aligned_cut(5, 7) == 6
-        assert L._aligned_cut(9, 9) == 9
 
 
 class TestAppend:

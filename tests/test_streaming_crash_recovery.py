@@ -284,6 +284,31 @@ def test_incremental_embedding_sink_cross_batch_and_replay(
     assert ids == [2, 11, 25], f"index not canonical after replay: {ids}"
 
 
+def test_incremental_embedding_sink_rerun_after_takedown(spark, tmp_path):
+    """A takedown between two runs of the sink over the same source:
+    the second run does not fail and does not append the taken-down
+    id again (the append refuses a tombstoned id until the fold)."""
+    from tiki_data_pipeline_spark.operators import similarity as SIM
+    from tiki_data_pipeline_spark.sources.files import delete_from_store
+
+    store = str(tmp_path / "vstore")
+    SIM.write_lsh_index(
+        spark.createDataFrame([(2, VBASE)], "vec_id long, embedding array<float>"),
+        store,
+    )
+    src = _mk_vec_source(tmp_path)
+    q = _run_vec(spark, src, store, str(tmp_path / "ckpt1"), [])
+    q.awaitTermination(120)
+    assert q.exception() is None
+    delete_from_store(spark, store, spark.createDataFrame([(11,)], "id long"))
+
+    q2 = _run_vec(spark, src, store, str(tmp_path / "ckpt2"), [])
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+    ids = [r["id"] for r in store_data(spark, store).collect()]
+    assert ids.count(11) == 1 and len(ids) == len(set(ids)), sorted(ids)
+
+
 def test_run_lineage_spelling_invariant(tmp_path):
     """Equivalent spellings of one checkpoint dir resume the SAME
     Spark checkpoint, so they must map to the same run id — a

@@ -246,9 +246,10 @@ class CorpusPipeline:
         ``no_vector`` against the store (``lsh_index_dedup_status`` —
         exact-first staging, scale-safe probe defaults), the decisions
         land in the ``embedding_status`` stage parquet, and only the
-        unique survivors are appended (the index append skips stored
-        ids, so the call is idempotent). The report carries per-status counts plus
-        the store's bucket-occupancy stats; a hot bucket count > 0
+        unique survivors are appended (the append skips stored ids, so
+        the call is idempotent; a taken-down id waits for :meth:`maintain`
+        to fold it). The report carries per-status counts plus the
+        store's bucket-occupancy stats; a hot bucket count > 0
         recommends a rebuild before it becomes a serve bottleneck.
 
         The streaming twin of this composition is
@@ -268,6 +269,7 @@ class CorpusPipeline:
         and the quantizer's retrain recommendation.
         """
         from tiki_data_pipeline_spark.operators import similarity as SIM
+        from tiki_data_pipeline_spark.sources.files import apply_tombstones
 
         report: dict = {"input_vectors": vectors.count()}
         index = self._path("lsh_index")
@@ -305,8 +307,10 @@ class CorpusPipeline:
                 .agg(F.min(id_col).alias(id_col))
                 .select(id_col, vec_col)
             )
+            # the append skips stored ids but refuses a taken-down one
             report["appended"] = SIM.append_lsh_index(
-                survivors, index, id_col=id_col, vec_col=vec_col, n_planes=None
+                apply_tombstones(survivors, index, id_col),
+                index, id_col=id_col, vec_col=vec_col, n_planes=None,
             )
         report["index_dir"] = index
         stats = SIM.lsh_bucket_stats(self.spark, index)
@@ -333,8 +337,8 @@ class CorpusPipeline:
         call bootstraps the IVF index from them (auto-sized quantizer);
         later calls status each survivor against its home inverted
         list and append only the semantically novel ones; survivors
-        already stored are not statused again, so the call is
-        idempotent."""
+        already stored are not statused again, and the append skips
+        stored ids, so the call is idempotent."""
         from tiki_data_pipeline_spark.operators import similarity as SIM
 
         out: dict = {}

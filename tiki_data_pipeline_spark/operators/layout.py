@@ -15,9 +15,9 @@ entirely outside any selective box.
 Everything here is Spark-built-in expression work (bucket lookup is
 a balanced CASE decision tree over the boundary literals — O(log
 buckets) codegen'd compares per row; interleaving is shift/AND/sum
-arithmetic) plus ONE repartition on Z ranges, so the write costs the
-same shuffle any clustered write pays (the Z key is evaluated twice:
-the cut-point quantile pass and the write pass — inherent to
+arithmetic) plus ONE range repartition, so the write costs the same
+shuffle any clustered write pays (the Z key is evaluated twice: the
+range partitioner's sampling pass and the write pass — inherent to
 sorting on a computed key). Equi-depth (quantile) buckets rather than equi-width:
 skewed columns (prices, counts) otherwise collapse most rows into a
 few bucket values and the interleaving degenerates.
@@ -100,47 +100,6 @@ def zorder_value(bucket_cols: list[Column], bits: int = DEFAULT_BITS) -> Column:
     return z
 
 
-def _aligned_cut(lo: int, hi: int) -> int:
-    """The Z value in ``[lo, hi]`` with the most trailing zero bits:
-    the start of the largest aligned Z block that begins there. A file
-    that starts and ends on aligned blocks covers whole quadtree cells,
-    so its min/max rectangle stays tight; a cut a few rows past a
-    block start stretches the next file's rectangle over two blocks."""
-    for k in range(hi.bit_length(), -1, -1):
-        c = -(-lo // (1 << k)) << k  # lo rounded up to a multiple of 2**k
-        if c <= hi:
-            return c
-    return lo
-
-
-def _write_z_ranges(
-    df: DataFrame, z: Column, n: int, path: str, mode: str
-) -> None:
-    """Write ``df`` as ``n`` files holding contiguous ranges of the Z
-    key, each sorted on it. Cut ``i`` is the most aligned Z value
-    (:func:`_aligned_cut`) between the key's ``i/n ∓ 1/(8n)``
-    quantiles over every row (one aggregation job), so each file holds
-    0.75-1.25 of an equal share; a row's file is the count of cuts at
-    or below its key (``repartitionById``). The cut depends on the data
-    alone. ``repartitionByRange`` sampled the key with a seed taken
-    from the RDD id: the same table written at another point of a
-    session got other cuts, and the box pruning of the lifecycle test
-    table moved with them (0.68-0.81 of rows; 0.88 with aligned cuts,
-    0.69 with exact equal-mass ones)."""
-    keyed = df.withColumn("_z", z)
-    tol = 1 / (8 * n)
-    probs = [p for i in range(1, n) for p in (i / n - tol, i / n + tol)]
-    qs = keyed.stat.approxQuantile("_z", probs, 0.001) if n > 1 else []
-    cuts = [_aligned_cut(int(lo), int(hi)) for lo, hi in zip(qs[::2], qs[1::2])]
-    (
-        keyed.repartitionById(n, bucket_index(F.col("_z"), cuts))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -151,7 +110,7 @@ def write_zordered(
 ) -> dict:
     """Write ``df`` to ``path`` clustered by the Z-order of ``cols``.
 
-    One repartition on Z-key ranges (range, not hash: range keeps
+    One range repartition on the Z key (range, not hash: range keeps
     Z-adjacent rows — and therefore value-space-adjacent rows — in
     the same output file) followed by a within-partition sort, so
     every row group's per-column min/max windows are tight. The
@@ -176,7 +135,14 @@ def write_zordered(
     bounds = dict(zip(cols, src.stat.approxQuantile(cols, probs, 0.001)))
     z = zorder_value([bucket_index(F.col(c), bounds[c]) for c in cols], bits)
     n = target_files or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    _write_z_ranges(df, z, int(n), path, "overwrite")
+    (
+        df.withColumn("_z", z)
+        .repartitionByRange(int(n), "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
     meta = {"cols": cols, "bits": bits, "bounds": bounds, "appends": 0}
     with open(os.path.join(path, LAYOUT_META), "w") as f:
         json.dump(meta, f)
@@ -211,7 +177,14 @@ def append_zordered(
     n = target_files or max(
         1, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")) // 8
     )
-    _write_z_ranges(df, z, int(n), path, "append")
+    (
+        df.withColumn("_z", z)
+        .repartitionByRange(int(n), "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+        .write.mode("append")
+        .parquet(path)
+    )
     # lifecycle bookkeeping: how many frozen-grid appends have landed
     # since the last full layout — one input to the maintenance check
     meta["appends"] = int(meta.get("appends", 0)) + 1

@@ -1355,10 +1355,12 @@ def _append_index(
     only their signature ``meta_check``, partition ``key`` (None: flat
     PQ) and ``rows(delta, dim)`` applying the store's frozen quantizer
     to admitted ``(id, v, nrm)`` rows. Idempotent: stored ids are
-    skipped and an id repeated in the delta is added once, so a
-    re-sent delta adds nothing; tombstoned ids are rejected. Each
-    counter the meta records grows by the added rows' own value (a
-    delta-sized pass). Returns the number of rows added."""
+    skipped; an id sent twice is added once, with its vector of least
+    ``(xxhash64(v), v)``. A tombstoned id is refused, stored or not
+    (:func:`reject_tombstoned`). The delta is materialized once, so
+    the stats and the row builder see the same rows. Each meta
+    counter grows by the added rows' own value. Returns the number of
+    rows added."""
     from tiki_data_pipeline_spark.sources.files import (
         check_store_meta,
         read_store_meta,
@@ -1372,14 +1374,16 @@ def _append_index(
     delta = (
         _admitted_rows(embeddings, id_col, vec_col)
         .join(store_data(spark, path).select("id"), "id", "anti")
-        .dropDuplicates(["id"])
+        .groupBy("id")
+        .agg(F.min(F.struct(F.xxhash64("v").alias("h"), "v", "nrm")).alias("r"))
+        .select("id", "r.v", "r.nrm")
+        .localCheckpoint(eager=False)  # computed once, by the stats job
     )
     aggs = [F.count(F.lit(1)).alias("n_rows"), F.max(F.size("v")).alias("dim")]
     if "n_distinct_vectors" in meta:
         aggs.append(
             F.count_distinct(F.xxhash64(F.col("v"))).alias("n_distinct_vectors")
         )
-    # the delta plan reads the store it joins: count before the write
     stats = delta.agg(*aggs).collect()[0]
     if not stats["n_rows"]:
         return 0

@@ -589,14 +589,17 @@ def incremental_embedding_sink(
     UNIQUE vectors are appended to the index so the next micro-batch
     dedups against them. Of within-batch identical vectors one min-id
     survivor enters the store, and an id already present in the index
-    is never appended again (the index append is idempotent, so an
-    epoch retry adds nothing). A NULL or zero-norm vector is statused
-    ``no_vector`` — not ``unique`` — so it is never "appended" (the
-    index admits only scoreable vectors; coalescing it to unique made
-    it re-report unique on every epoch forever). The caller's
-    ``statuses`` list receives (epoch, n_vectors) heartbeats only.
+    is never appended again (the index append skips stored ids, so an
+    epoch retry adds nothing); a taken-down id waits for its fold, so
+    a replay after a takedown neither adds it nor fails. A NULL or
+    zero-norm vector is statused ``no_vector`` — not ``unique`` — so
+    it is never "appended" (the index admits only scoreable vectors;
+    coalescing it to unique made it re-report unique on every epoch
+    forever). The caller's ``statuses`` list receives (epoch,
+    n_vectors) heartbeats only.
     """
     from tiki_data_pipeline_spark.operators import similarity as SIM
+    from tiki_data_pipeline_spark.sources.files import apply_tombstones
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -613,7 +616,8 @@ def incremental_embedding_sink(
             _run_lineage(checkpoint_dir),
             fallback_runs=_lineage_fallbacks(checkpoint_dir),
         )
-        uniq = batch_df.join(
+        # the append skips stored ids but refuses a taken-down one
+        uniq = apply_tombstones(batch_df, index_path, "vec_id").join(
             status.filter(F.col("status") == "unique").select("vec_id"),
             "vec_id",
             "semi",
@@ -626,7 +630,6 @@ def incremental_embedding_sink(
             .agg(F.min("vec_id").alias("vec_id"))
             .select("vec_id")
         )
-        # the append skips stored ids and a repeated vec_id itself
         SIM.append_lsh_index(
             uniq.join(survivors, "vec_id", "semi"), index_path, n_planes=None
         )
@@ -664,9 +667,10 @@ def incremental_semantic_sink(
     as the LSH sink, which also only collapses identical content —
     the next epoch's batch dedups against whichever entered the
     store). NULL / zero-norm vectors status ``no_vector`` and are
-    never appended.
+    never appended; stored and taken-down ids as in the LSH sink.
     """
     from tiki_data_pipeline_spark.operators import similarity as SIM
+    from tiki_data_pipeline_spark.sources.files import apply_tombstones
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -683,7 +687,7 @@ def incremental_semantic_sink(
             _run_lineage(checkpoint_dir),
             fallback_runs=_lineage_fallbacks(checkpoint_dir),
         )
-        uniq = batch_df.join(
+        uniq = apply_tombstones(batch_df, index_path, "vec_id").join(
             status.filter(F.col("status") == "unique").select("vec_id"),
             "vec_id",
             "semi",
