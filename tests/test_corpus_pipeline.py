@@ -9,8 +9,16 @@ from pyspark.sql import functions as F
 
 from tiki_data_pipeline_spark.corpus_pipeline import CorpusPipeline
 from tiki_data_pipeline_spark.io import load_table
+from tiki_data_pipeline_spark.operators import dedup as DD
 
 SF = "/root/testdata/sf0.001"
+
+
+def _assert_counts_match_stages(spark, report, out_dir, stages):
+    """Each ``report[key]`` (observed on the stage write) equals a
+    fresh count of the stage parquet it names."""
+    for key, stage in stages.items():
+        assert report[key] == spark.read.parquet(str(out_dir / stage)).count(), key
 
 
 def test_corpus_pipeline_end_to_end(spark, tmp_path):
@@ -56,6 +64,17 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path):
     }
     assert all(i % 20 != 0 for i in out_ids)
     assert report["after_decontamination"] <= report["after_near_dedup"]
+
+    # the counts are observed on the writes: they equal re-reads
+    assert report["input_docs"] == docs.count()
+    _assert_counts_match_stages(spark, report, tmp_path, {
+        "after_quality": "quality",
+        "after_exact_dedup": "exact_dedup",
+        "after_near_dedup": "near_dedup",
+        "after_decontamination": "decontaminated",
+        "after_repetition": "repetition",
+        "after_sampling": "repetition",
+    })
 
 
 def test_corpus_pipeline_embedding_branch(spark, tmp_path):
@@ -253,6 +272,26 @@ def test_corpus_pipeline_line_dedup_and_source_cap(spark, tmp_path):
     assert src.groupBy("source").count().agg(F.max("count")).collect()[0][0] <= 3
     assert report["after_source_cap"] <= report["after_repetition"]
     assert report["final_docs"] > 0
+
+    # the counts are observed on the writes: they equal re-reads, and
+    # lines_removed equals an independent line-dedup of the redacted
+    # stage (blank-text docs included)
+    assert report["input_docs"] == docs.count()
+    _assert_counts_match_stages(spark, report, tmp_path, {
+        "after_quality": "quality",
+        "after_line_dedup": "line_dedup",
+        "after_exact_dedup": "exact_dedup",
+        "after_near_dedup": "near_dedup",
+        "after_repetition": "repetition",
+        "after_source_cap": "source_capped",
+        "final_docs": "source_capped",
+    })
+    redacted = spark.read.parquet(str(tmp_path / "redacted"))
+    assert report["lines_removed"] == (
+        DD.remove_duplicate_lines(redacted, min_df=2)
+        .agg(F.sum("n_lines_removed"))
+        .collect()[0][0]
+    )
 
 
 def test_corpus_pipeline_dsir_stage_defaults_to_xxhash64(spark, tmp_path):

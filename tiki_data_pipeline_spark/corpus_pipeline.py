@@ -25,7 +25,9 @@ reduction first, so every later stage sees fewer bytes):
 
 Stage boundaries are real parquet writes (restartable artifacts,
 mirroring ``pipeline.Pipeline``'s semantic); the report dict carries
-per-stage survivor counts — the corpus-curation audit trail.
+per-stage survivor counts — the corpus-curation audit trail. Each
+count is an ``Observation`` on the write that produces it, never a
+``count()`` that re-reads what the write just wrote.
 
 :meth:`CorpusPipeline.run_embeddings` is the EMBEDDING branch of the
 same pipeline: staged dedup status against the persisted LSH index →
@@ -41,12 +43,23 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 from tiki_data_pipeline_spark.operators import curation as CU
 from tiki_data_pipeline_spark.operators import dedup as DD
 from tiki_data_pipeline_spark.operators import textstats as TS
 from tiki_data_pipeline_spark.operators.graph import dedup_survivors
 from tiki_data_pipeline_spark.sources.files import write_training_shards
+
+
+def _n_rows():
+    return F.count(F.lit(1)).alias("n")
+
+
+def _observed(obs: Observation) -> int:
+    """The observed ``n`` of an action that has run (a sum over no
+    rows is NULL: 0)."""
+    return obs.get["n"] or 0
 
 
 class CorpusPipeline:
@@ -57,9 +70,12 @@ class CorpusPipeline:
     def _path(self, name: str) -> str:
         return os.path.join(self.out, name)
 
-    def _write(self, df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(self._path(name))
-        return self.spark.read.parquet(self._path(name))
+    def _write(self, df: DataFrame, name: str) -> tuple[DataFrame, int]:
+        """Write stage ``name``; returns the re-read stage and its row
+        count, observed on the write itself."""
+        rows = Observation()
+        df.observe(rows, _n_rows()).write.mode("overwrite").parquet(self._path(name))
+        return self.spark.read.parquet(self._path(name)), _observed(rows)
 
     def run(
         self,
@@ -96,16 +112,24 @@ class CorpusPipeline:
         registry/oracle queries keep the cross-engine-checkable md5
         family; the two modes' weight distributions agree
         statistically (pinned by
-        test_dsir_xxhash64_mode_distribution_parity)."""
-        report: dict = {"input_docs": docs.count()}
+        test_dsir_xxhash64_mode_distribution_parity).
+
+        Every count in the report is read from the action that already
+        saw it: each ``after_*`` and ``final_docs`` from an
+        ``Observation`` on the stage's write, ``input_docs`` from one on
+        the quality write below its filter, and ``lines_removed`` from
+        one on the line-dedup write below its blank-text filter."""
+        report: dict = {}
 
         # 1. quality: keep docs with enough real tokens
-        stats = TS.with_text_stats(docs)
+        seen = Observation()
+        stats = TS.with_text_stats(docs.observe(seen, _n_rows()))
         quality = stats.filter(F.col("n_tokens") >= min_quality_tokens).select(
             "doc_id", "text", "lang"
         )
-        quality = self._write(quality, "quality")
-        report["after_quality"] = quality.count()
+        quality, n_quality = self._write(quality, "quality")
+        report["input_docs"] = _observed(seen)
+        report["after_quality"] = n_quality
 
         # 2. PII redaction — from here on `text` is the redacted text
         redacted = quality.join(
@@ -114,43 +138,45 @@ class CorpusPipeline:
             ),
             "doc_id",
         ).select("doc_id", F.col("redacted_text").alias("text"), "lang")
-        redacted = self._write(redacted, "redacted")
+        redacted, _ = self._write(redacted, "redacted")
 
         # 2b. optional line-level boilerplate removal (corpus-wide df)
         if line_dedup_min_df is not None:
-            cleaned = DD.remove_duplicate_lines(
-                redacted, min_df=line_dedup_min_df
-            )
-            report["lines_removed"] = (
-                cleaned.agg(F.sum("n_lines_removed")).collect()[0][0] or 0
-            )
+            cleaned = DD.remove_duplicate_lines(redacted, min_df=line_dedup_min_df)
+            # observed above the join, below the blank-text filter: on
+            # empty input the join side can be skipped, and a skipped
+            # observation cannot be read
+            removed = Observation()
             redacted = (
                 redacted.select("doc_id", "lang")
                 .join(
-                    cleaned.filter(F.trim(F.col("cleaned_text")) != "").select(
-                        "doc_id", F.col("cleaned_text").alias("text")
+                    cleaned.select(
+                        "doc_id", F.col("cleaned_text").alias("text"), "n_lines_removed"
                     ),
                     "doc_id",
                 )
+                .observe(removed, F.sum("n_lines_removed").alias("n"))
+                .filter(F.trim(F.col("text")) != "")
                 .select("doc_id", "text", "lang")
             )
-            redacted = self._write(redacted, "line_dedup")
-            report["after_line_dedup"] = redacted.count()
+            redacted, n_line_dedup = self._write(redacted, "line_dedup")
+            report["lines_removed"] = _observed(removed)
+            report["after_line_dedup"] = n_line_dedup
 
         # 3. exact dedup: keep each fingerprint's min-id survivor
         exact = DD.exact_dedup(redacted)
         survivors = redacted.join(
             exact.select(F.col("survivor_id").alias("doc_id")), "doc_id", "left_semi"
         )
-        survivors = self._write(survivors, "exact_dedup")
-        report["after_exact_dedup"] = survivors.count()
+        survivors, n_docs = self._write(survivors, "exact_dedup")
+        report["after_exact_dedup"] = n_docs
 
         # 4. near dedup: LSH candidates → connected-component survivors
         pairs = DD.minhash_lsh_near_dups(survivors, threshold=near_dup_threshold)
         near = dedup_survivors(survivors, pairs.select("i", "j"))
         survivors = near.filter(F.col("survivor")).select("doc_id", "text", "lang")
-        survivors = self._write(survivors, "near_dedup")
-        report["after_near_dedup"] = survivors.count()
+        survivors, n_docs = self._write(survivors, "near_dedup")
+        report["after_near_dedup"] = n_docs
 
         # 5. decontamination against the benchmark set (if any): drop
         # the benchmark members themselves (they are HELD OUT, never
@@ -164,8 +190,8 @@ class CorpusPipeline:
                 "doc_id",
                 "left_anti",
             )
-            survivors = self._write(survivors, "decontaminated")
-        report["after_decontamination"] = survivors.count()
+            survivors, n_docs = self._write(survivors, "decontaminated")
+        report["after_decontamination"] = n_docs
 
         # 6. repetition filter
         rep = CU.repetition_stats(survivors)
@@ -174,8 +200,8 @@ class CorpusPipeline:
             "doc_id",
             "left_anti",
         )
-        survivors = self._write(survivors, "repetition")
-        report["after_repetition"] = survivors.count()
+        survivors, n_docs = self._write(survivors, "repetition")
+        report["after_repetition"] = n_docs
 
         # 6b. optional per-source frequency cap (source looked up from
         # the RAW input so stage schemas stay (doc_id, text, lang))
@@ -191,14 +217,14 @@ class CorpusPipeline:
                 "doc_id",
                 "left_semi",
             )
-            survivors = self._write(survivors, "source_capped")
-            report["after_source_cap"] = survivors.count()
+            survivors, n_docs = self._write(survivors, "source_capped")
+            report["after_source_cap"] = n_docs
 
         # 7. deterministic per-language sampling (optional rebalance)
         if sample_tenths:
             survivors = CU.stratified_sample(survivors, sample_tenths)
-            survivors = self._write(survivors, "sampled")
-        report["after_sampling"] = survivors.count()
+            survivors, n_docs = self._write(survivors, "sampled")
+        report["after_sampling"] = n_docs
 
         # 7b. optional DSIR importance sampling toward a target slice
         # (xxhash64 featurization by default — the production mode)
@@ -210,8 +236,8 @@ class CorpusPipeline:
             survivors = survivors.join(
                 picked.select("doc_id"), "doc_id", "left_semi"
             )
-            survivors = self._write(survivors, "dsir_sampled")
-            report["after_dsir"] = survivors.count()
+            survivors, n_docs = self._write(survivors, "dsir_sampled")
+            report["after_dsir"] = n_docs
             report["dsir_hash"] = dsir_hash
 
         # 8. pack into ordered training shards
@@ -219,7 +245,7 @@ class CorpusPipeline:
             survivors, self._path("shards"), seq_len=seq_len, n_shards=n_shards
         )
         report["shard_dir"] = self._path("shards")
-        report["final_docs"] = survivors.count()
+        report["final_docs"] = n_docs
         return report
 
     def run_embeddings(
@@ -294,7 +320,7 @@ class CorpusPipeline:
                 id_col=id_col,
                 vec_col=vec_col,
             )
-            status = self._write(status, "embedding_status")
+            status, _ = self._write(status, "embedding_status")
             for row in status.groupBy("status").count().collect():
                 report[row["status"]] = row["count"]
             uniq = vectors.join(
@@ -366,7 +392,7 @@ class CorpusPipeline:
                 id_col=id_col,
                 vec_col=vec_col,
             )
-            status = self._write(status, "semantic_status")
+            status, _ = self._write(status, "semantic_status")
             for row in status.groupBy("status").count().collect():
                 out[row["status"]] = row["count"]
             novel = fresh.join(

@@ -270,20 +270,28 @@ def _minhash_params(k: int) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signatures(sh: DataFrame, k: int = MINHASH_K, id_col: str = "doc_id") -> DataFrame:
-    """k MinHash values per document in ONE aggregation: k min
-    columns over the universal-hash family (no seed explosion)."""
-    h0 = (_md5_long32(F.col("shingle")).bitwiseAND(F.lit(_H0_MASK))).alias("h0")
-    hashed = sh.select(id_col, h0)
+def _minhash_h0() -> Column:
+    """The 30-bit base hash ``h0`` of a ``shingle`` row."""
+    return (_md5_long32(F.col("shingle")).bitwiseAND(F.lit(_H0_MASK))).alias("h0")
+
+
+def _minhash_mins(k: int) -> list[Column]:
+    """The k MinHash aggregates ``mh0..mh{k-1}`` over an ``h0`` column
+    (:func:`_minhash_h0`), shared by every signature aggregation."""
     # one SQL parse per min column instead of ~6 py4j round trips of
     # Column algebra each: serve CONSTRUCTION is driver-side py4j
     # chatter (r15 profile: 0.18 → 0.045 s per call, results
     # identical) — at k=16 this is built for every minhash serve
-    mins = [
+    return [
         F.expr(f"min((h0 * {a}L + {b}L) % {MINHASH_PRIME}L) AS mh{i}")
         for i, (a, b) in enumerate(_minhash_params(k))
     ]
-    return hashed.groupBy(id_col).agg(*mins)
+
+
+def minhash_signatures(sh: DataFrame, k: int = MINHASH_K, id_col: str = "doc_id") -> DataFrame:
+    """k MinHash values per document in ONE aggregation: k min
+    columns over the universal-hash family (no seed explosion)."""
+    return sh.select(id_col, _minhash_h0()).groupBy(id_col).agg(*_minhash_mins(k))
 
 
 def _band_stack_expr(bands: int, k: int) -> str:
@@ -331,15 +339,23 @@ def minhash_lsh_near_dups(
     ``bands="auto"`` tunes the band count to the threshold via
     :func:`band_params_for_threshold` (the default stays the fixed
     registry layout — persisted stores pin their own band scheme in
-    ``_meta.json``, so auto applies to in-session runs only)."""
+    ``_meta.json``, so auto applies to in-session runs only).
+
+    ONE ``groupBy(id)`` yields each doc's k MinHash columns and its
+    shingle set; a candidate pair's Jaccard is
+    ``size(array_intersect)`` over the two sets — exact shingle
+    strings, so no hash collision can inflate it."""
     if bands == "auto":
         bands = band_params_for_threshold(threshold, k)
     if sh is None:
-        # The shingle set feeds three subtrees (minhash, counts, verify
-        # join); localCheckpoint materializes it once instead of
-        # re-running the explode+distinct per subtree.
-        sh = shingles(docs, n=n, id_col=id_col, text_col=text_col).localCheckpoint()
-    bands_df = lsh_band_signatures(minhash_signatures(sh, k=k, id_col=id_col), bands=bands, k=k, id_col=id_col)
+        # collect_set dedups, so the shingle distinct exchange is skipped
+        sh = shingles(docs, n=n, id_col=id_col, text_col=text_col, distinct=False)
+    sigs = (
+        sh.select(id_col, "shingle", _minhash_h0())
+        .groupBy(id_col)
+        .agg(*_minhash_mins(k), F.collect_set("shingle").alias("_sh"))
+    )
+    bands_df = lsh_band_signatures(sigs, bands=bands, k=k, id_col=id_col)
     left = bands_df.select(F.col(id_col).alias("i"), "band", "band_sig")
     right = bands_df.select(F.col(id_col).alias("j"), "band", "band_sig")
     candidates = (
@@ -348,24 +364,13 @@ def minhash_lsh_near_dups(
         .select("i", "j")
         .distinct()
     )
-    # Exact verification: jaccard over the candidate set only. The
-    # shingle match is an equi-join key (not a post-filter) so Spark
-    # hash-joins instead of nested-looping per candidate pair.
-    counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.select(F.col(id_col).alias("i"), "shingle")
-    b = sh.select(F.col(id_col).alias("j"), "shingle")
-    common = (
-        candidates.join(a, "i")
-        .join(b, ["j", "shingle"])
-        .groupBy("i", "j")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    na = counts.select(F.col(id_col).alias("i"), F.col("n_shingles").alias("n_i"))
-    nb = counts.select(F.col(id_col).alias("j"), F.col("n_shingles").alias("n_j"))
-    jac = F.col("n_common") / (F.col("n_i") + F.col("n_j") - F.col("n_common"))
+    sa = sigs.select(F.col(id_col).alias("i"), F.col("_sh").alias("_a"))
+    sb = sigs.select(F.col(id_col).alias("j"), F.col("_sh").alias("_b"))
+    n_common = F.size(F.array_intersect("_a", "_b"))
+    jac = n_common / (F.size("_a") + F.size("_b") - n_common)
     return (
-        common.join(na, "i")
-        .join(nb, "j")
+        candidates.join(sa, "i")
+        .join(sb, "j")
         .withColumn("jaccard", F.round(jac, 4))
         .filter(F.col("jaccard") >= threshold)
         .select("i", "j", "jaccard")

@@ -2,18 +2,22 @@
 semantics for near-duplicate resolution (a pair list is a graph; a
 dup GROUP is its connected component).
 
-Iterative label propagation, same discipline as the hierarchy
-closure: state referenced once per iteration, eager localCheckpoint
-to cut lineage, bounded iterations (diameter of dup clusters is
-small in practice; cap documented). No GraphX/graphframes needed —
-pure DataFrame joins, which also means AQE handles the skew when one
-giant cluster dominates.
+Label propagation over a per-node state ``(node, nbrs, component)``
+built by ONE aggregation over both edge directions. Each round is one
+message shuffle plus a pointer jump, cut with an eager
+``localCheckpoint``; the number of labels the round changed is an
+``Observation`` on that same checkpoint action, so convergence costs
+no extra Spark job. Bounded rounds (diameter of dup clusters is small
+in practice; cap documented). No GraphX/graphframes needed — pure
+DataFrame joins, which also means AQE handles the skew when one giant
+cluster dominates.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 MAX_ITERATIONS = 15
 
@@ -23,70 +27,63 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) with component = min node id reachable.
 
-    Label propagation + pointer jumping to fixpoint: every node adopts
-    the smallest label among itself and its neighbors, then each label
-    is replaced by ITS label (path halving). The jump makes label
-    distances collapse geometrically, so convergence is O(log diameter)
-    iterations rather than O(diameter) — a diameter-1000 chain (the
-    pathological dup-cluster shape) converges in ~10 rounds. Each
-    iteration is two joins + one aggregation on the edge list.
+    The state build already runs the first propagation step:
+    ``component = least(node, array_min(nbrs))``. Each round then
+    (1) sends every node's label to its neighbours
+    (``explode(nbrs)`` → ``groupBy(node).min``, one shuffle), (2) lets
+    each node take the least label it received and replaces that label
+    by ITS label (pointer jump, path halving), and (3) checkpoints the
+    new state. The jump makes label distances collapse geometrically,
+    so convergence is O(log diameter) rounds rather than O(diameter) —
+    a 200-node chain converges in 8. A round that changes no label is
+    the fixpoint: every edge then carries equal labels, and the
+    component's min node keeps its own id.
 
     Raises ``RuntimeError`` if the fixpoint isn't reached within
-    ``max_iter`` — a silently-unconverged component labeling would
-    split dup clusters and is never acceptable.
+    ``max_iter`` rounds — a silently-unconverged component labeling
+    would split dup clusters and is never acceptable.
     """
-    edges = (
-        pairs.select(F.col(i_col).alias("a"), F.col(j_col).alias("b"))
-        .unionByName(pairs.select(F.col(j_col).alias("a"), F.col(i_col).alias("b")))
-        .distinct()
+    both = pairs.select(
+        F.col(i_col).alias("node"), F.col(j_col).alias("nbr")
+    ).unionByName(pairs.select(F.col(j_col).alias("node"), F.col(i_col).alias("nbr")))
+    state = (
+        both.groupBy("node")
+        .agg(F.collect_set("nbr").alias("nbrs"))
+        # a NULL id joins nothing, so it keeps a NULL label
+        .withColumn(
+            "component",
+            F.when(
+                F.col("node").isNotNull(),
+                F.least(F.col("node"), F.array_min("nbrs")),
+            ),
+        )
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
     for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("component").alias("neighbor_component"))
+        received = (
+            state.select(F.explode("nbrs").alias("node"), "component")
+            .groupBy("node")
+            .agg(F.min("component").alias("_received"))
         )
-        new_labels = labels.join(
-            neighbor_min, labels.node == neighbor_min.a, "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("component"),
-                F.coalesce(F.col("neighbor_component"), F.col("component")),
-            ).alias("component"),
+        # least() skips NULLs: a node that received nothing keeps its label
+        hop = state.join(received, "node", "left").withColumn(
+            "_hop", F.least("component", "_received")
         )
-        # Pointer jump (path halving): component ← component's own
-        # label. Labels are node ids, so this is a self-join; it is
-        # what turns O(diameter) propagation into O(log diameter).
-        roots = new_labels.select(
-            F.col("node").alias("component"), F.col("component").alias("_root")
-        )
-        new_labels = (
-            new_labels.join(roots, "component", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("_root"), F.col("component")),
-                ).alias("component"),
-            )
+        # Pointer jump: a label is a node id, so take that node's
+        # label too; it is what turns O(diameter) propagation into
+        # O(log diameter).
+        roots = hop.select(F.col("node").alias("_hop"), F.col("_hop").alias("_root"))
+        changed = Observation()
+        n_changed = F.count(F.when(F.col("_new") != F.col("component"), 1))
+        state = (
+            hop.join(roots, "_hop", "left")
+            .select("node", "nbrs", F.least("_hop", "_root").alias("_new"), "component")
+            .observe(changed, n_changed.alias("n"))
+            .select("node", "nbrs", F.col("_new").alias("component"))
             .localCheckpoint()
         )
-        converged = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .isEmpty()
-        )
-        labels = new_labels
-        if converged:
-            return labels
+        if changed.get["n"] == 0:
+            return state.select("node", "component")
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations"
     )
