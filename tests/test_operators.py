@@ -88,36 +88,6 @@ def test_minhash_finds_high_jaccard_pairs(spark):
         assert recall >= 0.8, f"MinHash-LSH recall too low: {recall}"
 
 
-def test_distributed_lloyd_matches_numpy_iteration(spark):
-    """The distributed Lloyd step (partial-sum mapInPandas shuffle,
-    kept for corpora whose training sample must stay distributed)
-    computes the same centroid update as a plain numpy iteration."""
-    import numpy as np
-
-    emb = load_table(spark, SF, "embeddings").limit(200)
-    base = emb.select(
-        F.col("vec_id").alias("id"), SIM.as_double(F.col("embedding")).alias("v")
-    ).localCheckpoint()
-    rows = sorted(base.collect(), key=lambda r: r["id"])
-    m = np.array([r["v"] for r in rows], dtype=np.float64)
-    k = 4
-    cent = m[:k].copy()
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
-        schema="cid int, cv array<double>",
-    )
-    got = {
-        r["cid"]: np.array(r["cv"])
-        for r in SIM._lloyd_update(base, cent_df).collect()
-    }
-    d = -2.0 * (m @ cent.T) + (cent * cent).sum(axis=1)
-    a = np.argmin(d, axis=1)
-    for ci in range(k):
-        sel = m[a == ci]
-        if len(sel):
-            assert np.allclose(got[ci], sel.mean(axis=0), atol=1e-9), ci
-
-
 def test_lsh_projection_signs_clear_of_zero_and_stable(spark):
     """Bucket-sign parity guard: numpy BLAS matmul (engine) and a
     sequential per-dimension fold (the DuckDB oracle's accumulation

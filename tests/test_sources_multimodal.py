@@ -293,3 +293,24 @@ def test_training_shard_manifest_roundtrip_and_tamper(spark, tmp_path):
     victim.unlink()
     with pytest.raises(ValueError, match="diverge"):
         verify_training_shards(spark, path)
+
+
+def test_training_shards_empty_export(spark, tmp_path):
+    """An export that packs no document records an empty manifest and
+    verifies, instead of failing to infer a schema from no files."""
+    import json
+
+    from tiki_data_pipeline_spark.sources.files import (
+        verify_training_shards,
+        write_training_shards,
+    )
+
+    path = str(tmp_path / "shards")
+    write_training_shards(
+        spark.createDataFrame([], "doc_id long, text string"), path, n_shards=4
+    )
+    with open(path + "/_meta.json") as f:
+        assert json.load(f) == {
+            "kind": "training_shards", "shards": {}, "total": 0
+        }
+    verify_training_shards(spark, path)

@@ -332,76 +332,20 @@ def test_run_lineage_spelling_invariant(tmp_path):
     assert jobs._run_lineage(str(tmp_path / "other")) != canonical
 
 
-def test_epoch_decisions_migrates_legacy_layout(spark, tmp_path):
-    """A ``_decisions`` log written by the pre-``run`` code (epoch
-    partitions only) must not wedge a resumed stream with
-    UNRESOLVED_COLUMN (ADVICE r6, fixed r8): the layout is migrated
-    once to run=legacy partitions, a retried epoch REUSES its
-    committed legacy decisions (compute must not run), and a NEW
-    lineage's epochs land beside them without mixing layouts."""
-    import os
-
-    store = str(tmp_path / "legacystore")
-    dec = store + "/_decisions"
-    legacy_rows = spark.createDataFrame(
-        [(11, "unique", None, 0), (13, "exact_dup", 2, 0)],
-        "doc_id long, status string, matched_id long, epoch int",
-    )
-    legacy_rows.write.partitionBy("epoch").parquet(dec)
-
-    batch = spark.createDataFrame([(11,), (13,)], "doc_id long")
-
-    def compute():
-        raise AssertionError(
-            "compute ran: committed legacy decisions were not reused"
-        )
-
-    run = jobs._run_lineage(str(tmp_path / "ck"))
-    got = {
-        r["doc_id"]: (r["status"], r["matched_id"])
-        for r in jobs._epoch_decisions(
-            spark, store, 0, batch, "doc_id", compute, run
-        ).collect()
-    }
-    assert got == {11: ("unique", None), 13: ("exact_dup", 2)}
-    # layout migrated on disk: (run, epoch) partitions, no mixed tree
-    assert os.path.isdir(dec + "/run=legacy/epoch=0")
-    assert not any(
-        e.name.startswith("epoch=") for e in os.scandir(dec) if e.is_dir()
-    )
-
-    # a different epoch of the same resumed lineage: no committed
-    # partition anywhere -> compute runs and lands under the new run id
-    batch2 = spark.createDataFrame([(21,)], "doc_id long")
-    out2 = jobs._epoch_decisions(
-        spark,
-        store,
-        1,
-        batch2,
-        "doc_id",
-        lambda: spark.createDataFrame(
-            [(21, "unique", None)], "doc_id long, status string, matched_id long"
-        ),
-        run,
-    )
-    assert [r["doc_id"] for r in out2.collect()] == [21]
-    assert os.path.isdir(dec + f"/run={run}/epoch=1")
-    # the whole log still reads as one dataset
-    allrows = spark.read.parquet(dec)
-    assert allrows.count() == 3
-    assert set(allrows.columns) >= {"doc_id", "status", "matched_id", "run", "epoch"}
-
-
 def test_epoch_decisions_legacy_id_mismatch_recomputes(spark, tmp_path):
-    """A legacy epoch partition whose id set does NOT match the batch
-    (a colliding OTHER lineage's epoch) must fall through to
-    recompute, exactly like a stale same-layout partition."""
+    """A committed ``run=<run>/epoch=0`` partition whose id set does
+    NOT match the batch (stale decisions, not a checkpointed retry)
+    must fall through to recompute: the id-set guard."""
+    from pyspark.sql import functions as F
+
     store = str(tmp_path / "legacystore2")
     dec = store + "/_decisions"
     spark.createDataFrame(
-        [(99, "unique", None, 0)],
-        "doc_id long, status string, matched_id long, epoch int",
-    ).write.partitionBy("epoch").parquet(dec)
+        [(99, "unique", None)],
+        "doc_id long, status string, matched_id long",
+    ).withColumn("run", F.lit("runx")).withColumn(
+        "epoch", F.lit(0)
+    ).write.partitionBy("run", "epoch").parquet(dec)
     batch = spark.createDataFrame([(11,)], "doc_id long")
     ran = []
 
@@ -416,48 +360,6 @@ def test_epoch_decisions_legacy_id_mismatch_recomputes(spark, tmp_path):
     )
     assert ran, "mismatched legacy partition was wrongly reused"
     assert [r["doc_id"] for r in out.collect()] == [11]
-
-
-def test_epoch_decisions_reuses_raw_spelling_lineage(spark, tmp_path):
-    """Upgrade path for the canonicalization fix itself: a store whose
-    epochs were committed under the OLD raw-spelling hash (pre-r8
-    code resumed with a non-canonical checkpoint path) must still
-    reuse those decisions after the upgrade — new writes go under the
-    canonical id, old partitions are consulted as a fallback."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    store = str(tmp_path / "rawstore")
-    dec = store + "/_decisions"
-    raw_spelling = str(tmp_path / "ck") + "/"  # trailing slash
-    old_run = jobs._run_lineage_raw(raw_spelling)
-    new_run = jobs._run_lineage(raw_spelling)
-    assert old_run != new_run
-    spark.createDataFrame(
-        [(11, "unique", None)],
-        "doc_id long, status string, matched_id long",
-    ).withColumn("run", F.lit(old_run)).withColumn(
-        "epoch", F.lit(0)
-    ).write.partitionBy("run", "epoch").parquet(dec)
-
-    batch = spark.createDataFrame([(11,)], "doc_id long")
-
-    def compute():
-        raise AssertionError("raw-spelling lineage decisions not reused")
-
-    got = jobs._epoch_decisions(
-        spark,
-        store,
-        0,
-        batch,
-        "doc_id",
-        compute,
-        new_run,
-        fallback_runs=jobs._lineage_fallbacks(raw_spelling),
-    ).collect()
-    assert [(r["doc_id"], r["status"]) for r in got] == [(11, "unique")]
-    assert os.path.isdir(dec + f"/run={old_run}/epoch=0")
 
 
 def _run_sem(spark, src, store, ckpt, beats):
@@ -591,7 +493,7 @@ def test_incremental_line_sink_crash_replay(
     )
 
     if crash_point == "before_append":
-        real_append = jobs._idempotent_line_count_append
+        real_append = jobs._idempotent_count_append
         calls = {"n": 0}
 
         def flaky(*a, **kw):
@@ -600,13 +502,13 @@ def test_incremental_line_sink_crash_replay(
                 raise RuntimeError("injected crash before count append")
             return real_append(*a, **kw)
 
-        monkeypatch.setattr(jobs, "_idempotent_line_count_append", flaky)
+        monkeypatch.setattr(jobs, "_idempotent_count_append", flaky)
         beats: list = []
         q = _run_line(spark, src, store, out, ckpt, beats)
         with pytest.raises(Exception):
             q.awaitTermination(120)
         monkeypatch.setattr(
-            jobs, "_idempotent_line_count_append", real_append
+            jobs, "_idempotent_count_append", real_append
         )
     else:
 
@@ -661,46 +563,8 @@ def test_epoch_decisions_numeric_looking_run_does_not_crash(spark, tmp_path):
             F.lit(None).cast("long").alias("matched_id"),
         ),
         jobs._run_lineage(str(tmp_path / "ck")),
-        fallback_runs=jobs._lineage_fallbacks(str(tmp_path / "ck")),
     ).collect()
     assert [r["doc_id"] for r in got] == [11]
-
-
-def test_epoch_decisions_reuses_pre_prefix_lineage(spark, tmp_path):
-    """Stores written before the ``r`` run-prefix keyed partitions by
-    the bare 12-hex hash; the prefixed code must still reuse them
-    (bare spellings are in the fallback list). An anchor partition
-    with a non-numeric value pins the column to STRING so the test
-    exercises the reuse path deterministically."""
-    from pyspark.sql import functions as F
-
-    store = str(tmp_path / "barestore")
-    dec = store + "/_decisions"
-    ckpt = str(tmp_path / "ck")
-    bare = jobs._run_lineage(ckpt)[1:]
-    rows = spark.createDataFrame(
-        [(11, "unique", None)],
-        "doc_id long, status string, matched_id long",
-    )
-    rows.withColumn("run", F.lit(bare)).withColumn(
-        "epoch", F.lit(0)
-    ).unionByName(
-        rows.withColumn("run", F.lit("anchor_x")).withColumn(
-            "epoch", F.lit(99)
-        )
-    ).write.partitionBy("run", "epoch").parquet(dec)
-
-    batch = spark.createDataFrame([(11,)], "doc_id long")
-
-    def compute():
-        raise AssertionError("pre-prefix lineage decisions not reused")
-
-    got = jobs._epoch_decisions(
-        spark, store, 0, batch, "doc_id", compute,
-        jobs._run_lineage(ckpt),
-        fallback_runs=jobs._lineage_fallbacks(ckpt),
-    ).collect()
-    assert [(r["doc_id"], r["status"]) for r in got] == [(11, "unique")]
 
 
 # ---------------------------------------------------------------------------
@@ -880,7 +744,7 @@ def test_incremental_span_sink_crash_replay(
     )
 
     if crash_point == "before_append":
-        real_append = jobs._idempotent_span_count_append
+        real_append = jobs._idempotent_count_append
         calls = {"n": 0}
 
         def flaky(*a, **kw):
@@ -889,13 +753,13 @@ def test_incremental_span_sink_crash_replay(
                 raise RuntimeError("injected crash before count append")
             return real_append(*a, **kw)
 
-        monkeypatch.setattr(jobs, "_idempotent_span_count_append", flaky)
+        monkeypatch.setattr(jobs, "_idempotent_count_append", flaky)
         beats: list = []
         q = _run_span(spark, src, store, out, ckpt, beats)
         with pytest.raises(Exception):
             q.awaitTermination(120)
         monkeypatch.setattr(
-            jobs, "_idempotent_span_count_append", real_append
+            jobs, "_idempotent_count_append", real_append
         )
     else:
 

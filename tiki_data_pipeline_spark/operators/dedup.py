@@ -1608,6 +1608,19 @@ def _doc_lines(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _line_df_counts(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """``(lh, df)`` — per trimmed-line hash, the number of documents
+    carrying it: the additive rows of a line-df store."""
+    return (
+        _doc_lines(docs, id_col, text_col)
+        .filter(F.col("lh").isNotNull())
+        .groupBy("lh")
+        .agg(F.count_distinct(F.col(id_col)).alias("df"))
+    )
+
+
 def _cut_dup_lines(
     docs: DataFrame,
     lines: DataFrame,
@@ -1686,14 +1699,7 @@ def write_line_df_store(
         write_store_meta,
     )
 
-    lines = _doc_lines(docs, id_col, text_col)
-    store_put(
-        lines.filter(F.col("lh").isNotNull())
-        .groupBy("lh")
-        .agg(F.count_distinct(F.col(id_col)).alias("df")),
-        path,
-        "overwrite",
-    )
+    store_put(_line_df_counts(docs, id_col, text_col), path, "overwrite")
     write_store_meta(path, {"kind": "line_df"})
 
 
@@ -1731,14 +1737,7 @@ def append_line_df_store(
     _scrub_count_store_ledger(
         spark, path, docs.select(F.col(id_col).alias("id")).distinct()
     )
-    lines = _doc_lines(docs, id_col, text_col)
-    store_put(
-        lines.filter(F.col("lh").isNotNull())
-        .groupBy("lh")
-        .agg(F.count_distinct(F.col(id_col)).alias("df")),
-        path,
-        "append",
-    )
+    store_put(_line_df_counts(docs, id_col, text_col), path, "append")
 
 
 LINE_DF_LEDGER_DIR = "_deleted_ids"
@@ -1943,6 +1942,23 @@ def _doc_span_hashes(
     )
 
 
+def _span_df_counts(
+    docs: DataFrame,
+    span: int,
+    hash_mode: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    fold: str = "arrow",
+) -> DataFrame:
+    """``(h, df)`` — per window hash, the number of documents
+    carrying it: the additive rows of a span-df store."""
+    return (
+        _doc_span_hashes(docs, span, id_col, text_col, hash_mode, fold)
+        .groupBy("h")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+
+
 def _span_store_geometry(path: str) -> tuple[int, str]:
     """The store's pinned window geometry; raises on a non-span store.
     Strict (no legacy tolerance): span stores have always written
@@ -1980,12 +1996,11 @@ def write_span_df_store(
         write_store_meta,
     )
 
-    counts = (
-        _doc_span_hashes(docs, span, id_col, text_col, hash_mode, fold)
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
+    store_put(
+        _span_df_counts(docs, span, hash_mode, id_col, text_col, fold),
+        path,
+        "overwrite",
     )
-    store_put(counts, path, "overwrite")
     write_store_meta(
         path, {"kind": SPAN_DF_KIND, "span": int(span), "hash_mode": hash_mode}
     )
@@ -2008,14 +2023,13 @@ def append_span_df_store(
     _scrub_count_store_ledger(
         spark, path, docs.select(F.col(id_col).alias("id")).distinct()
     )
-    counts = (
-        _doc_span_hashes(docs, span, id_col, text_col, hash_mode, fold)
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
     from tiki_data_pipeline_spark.sources.files import store_put
 
-    store_put(counts, path, "append")
+    store_put(
+        _span_df_counts(docs, span, hash_mode, id_col, text_col, fold),
+        path,
+        "append",
+    )
 
 
 def _scrub_count_store_ledger(spark, path: str, batch_ids: DataFrame) -> None:

@@ -472,11 +472,6 @@ def ivf_train(
     quantizer whose mass skew `ivf_retrain_recommendation` then
     (correctly) flags on day one. Small-k callers (every oracle
     query trains k=16) see the identical sample as before.
-
-    The earlier distributed-Lloyd formulation (per-batch partial sums
-    via mapInPandas, ≤k rows shuffled per batch) lives on in
-    ``_lloyd_update`` for corpora where even the sample must stay
-    distributed.
     """
     import numpy as np
 
@@ -495,46 +490,6 @@ def ivf_train(
     return spark.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         schema="cid int, cv array<double>",
-    )
-
-
-def _lloyd_update(base: DataFrame, centroids: DataFrame) -> DataFrame:
-    """One Lloyd iteration: per-batch numpy partial sums → k-group merge."""
-    import numpy as np
-    import pandas as pd
-
-    rows = sorted(centroids.collect(), key=lambda r: r["cid"])
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = np.array([r["cv"] for r in rows], dtype=np.float64)
-
-    def partial_sums(batches):
-        for pdf in batches:
-            m = np.array(list(pdf["v"]), dtype=np.float64)
-            d = -2.0 * (m @ cmat.T) + (cmat * cmat).sum(axis=1)
-            a = np.argmin(d, axis=1)
-            out_cid, out_sum, out_cnt = [], [], []
-            for ci in np.unique(a):
-                sel = m[a == ci]
-                out_cid.append(int(cids[ci]))
-                out_sum.append(sel.sum(axis=0))
-                out_cnt.append(len(sel))
-            yield pd.DataFrame(
-                {"cid": out_cid, "sum_v": out_sum, "cnt": out_cnt}
-            )
-
-    partials = base.mapInPandas(
-        partial_sums, schema="cid int, sum_v array<double>, cnt long"
-    )
-    merged = partials.groupBy("cid").agg(
-        F.collect_list("sum_v").alias("svs"), F.sum("cnt").alias("cnt")
-    )
-    total = F.aggregate(
-        F.col("svs"),
-        F.transform(F.element_at("svs", 1), lambda x: x * 0.0),
-        lambda acc, x: F.zip_with(acc, x, lambda p, q: p + q),
-    )
-    return merged.select(
-        "cid", F.transform(total, lambda s: s / F.col("cnt")).alias("cv")
     )
 
 

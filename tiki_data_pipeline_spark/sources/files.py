@@ -1831,20 +1831,25 @@ def shard_manifest(spark: SparkSession, path: str, id_col: str = "doc_id") -> di
     """Per-shard manifest of a training export: row count and an
     order-insensitive content checksum (sum of xxhash64 over the
     packing-relevant columns, as a string — the sum exceeds int64).
-    One distributed scan, k-row result."""
+    One distributed scan, k-row result; an export that packed no
+    document has no ``shard=`` directory and an empty manifest."""
+    import os
+
     from pyspark.sql import functions as F
 
-    rows = (
-        spark.read.parquet(path)
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(F.col(id_col), "seq_id", "tok_offset").cast("decimal(38,0)")
-            ).cast("string").alias("checksum"),
+    rows = []
+    if any(e.name.startswith("shard=") for e in os.scandir(path) if e.is_dir()):
+        rows = (
+            spark.read.parquet(path)
+            .groupBy("shard")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(
+                    F.xxhash64(F.col(id_col), "seq_id", "tok_offset").cast("decimal(38,0)")
+                ).cast("string").alias("checksum"),
+            )
+            .collect()
         )
-        .collect()
-    )
     return {
         "kind": "training_shards",
         "shards": {

@@ -15,6 +15,14 @@ The reference's incremental machinery these map to:
 - T4 stateful change detection (reference postgres_storage.py:
   1283-1413) → ``foreachBatch`` merging each micro-batch against a
   state table (the CDC append path reused per batch).
+
+The five ingest sinks (minhash dedup, embedding, semantic, line,
+span) run one epoch body, :func:`_ingest_sink`; each supplies only a
+decide step and a commit step. Per epoch, in this order: decide (or
+reuse the lineage's committed decisions), commit the decisions to the
+store's ``_decisions`` log, the sink's store write, the ``(epoch, n)``
+heartbeat. A crash after the decisions commit replays the epoch from
+those decisions, never from a recompute against the written store.
 """
 
 from __future__ import annotations
@@ -226,61 +234,9 @@ def _run_lineage(checkpoint_dir: str) -> str:
     return "r" + hashlib.md5(canon.encode()).hexdigest()[:12]
 
 
-def _run_lineage_raw(checkpoint_dir: str) -> str:
-    """The pre-canonicalization run id (md5 of the raw spelling) —
-    consulted as a REUSE fallback only: a store written before the
-    realpath fix keyed its partitions by this hash, and skipping them
-    on resume would recompute a post-append retry into dup-of-self
-    decisions, the exact bug the canonicalization fixed forward. New
-    writes always use the canonical id."""
-    import hashlib
-
-    return "r" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
-
-
-LEGACY_RUN = "legacy"
-
-
-def _lineage_fallbacks(checkpoint_dir: str) -> tuple:
-    """Reuse-only fallback run ids for a resumed checkpoint: the
-    pre-canonicalization raw-spelling hash (prefixed and bare) plus
-    the bare spelling of the canonical id — stores written before the
-    ``r`` prefix keyed their partitions by the unprefixed hashes."""
-    canon = _run_lineage(checkpoint_dir)
-    raw = _run_lineage_raw(checkpoint_dir)
-    out = [canon[1:]]  # pre-prefix canonical spelling
-    if raw != canon:
-        out += [raw, raw[1:]]
-    return tuple(out)
-
-
-def _migrate_legacy_decisions(spark, dec_path: str) -> None:
-    """One-time layout migration for a ``_decisions`` log written by
-    the pre-``run`` code (partitioned by ``epoch`` only). Filtering
-    that layout on ``run`` raises UNRESOLVED_COLUMN on every epoch of
-    a resumed stream, and appending (run, epoch) partitions on top
-    would mix two partition schemes in one tree — so the log is
-    rewritten once, with every legacy row under ``run=legacy``, via
-    the crash-safe :func:`sources.files.swap_parquet_rewrite` swap (a
-    valid log exists at the path at all times; a mid-swap crash
-    leaves both copies, never zero)."""
-    from tiki_data_pipeline_spark.sources.files import swap_parquet_rewrite
-
-    swap_parquet_rewrite(
-        dec_path,
-        # read inside the callback: it runs after crash recovery has
-        # restored dec_path, while it is still the live copy
-        lambda staging: spark.read.parquet(dec_path)
-        .withColumn("run", F.lit(LEGACY_RUN))
-        .write.mode("overwrite")
-        .partitionBy("run", "epoch")
-        .parquet(staging),
-    )
-
-
 def _epoch_decisions(
     spark, index_path: str, epoch_id: int, batch_df: DataFrame,
-    id_col: str, compute, run: str, fallback_runs: tuple = (),
+    id_col: str, compute, run: str,
     value_cols: tuple = ("status", "matched_id"),
 ) -> DataFrame:
     """Exactly-once, replay-stable per-epoch decisions for a
@@ -315,11 +271,9 @@ def _epoch_decisions(
     pre-dispatch code path) fails loudly: the manifest never lists
     it, so folds would silently skip the lineage scrub.
 
-    Probe cost (r13): the reuse check is ONE partition-pruned job —
-    all candidate run keys probed in a single ``isin`` aggregation —
-    instead of one filter+count job per key; the common (non-replay)
-    epoch previously paid 3-4 scheduling round-trips here for
-    nothing, a measurable slice of the sink's fixed per-epoch cost."""
+    Probe cost (r13): the reuse check is ONE partition-pruned job;
+    the id-set guard runs only when the (run, epoch) partition
+    exists."""
     import os
 
     from tiki_data_pipeline_spark.sources import files as FL
@@ -327,83 +281,39 @@ def _epoch_decisions(
 
     manifest = FL.is_manifest_store(index_path)
     dec_path = index_path + "/_decisions"
-    if manifest:
-        if os.path.isdir(dec_path):
-            raise ValueError(
-                f"manifest store {index_path} carries a rogue physical "
-                "_decisions directory the manifest does not list — a "
-                "takedown fold would skip its lineage scrub. Migrate it "
-                "into the manifest (re-ingest, or commit the files as "
-                "_decisions entries) before streaming into this store."
-            )
-        committed = FL.store_sub(spark, index_path, "_decisions")
-        run_keys = (run, *fallback_runs)
-        if committed is not None:
-            # same partition-type guard as the posix branch below: the
-            # manifest read infers run/epoch Hive-partition types, so a
-            # log whose EVERY run value parses numerically would come
-            # back as a DOUBLE run column — the isin probe would
-            # silently never match (recompute → dup-of-self on a
-            # post-append retry) and the fold's compaction would
-            # re-render the parsed value into run= paths. Current
-            # writers prefix ids with 'r', but the guard must not
-            # depend on that.
-            if dict(committed.dtypes).get("run") != "string":
-                committed = committed.withColumn(
-                    "run", F.col("run").cast("string")
-                )
-            if dict(committed.dtypes).get("epoch") not in ("int", "bigint"):
-                committed = committed.withColumn(
-                    "epoch", F.col("epoch").cast("bigint")
-                )
-    else:
-        committed = None
-        run_keys = (run, *fallback_runs, LEGACY_RUN)
-        if os.path.isdir(dec_path):  # no try/except: real errors must fail
-            committed = spark.read.parquet(dec_path)
-            if "run" not in committed.columns:
-                # pre-``run`` log (epoch-partitioned only): migrate the
-                # layout once instead of failing UNRESOLVED_COLUMN on
-                # every epoch of the resumed stream
-                _migrate_legacy_decisions(spark, dec_path)
-                committed = spark.read.parquet(dec_path)
-            if dict(committed.dtypes).get("run") != "string":
-                # a pre-prefix store whose EVERY run hash happened to
-                # parse as a number (e.g. 33312574e463) reads back as a
-                # DOUBLE partition column; the original hex is
-                # unrecoverable from the parsed value, so cast to string
-                # to keep the filters valid — nothing matches and the
-                # epoch recomputes, the pre-log behavior, instead of
-                # crashing CAST_INVALID_INPUT on every epoch
-                committed = committed.withColumn(
-                    "run", F.col("run").cast("string")
-                )
+    if manifest and os.path.isdir(dec_path):
+        raise ValueError(
+            f"manifest store {index_path} carries a rogue physical "
+            "_decisions directory the manifest does not list — a "
+            "takedown fold would skip its lineage scrub. Migrate it "
+            "into the manifest (re-ingest, or commit the files as "
+            "_decisions entries) before streaming into this store."
+        )
+    # no try/except: real read errors must fail the epoch
+    committed = FL.store_sub(spark, index_path, "_decisions")
     if committed is not None:
-        # consult this lineage's partition first; a pre-upgrade
-        # lineage's committed epochs live under its old run spelling
-        # (``fallback_runs`` — e.g. the pre-canonicalization raw-path
-        # hash) or under run=legacy (pre-``run`` layout), and
-        # skipping them would recompute a post-append retry into
-        # dup-of-self — the id-set guard still arbitrates, so a
-        # colliding OTHER lineage's epoch (different offsets)
-        # falls through to recompute exactly as before. One job: the
-        # isin filter partition-prunes to the candidate (run, epoch)
-        # dirs, and the groupBy tells us which keys exist at all.
-        present = {
-            r["run"]
-            for r in committed.filter(
-                (F.col("epoch") == epoch_id)
-                & F.col("run").isin(list(run_keys))
+        # partition-type guard: the read infers run/epoch Hive-partition
+        # types, so a log whose EVERY run value parses numerically (e.g.
+        # 33312574e463) comes back as a DOUBLE run column — the string
+        # filter would crash CAST_INVALID_INPUT on every epoch, and the
+        # fold's compaction would re-render the parsed value into run=
+        # paths. Current writers prefix ids with 'r', but the guard must
+        # not depend on that: cast, nothing matches, the epoch recomputes.
+        if dict(committed.dtypes).get("run") != "string":
+            committed = committed.withColumn(
+                "run", F.col("run").cast("string")
             )
-            .groupBy("run")
-            .agg(F.count(F.lit(1)))
-            .collect()
-        }
-        chosen = next((k for k in run_keys if k in present), None)
-        if chosen is not None:
-            prior = committed.filter(
-                (F.col("run") == chosen) & (F.col("epoch") == epoch_id)
-            ).select(id_col, *value_cols)
+        if dict(committed.dtypes).get("epoch") not in ("int", "bigint"):
+            committed = committed.withColumn(
+                "epoch", F.col("epoch").cast("bigint")
+            )
+        probe = committed.filter(
+            (F.col("run") == run) & (F.col("epoch") == epoch_id)
+        )
+        # one job: the filter partition-prunes to this lineage's
+        # (run, epoch) dir, and the groupBy tells us whether it exists
+        if probe.groupBy("run").agg(F.count(F.lit(1))).collect():
+            prior = probe.select(id_col, *value_cols)
             p_ids = prior.select(id_col).distinct()
             b_ids = batch_df.select(id_col).distinct()
             if (
@@ -413,8 +323,11 @@ def _epoch_decisions(
             ):
                 return prior.localCheckpoint()
             # nonempty but mismatched = stale: recompute
+    # materialized BEFORE the store append: the decision plan is lazy
+    # and reads the store — evaluating it after the append would
+    # status the batch against itself
+    status = compute().localCheckpoint()
     if manifest:
-        status = compute().localCheckpoint()
         # sub-scoped manifest overwrite: run/epoch become Hive dirs of
         # the logical path (read back as partition columns); the commit
         # atomically replaces this epoch's own prior attempt only
@@ -425,10 +338,6 @@ def _epoch_decisions(
             sub=f"_decisions/run={run}/epoch={epoch_id}",
         )
         return status
-    # materialized BEFORE the store append: the decision plan is lazy
-    # and reads the store — evaluating it after the append would
-    # status the batch against itself
-    status = compute().localCheckpoint()
     (
         # (run, epoch)-partitioned dynamic overwrite: a retried epoch
         # REPLACES its own partition instead of duplicating rows —
@@ -442,6 +351,42 @@ def _epoch_decisions(
         .parquet(dec_path)
     )
     return status
+
+
+def _ingest_sink(
+    stream: DataFrame, index_path: str, statuses: list,
+    checkpoint_dir: str, id_col: str, steps,
+    value_cols: tuple = ("status", "matched_id"),
+):
+    """The one epoch body of the ingest sinks. Per micro-batch: pin
+    the batch; ``steps(spark, batch_df)`` returns the sink's
+    ``(decide, commit)`` pair; the epoch's decisions come from
+    :func:`_epoch_decisions` under the canonical :func:`_run_lineage`
+    id — ``decide()`` runs only when no reusable partition exists,
+    and the result is committed to ``_decisions`` BEFORE any store
+    write; ``commit(decisions, run, epoch_id)`` then does the sink's
+    store write; the ``(epoch, n)`` heartbeat is appended last, so a
+    crash anywhere earlier replays the epoch. Runs as an
+    ``availableNow`` stream."""
+    run = _run_lineage(checkpoint_dir)
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        batch_df = batch_df.localCheckpoint()  # pin the micro-batch once
+        decide, commit = steps(spark, batch_df)
+        decisions = _epoch_decisions(
+            spark, index_path, epoch_id, batch_df, id_col, decide, run,
+            value_cols,
+        )
+        commit(decisions, run, epoch_id)
+        statuses.append((epoch_id, decisions.count()))
+
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def incremental_dedup_sink(
@@ -490,53 +435,43 @@ def incremental_dedup_sink(
     anti-join below.
     """
     from tiki_data_pipeline_spark.operators import dedup as DD
+    from tiki_data_pipeline_spark.sources.files import store_sub
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()  # pin the micro-batch once
+    def steps(spark, batch_df: DataFrame):
         # one shingle explode per epoch, shared by the decision and
         # append stages (both otherwise recompute it)
         sh = DD.shingles(batch_df).localCheckpoint()
-        status = _epoch_decisions(
-            spark,
-            index_path,
-            epoch_id,
-            batch_df,
-            "doc_id",
-            lambda: DD.incremental_dedup_status(
+
+        def decide() -> DataFrame:
+            return DD.incremental_dedup_status(
                 spark, index_path, batch_df, threshold=threshold, sh=sh
-            ),
-            _run_lineage(checkpoint_dir),
-            fallback_runs=_lineage_fallbacks(checkpoint_dir),
-        )
-        uniq = batch_df.join(
-            status.filter(F.col("status") == "unique").select("doc_id"),
-            "doc_id",
-            "semi",
-        )
-        survivors = DD.exact_dedup(uniq).select(
-            F.col("survivor_id").alias("doc_id")
-        )
-        from tiki_data_pipeline_spark.sources.files import store_sub
+            )
 
-        stored_ids = store_sub(spark, index_path, "_fingerprints").select(
-            F.col("id").alias("doc_id")
-        )
-        to_add = (
-            uniq.join(survivors, "doc_id", "semi")
-            .join(stored_ids, "doc_id", "anti")
-            # a batch carrying the same doc_id twice (semi join keeps
-            # left-side duplicates) must still append the id once
-            .dropDuplicates(["doc_id"])
-        )
-        DD.append_minhash_index(to_add, index_path, sh=sh)
-        statuses.append((epoch_id, status.count()))
+        def commit(status: DataFrame, run: str, epoch_id: int) -> None:
+            uniq = batch_df.join(
+                status.filter(F.col("status") == "unique").select("doc_id"),
+                "doc_id",
+                "semi",
+            )
+            survivors = DD.exact_dedup(uniq).select(
+                F.col("survivor_id").alias("doc_id")
+            )
+            stored_ids = store_sub(spark, index_path, "_fingerprints").select(
+                F.col("id").alias("doc_id")
+            )
+            to_add = (
+                uniq.join(survivors, "doc_id", "semi")
+                .join(stored_ids, "doc_id", "anti")
+                # a batch carrying the same doc_id twice (semi join keeps
+                # left-side duplicates) must still append the id once
+                .dropDuplicates(["doc_id"])
+            )
+            DD.append_minhash_index(to_add, index_path, sh=sh)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        return decide, commit
+
+    return _ingest_sink(
+        docs, index_path, statuses, checkpoint_dir, "doc_id", steps
     )
 
 
@@ -599,47 +534,15 @@ def incremental_embedding_sink(
     n_vectors) heartbeats only.
     """
     from tiki_data_pipeline_spark.operators import similarity as SIM
-    from tiki_data_pipeline_spark.sources.files import apply_tombstones
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()  # pin the micro-batch once
-        status = _epoch_decisions(
-            spark,
-            index_path,
-            epoch_id,
-            batch_df,
-            "vec_id",
-            lambda: SIM.lsh_index_dedup_status(
-                spark, index_path, batch_df, threshold=threshold
-            ),
-            _run_lineage(checkpoint_dir),
-            fallback_runs=_lineage_fallbacks(checkpoint_dir),
-        )
-        # the append skips stored ids but refuses a taken-down one
-        uniq = apply_tombstones(batch_df, index_path, "vec_id").join(
-            status.filter(F.col("status") == "unique").select("vec_id"),
-            "vec_id",
-            "semi",
-        )
-        # one min-id survivor per distinct vector within the batch
-        # (group on the array itself — a hash-only key could collapse
-        # two colliding but different vectors)
-        survivors = (
-            uniq.groupBy("embedding")
-            .agg(F.min("vec_id").alias("vec_id"))
-            .select("vec_id")
-        )
-        SIM.append_lsh_index(
-            uniq.join(survivors, "vec_id", "semi"), index_path, n_planes=None
-        )
-        statuses.append((epoch_id, status.count()))
-
-    return (
-        vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _vector_sink(
+        vectors, index_path, statuses, checkpoint_dir,
+        lambda spark, batch_df: SIM.lsh_index_dedup_status(
+            spark, index_path, batch_df, threshold=threshold
+        ),
+        lambda spark, rows: SIM.append_lsh_index(
+            rows, index_path, n_planes=None
+        ),
     )
 
 
@@ -670,81 +573,54 @@ def incremental_semantic_sink(
     never appended; stored and taken-down ids as in the LSH sink.
     """
     from tiki_data_pipeline_spark.operators import similarity as SIM
+
+    return _vector_sink(
+        vectors, index_path, statuses, checkpoint_dir,
+        lambda spark, batch_df: SIM.ivf_semantic_dedup_status(
+            spark, index_path, batch_df, threshold=threshold
+        ),
+        lambda spark, rows: SIM.append_ivf_index(spark, rows, index_path),
+    )
+
+
+def _vector_sink(
+    vectors: DataFrame, index_path: str, statuses: list,
+    checkpoint_dir: str, status, append,
+):
+    """The epoch steps the embedding and semantic sinks share:
+    ``status(spark, batch_df)`` decides the batch against the store;
+    the commit hands the batch's ``unique`` vectors — taken-down ids
+    dropped, one min-id survivor per distinct vector — to
+    ``append(spark, rows)``."""
     from tiki_data_pipeline_spark.sources.files import apply_tombstones
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()  # pin the micro-batch once
-        status = _epoch_decisions(
-            spark,
-            index_path,
-            epoch_id,
-            batch_df,
-            "vec_id",
-            lambda: SIM.ivf_semantic_dedup_status(
-                spark, index_path, batch_df, threshold=threshold
-            ),
-            _run_lineage(checkpoint_dir),
-            fallback_runs=_lineage_fallbacks(checkpoint_dir),
-        )
-        uniq = apply_tombstones(batch_df, index_path, "vec_id").join(
-            status.filter(F.col("status") == "unique").select("vec_id"),
-            "vec_id",
-            "semi",
-        )
-        survivors = (
-            uniq.groupBy("embedding")
-            .agg(F.min("vec_id").alias("vec_id"))
-            .select("vec_id")
-        )
-        SIM.append_ivf_index(spark, uniq.join(survivors, "vec_id", "semi"), index_path)
-        statuses.append((epoch_id, status.count()))
+    def steps(spark, batch_df: DataFrame):
+        def commit(status_df: DataFrame, run: str, epoch_id: int) -> None:
+            # the append skips stored ids but refuses a taken-down one
+            uniq = apply_tombstones(batch_df, index_path, "vec_id").join(
+                status_df.filter(F.col("status") == "unique").select("vec_id"),
+                "vec_id",
+                "semi",
+            )
+            # one min-id survivor per distinct vector within the batch
+            # (group on the array itself — a hash-only key could collapse
+            # two colliding but different vectors)
+            survivors = (
+                uniq.groupBy("embedding")
+                .agg(F.min("vec_id").alias("vec_id"))
+                .select("vec_id")
+            )
+            append(spark, uniq.join(survivors, "vec_id", "semi"))
 
-    return (
-        vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        return (lambda: status(spark, batch_df)), commit
+
+    return _ingest_sink(
+        vectors, index_path, statuses, checkpoint_dir, "vec_id", steps
     )
-
-
-def _idempotent_line_count_append(
-    spark, batch_df: DataFrame, path: str, run: str, epoch_id: int
-) -> None:
-    """Line-df form of :func:`_idempotent_count_append`."""
-    from tiki_data_pipeline_spark.operators import dedup as DD
-    from tiki_data_pipeline_spark.sources.files import check_store_meta
-
-    check_store_meta(path, {"kind": "line_df"})
-    counts = (
-        DD._doc_lines(batch_df, "doc_id", "text")
-        .filter(F.col("lh").isNotNull())
-        .groupBy("lh")
-        .agg(F.count_distinct(F.col("doc_id")).alias("df"))
-    )
-    _idempotent_count_append(spark, counts, path, run, epoch_id, "linedf")
-
-
-def _idempotent_span_count_append(
-    spark, batch_df: DataFrame, path: str, run: str, epoch_id: int
-) -> None:
-    """Span-df form of :func:`_idempotent_count_append` (window
-    geometry from the store meta — same identities the decision
-    used)."""
-    from tiki_data_pipeline_spark.operators import dedup as DD
-
-    span, hash_mode = DD._span_store_geometry(path)
-    counts = (
-        DD._doc_span_hashes(batch_df, span, "doc_id", "text", hash_mode, "arrow")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    _idempotent_count_append(spark, counts, path, run, epoch_id, "spandf")
 
 
 def _idempotent_count_append(
-    spark, counts: DataFrame, path: str, run: str, epoch_id: int,
-    tag: str,
+    spark, counts: DataFrame, path: str, run: str, epoch_id: int
 ) -> None:
     """Append a micro-batch's additive (key, df) counts to a count
     store with DETERMINISTIC file names (``epoch-<run>-<epoch>-i``):
@@ -784,7 +660,7 @@ def _idempotent_count_append(
             coalesce=1,
         )
         return
-    staging = tempfile.mkdtemp(prefix=f"{tag}_epoch_")
+    staging = tempfile.mkdtemp(prefix="counts_epoch_")
     try:
         counts.write.mode("overwrite").parquet(staging)
         prefix = f"epoch-{run}-{epoch_id}-"
@@ -822,48 +698,21 @@ def incremental_line_sink(
     (exactly-once, (run, epoch)-keyed, id-set-guarded) BEFORE the
     count append, and reused verbatim on a retried epoch; the count
     append itself is idempotent via deterministic epoch file names
-    (:func:`_idempotent_line_count_append`)."""
+    (:func:`_idempotent_count_append`)."""
     from tiki_data_pipeline_spark.operators import dedup as DD
+    from tiki_data_pipeline_spark.sources.files import check_store_meta
 
-    value_cols = (
-        "cleaned_text", "n_lines", "n_lines_removed", "removed_frac"
-    )
+    def line_counts(batch_df: DataFrame) -> DataFrame:
+        check_store_meta(index_path, {"kind": "line_df"})
+        return DD._line_df_counts(batch_df)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
-        run = _run_lineage(checkpoint_dir)
-        cleaned = _epoch_decisions(
-            spark,
-            index_path,
-            epoch_id,
-            batch_df,
-            "doc_id",
-            lambda: DD.incremental_line_removal(
-                spark, index_path, batch_df, min_df=min_df
-            ),
-            run,
-            fallback_runs=_lineage_fallbacks(checkpoint_dir),
-            value_cols=value_cols,
-        )
-        (
-            cleaned.withColumn("run", F.lit(run))
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run", "epoch")
-            .parquet(out_dir)
-        )
-        _idempotent_line_count_append(
-            spark, batch_df, index_path, run, epoch_id
-        )
-        statuses.append((epoch_id, cleaned.count()))
-
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _count_sink(
+        docs, index_path, out_dir, checkpoint_dir, statuses,
+        lambda spark, batch_df: DD.incremental_line_removal(
+            spark, index_path, batch_df, min_df=min_df
+        ),
+        ("cleaned_text", "n_lines", "n_lines_removed", "removed_frac"),
+        line_counts,
     )
 
 
@@ -891,48 +740,56 @@ def incremental_span_sink(
     count append, reused verbatim on a retried epoch (a recompute
     after the count append would see the batch's own windows in the
     store df and cut spans the committed output kept); the count
-    append is idempotent via :func:`_idempotent_span_count_append`."""
+    append is idempotent via :func:`_idempotent_count_append`."""
     from tiki_data_pipeline_spark.operators import dedup as DD
 
-    value_cols = (
-        "cleaned_text", "n_tokens", "n_tokens_removed", "removed_frac"
+    def span_counts(batch_df: DataFrame) -> DataFrame:
+        # window geometry from the store meta — same identities the
+        # decision used
+        return DD._span_df_counts(
+            batch_df, *DD._span_store_geometry(index_path)
+        )
+
+    return _count_sink(
+        docs, index_path, out_dir, checkpoint_dir, statuses,
+        lambda spark, batch_df: DD.incremental_span_removal(
+            spark, index_path, batch_df, min_df=min_df, min_run=min_run
+        ),
+        ("cleaned_text", "n_tokens", "n_tokens_removed", "removed_frac"),
+        span_counts,
     )
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
-        run = _run_lineage(checkpoint_dir)
-        cleaned = _epoch_decisions(
-            spark,
-            index_path,
-            epoch_id,
-            batch_df,
-            "doc_id",
-            lambda: DD.incremental_span_removal(
-                spark, index_path, batch_df, min_df=min_df, min_run=min_run
-            ),
-            run,
-            fallback_runs=_lineage_fallbacks(checkpoint_dir),
-            value_cols=value_cols,
-        )
-        (
-            cleaned.withColumn("run", F.lit(run))
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run", "epoch")
-            .parquet(out_dir)
-        )
-        _idempotent_span_count_append(
-            spark, batch_df, index_path, run, epoch_id
-        )
-        statuses.append((epoch_id, cleaned.count()))
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def _count_sink(
+    docs: DataFrame, index_path: str, out_dir: str, checkpoint_dir: str,
+    statuses: list, removal, value_cols: tuple, counts,
+):
+    """The epoch steps the line and span sinks share: the cleaned
+    output ``removal(spark, batch_df)`` is the epoch decision; the
+    commit writes it to ``out_dir`` by (run, epoch) — dynamic
+    overwrite, so a replay replaces its own partition — and then
+    appends the batch's additive ``counts(batch_df)`` through
+    :func:`_idempotent_count_append`."""
+
+    def steps(spark, batch_df: DataFrame):
+        def commit(cleaned: DataFrame, run: str, epoch_id: int) -> None:
+            (
+                cleaned.withColumn("run", F.lit(run))
+                .withColumn("epoch", F.lit(epoch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("run", "epoch")
+                .parquet(out_dir)
+            )
+            _idempotent_count_append(
+                spark, counts(batch_df), index_path, run, epoch_id
+            )
+
+        return (lambda: removal(spark, batch_df)), commit
+
+    return _ingest_sink(
+        docs, index_path, statuses, checkpoint_dir, "doc_id", steps,
+        value_cols,
     )
 
 
